@@ -46,8 +46,10 @@ def _isolate(work_tmp: str) -> None:
     os.environ["PYSPARK_PYTHON"] = sys.executable
     os.environ["SPARK_LOCAL_DIRS"] = work_tmp
     os.environ["TMPDIR"] = work_tmp
-    # every JVM spark-submit starts (its launcher and the driver)
-    os.environ["JAVA_TOOL_OPTIONS"] = f"-XX:-UsePerfData -Djava.io.tmpdir={work_tmp}"
+    # every JVM spark-submit starts (its launcher and the driver); JIT
+    # compiler threads stay alive, so that their CPU time can be told apart
+    os.environ["JAVA_TOOL_OPTIONS"] = (f"-XX:-UsePerfData -Djava.io.tmpdir={work_tmp}"
+                                       " -XX:-UseDynamicNumberOfCompilerThreads")
     import tempfile
 
     tempfile.tempdir = None
@@ -70,12 +72,15 @@ def main(argv: list[str] | None = None) -> int:
               file=sys.stderr)
         return 2
 
-    from harness import END_TO_END, LAYER_UNITS, Run
+    from harness import Run
 
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        declared = json.load(f)["per_layer" if args.trace else "end_to_end"]
+    units = {m["name"]: m["unit"] for m in declared}
     run = Run(ROOT, args.workload, args.seed, args.seconds, bool(args.trace))
     os.makedirs(run.path("tmp"))
     _isolate(run.path("tmp"))
-    from workloads import WORKLOADS
+    from workloads import WORKLOADS, mix_modules
 
     try:
         WORKLOADS[args.workload](run)
@@ -83,14 +88,14 @@ def main(argv: list[str] | None = None) -> int:
     finally:
         run.close()
     if run.tracer is not None:
-        values = run.per_layer()
-        units = LAYER_UNITS
-        samples = {k: len(run.timed()) for k in values}
+        values, samples = run.per_layer(mix_modules())
         run.tracer.dump(os.path.join(ROOT, ".perfbench_out",
                                      f"spans-{args.workload}-seed{args.seed}.json"))
     else:
         values, samples = run.end_to_end()
-        units = END_TO_END
+    if set(values) != set(units):
+        raise SystemExit(f"perfbench: measured {sorted(set(values) ^ set(units))} "
+                         "differ from the metrics BENCHMARK.json declares")
     shutil.rmtree(run.work, ignore_errors=True)
     run.mark("end")
 
@@ -100,11 +105,12 @@ def main(argv: list[str] | None = None) -> int:
           f"{ops} timed operations in {len(run.passes)} passes")
     print(f"# {run.wall_summary()}")
     print("# timeline: " + ", ".join(f"{p} at {t:.1f} s" for p, t in run.phases))
-    by_name: dict[str, list[float]] = {}
+    by_name: dict[str, list[tuple[float, float]]] = {}
     for o in run.timed():
-        by_name.setdefault(o["name"], []).append(o["seconds"] * 1e3)
-    print("# timed ms: " + ", ".join(
-        f"{n}={statistics.median(v):.0f}" for n, v in sorted(by_name.items())))
+        by_name.setdefault(o["name"], []).append((o["seconds"] * 1e3, o["cpu_s"] * 1e3))
+    print("# timed ms (wall/CPU): " + ", ".join(
+        f"{n}=" + "/".join(f"{statistics.median(x):.0f}" for x in zip(*v))
+        for n, v in sorted(by_name.items())))
     for f in run.failures[:20]:
         print(f"# FAILED {f}")
     for name, value in values.items():

@@ -1,8 +1,23 @@
 """Seeded generator of the star-schema tables the registered queries read.
 
 Writes ``region nation customer supplier part orders lineitem events
-documents embeddings`` as one parquet file each, with the column names,
-types and value domains of the repository's sf-scaled test tables.
+documents embeddings`` as one parquet file each. Row counts, column names
+and types, and the distribution of every column follow the scale-factor
+test tables the registered queries' oracles were written against (seed-42
+synthetic TPC-H-like tables; profiled at scale 0.01):
+
+- keys uniform over their key spaces; ``l_extendedprice`` uniform on
+  [900, 105000] independent of quantity and price; discount and tax
+  rounded uniforms; order and ship dates uniform and independent;
+- events: timestamps uniform over 30 days, numbered in time order, users
+  ``customers / 10``, values exponential with mean 50;
+- documents: 10-99 words of a 30-word vocabulary; one in twenty is
+  replaced by another document's text plus the token ``dup``, so the
+  near-duplicate detectors find as many pairs (Jaccard 0.9-0.99) as there;
+  40% ``en``, sources ``src{doc_id % 20}``;
+- embeddings: unit vectors in random directions with labels drawn
+  independently of them.
+
 ``scale=0.01`` gives 60,000 line items. Every column is drawn from
 ``numpy.random.default_rng(seed)``, so one seed always writes the same
 tables.
@@ -25,10 +40,11 @@ EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 VOCAB = ("a", "agg", "batch", "big", "column", "customer", "data", "fast",
          "filter", "group", "hash", "join", "key", "line", "merge", "order",
          "part", "query", "row", "scan", "slow", "small", "sort", "spark",
-         "stream", "table", "the", "value", "vector", "window", "index")
+         "stream", "table", "the", "value", "vector", "window")
 LANGS = ("de", "en", "es", "fr", "zh")
+LANG_P = (0.15, 0.40, 0.15, 0.15, 0.15)
 EMBED_DIM = 64
-EMBED_CLUSTERS = 10
+EMBED_LABELS = 10
 
 
 def _dates(rng, n: int, start: str, days: int) -> np.ndarray:
@@ -78,56 +94,49 @@ def make_tables(seed: int, scale: float = 0.01) -> dict[str, pd.DataFrame]:
         "o_custkey": rng.integers(0, n_cust, n_ord).astype("int64"),
         "o_orderstatus": rng.choice(("F", "O", "P"), n_ord),
         "o_totalprice": np.round(rng.uniform(1000.0, 500_000.0, n_ord), 2),
-        "o_orderdate": _dates(rng, n_ord, "1995-01-01", 2404),
+        "o_orderdate": _dates(rng, n_ord, "1995-01-01", 2405),
         "o_orderpriority": rng.choice(PRIORITIES, n_ord)})
-    l_part = rng.integers(0, n_part, n_line).astype("int64")
-    qty = rng.integers(1, 51, n_line).astype("float64")
     t["lineitem"] = pd.DataFrame({
         "l_orderkey": rng.integers(0, n_ord, n_line).astype("int64"),
-        "l_partkey": l_part,
+        "l_partkey": rng.integers(0, n_part, n_line).astype("int64"),
         "l_suppkey": rng.integers(0, n_supp, n_line).astype("int64"),
         "l_linenumber": rng.integers(1, 8, n_line).astype("int32"),
-        "l_quantity": qty,
-        "l_extendedprice": np.round(qty * price[l_part] * rng.uniform(0.98, 1.02, n_line), 2),
-        "l_discount": rng.integers(0, 11, n_line) / 100.0,
-        "l_tax": rng.integers(0, 9, n_line) / 100.0,
+        "l_quantity": rng.integers(1, 51, n_line).astype("float64"),
+        "l_extendedprice": np.round(rng.uniform(900.0, 105_000.0, n_line), 2),
+        "l_discount": np.round(rng.uniform(0.0, 0.10, n_line), 2),
+        "l_tax": np.round(rng.uniform(0.0, 0.08, n_line), 2),
         "l_returnflag": rng.choice(("A", "N", "R"), n_line),
         "l_linestatus": rng.choice(("F", "O"), n_line),
-        "l_shipdate": _dates(rng, n_line, "1995-01-02", 2498)})
-    gaps = rng.exponential(30 * 86_400e6 / n_ev, n_ev)
-    ts = np.datetime64("2024-01-01T00:00:00", "us") + np.cumsum(gaps).astype("int64")
+        "l_shipdate": _dates(rng, n_line, "1995-01-02", 2499)})
+    offsets = np.sort(rng.integers(0, 30 * 86_400_000_000, n_ev))
     t["events"] = pd.DataFrame({
-        "event_id": np.arange(n_ev, dtype="int64"), "ts": ts,
+        "event_id": np.arange(n_ev, dtype="int64"),
+        "ts": np.datetime64("2024-01-01T00:00:00", "us") + offsets,
         "user_id": rng.integers(0, max(n_cust // 10, 1), n_ev).astype("int64"),
         "event_type": rng.choice(EVENT_TYPES, n_ev),
-        "value": np.round(rng.gamma(2.0, 25.0, n_ev), 2),
+        "value": np.round(rng.exponential(50.0, n_ev), 2),
         "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n_ev)]})
     t["documents"] = _documents(rng, n_doc)
-    centers = rng.normal(size=(EMBED_CLUSTERS, EMBED_DIM))
-    label = rng.integers(0, EMBED_CLUSTERS, n_vec)
-    vec = centers[label] + rng.normal(scale=0.8, size=(n_vec, EMBED_DIM))
+    vec = rng.normal(size=(n_vec, EMBED_DIM))
     vec = (vec / np.linalg.norm(vec, axis=1, keepdims=True)).astype("float32")
+    label = rng.integers(0, EMBED_LABELS, n_vec)
     t["embeddings"] = pd.DataFrame({"vec_id": np.arange(n_vec, dtype="int64"),
                                     "embedding": list(vec), "label": label.astype("int32")})
     return t
 
 
 def _documents(rng, n: int) -> pd.DataFrame:
-    """Random-word documents; one in ten is a lightly edited copy of an
-    earlier one, so the near-duplicate detectors have pairs to find."""
-    texts: list[str] = []
-    for i in range(n):
-        if i >= 10 and rng.random() < 0.1:
-            words = texts[int(rng.integers(0, i))].split(" ")
-            for _ in range(int(rng.integers(0, 3))):
-                words[int(rng.integers(0, len(words)))] = str(rng.choice(VOCAB))
-        else:
-            words = list(rng.choice(VOCAB, int(rng.integers(8, 100))))
-        texts.append(" ".join(words))
+    """Random-word documents; one in twenty is then replaced by another
+    document's text plus ``dup`` (a copy of a copy gains a second one), so
+    the near-duplicate detectors have pairs to find."""
+    texts = [" ".join(rng.choice(VOCAB, int(rng.integers(10, 100)))) for _ in range(n)]
+    for i in rng.choice(n, n // 20, replace=False):
+        src = int(rng.integers(0, n - 1))
+        texts[i] = texts[src + (src >= i)] + " dup"
     return pd.DataFrame({
         "doc_id": np.arange(n, dtype="int64"), "text": texts,
-        "lang": rng.choice(LANGS, n),
-        "source": [f"src{s}" for s in rng.integers(0, 20, n)],
+        "lang": rng.choice(LANGS, n, p=LANG_P),
+        "source": [f"src{i % 20}" for i in range(n)],
         "n_chars": np.array([len(s) for s in texts], dtype="int64")})
 
 

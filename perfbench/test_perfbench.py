@@ -11,6 +11,8 @@ import os
 import shutil
 import subprocess
 import sys
+import threading
+import time
 
 import duckdb
 import pandas as pd
@@ -22,8 +24,8 @@ sys.path[:0] = [p for p in (ROOT, HERE) if p not in sys.path]
 
 from artifacts_gen import artifact, page_fetcher, records  # noqa: E402
 from checks import TABLE_COLUMNS, compare_limited, expected_tables  # noqa: E402
-from harness import END_TO_END, LAYER_UNITS, Run  # noqa: E402
-from tracing import ENGINE_METRICS, Tracer, fold_event_log, read_events  # noqa: E402
+from harness import ProgramCpu, Run  # noqa: E402
+from tracing import Tracer, fold_event_log, read_events  # noqa: E402
 
 from harvard_artifacts_collection_data_engineering_analytics_app_spark.queries import (  # noqa: E402
     artifact_templates as AT,
@@ -82,6 +84,22 @@ def test_every_reference_template_returns_rows(seed):
     empty = [q for q in AT.QUERY_TEMPLATES
              if not con.execute(AT.duckdb_sql(q)).fetchall()]
     assert empty == []
+
+
+def test_generated_tables_keep_the_profiled_shape():
+    from tables_gen import make_tables
+
+    t = make_tables(5, 0.01)
+    assert {k: len(v) for k, v in t.items()} == {
+        "region": 5, "nation": 25, "customer": 1500, "supplier": 100, "part": 2000,
+        "orders": 15000, "lineitem": 60000, "events": 10000, "documents": 500,
+        "embeddings": 500}
+    docs = t["documents"]
+    assert docs.text.str.endswith(" dup").sum() == 25  # one in twenty is a copy
+    assert (docs.source == "src" + (docs.doc_id % 20).astype(str)).all()
+    assert t["events"].ts.is_monotonic_increasing
+    li = t["lineitem"]
+    assert abs(li.l_extendedprice.corr(li.l_quantity)) < 0.05
 
 
 # --- LIMIT-aware comparer -------------------------------------------------
@@ -158,12 +176,33 @@ def test_fold_counts_a_real_two_job_query(tmp_path):
     assert per["op0"]["spark.tasks"] == 5
 
 
-def test_program_cpu_counts_this_process():
-    from harness import program_cpu_s
+def _burn(seconds: float) -> None:
+    end = time.thread_time() + seconds
+    while time.thread_time() < end:
+        pass
 
-    before = program_cpu_s(os.getpid())
-    sum(i * i for i in range(2_000_000))
-    assert program_cpu_s(os.getpid()) > before
+
+def test_program_cpu_counts_this_process_exited_threads_and_reaped_children():
+    cpu = ProgramCpu(os.getpid())
+    before, _ = cpu()
+    _burn(0.3)
+    worker = threading.Thread(target=_burn, args=(0.3,))
+    worker.start()
+    worker.join()
+    subprocess.run([sys.executable, "-c",
+                    "import time\nend = time.process_time() + 0.3\n"
+                    "while time.process_time() < end: pass"], check=True)
+    # the thread has exited and the child was reaped before this reading
+    assert cpu()[0] - before >= 0.8
+
+
+def test_program_cpu_takes_out_its_own_cost():
+    cpu = ProgramCpu(os.getpid())
+    first, _ = cpu()
+    for _ in range(20):
+        cpu()
+    # twenty idle readings of /proc add (almost) nothing
+    assert cpu()[0] - first < 0.05
 
 
 def test_tracer_self_time_excludes_children():
@@ -180,35 +219,25 @@ def test_tracer_self_time_excludes_children():
 
 # --- the runner's contract -------------------------------------------------
 
-def test_declared_metrics_match_what_the_runner_emits(tmp_path):
+def test_runner_emits_every_declared_metric(tmp_path):
+    from workloads import mix_modules
+
     bench = _benchmark_json()
-    assert {m["name"]: m["unit"] for m in bench["end_to_end"]} == END_TO_END
-    assert {m["name"]: m["unit"] for m in bench["per_layer"]} == LAYER_UNITS
     assert {w["name"] for w in bench["workloads"]} <= {"ref_queries", "operator_mix"}
 
     run = Run(str(tmp_path), "ref_queries", 1, 1.0, trace=True)
     run.setups, run.passes, run.pass_cpu = [1.0, 1.1, 1.2], [2.0], [2.5]
-    assert "pass 2.000 s" in run.wall_summary()
+    assert "passes 2.00 s" in run.wall_summary()
     run.ops = [{"id": f"op{i}", "name": "q1", "phase": "timed", "module": "",
                 "seconds": 0.1 * (i + 1), "cpu_s": 0.2, "start": 0.0, "end": 1.0, "rows": 1}
                for i in range(4)]
     os.makedirs(run.path("eventlog"))
-    values, _ = run.end_to_end()
-    assert set(values) == set(END_TO_END)
-    assert set(run.per_layer()) == set(LAYER_UNITS)
-    assert set(ENGINE_METRICS) <= set(LAYER_UNITS)
-
-
-def test_every_mix_query_has_its_module_metrics():
-    from harness import MIX_MODULES
-    from workloads import MIX_QUERIES, query_module
-
-    from harvard_artifacts_collection_data_engineering_analytics_app_spark.queries import (
-        registry,
-    )
-
-    specs = registry.all_specs()
-    assert {query_module(specs[q]) for q in MIX_QUERIES} == set(MIX_MODULES)
+    values, samples = run.end_to_end()
+    assert set(values) == set(samples) == {m["name"] for m in bench["end_to_end"]}
+    assert samples == {"setup_s": 3, "pass_cpu_s": 1}
+    values, samples = run.per_layer(mix_modules())
+    assert set(values) == set(samples) == {m["name"] for m in bench["per_layer"]}
+    assert samples["spark.tasks"] == 4 and samples["mem.peak_rss_mb"] == 1
 
 
 def test_runner_fails_without_the_program(tmp_path):
