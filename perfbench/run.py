@@ -2,7 +2,7 @@
 
 Run from the root of a checkout:
 
-    python3 perfbench/run.py --workload ref_queries --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload ref_queries --seed 1 --seconds 9 --trace 0
 
 Workloads (see ``workloads.py``):
 

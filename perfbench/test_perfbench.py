@@ -240,6 +240,19 @@ def test_runner_emits_every_declared_metric(tmp_path):
     assert samples["spark.tasks"] == 4 and samples["mem.peak_rss_mb"] == 1
 
 
+def test_pass_cpu_is_the_sum_of_per_operation_medians(tmp_path):
+    run = Run(str(tmp_path), "operator_mix", 1, 1.0, trace=False)
+    # two operations over three timed passes; each jumps once, in a
+    # different pass, so the median of pass totals (4.5) keeps a jump
+    cpu = {"a": [1.0, 1.5, 1.0], "b": [3.0, 3.0, 4.0]}
+    run.ops = [{"name": n, "phase": "timed", "cpu_s": cpu[n][p]}
+               for p in range(3) for n in ("a", "b")]
+    run.ops.append({"name": "a", "phase": "warmup", "cpu_s": 9.0})
+    run.pass_cpu = [4.0, 4.5, 5.0]
+    assert run.typical_pass_cpu() == pytest.approx(4.0)
+    assert run.end_to_end()[1]["pass_cpu_s"] == 3
+
+
 def test_runner_fails_without_the_program(tmp_path):
     shutil.copytree(HERE, tmp_path / "perfbench",
                     ignore=shutil.ignore_patterns("__pycache__"))

@@ -28,15 +28,16 @@ REF_RECORDS = 2_500  # one of the reference's per-classification pulls
 ETL_BATCHES, ETL_BATCH_RECORDS, ETL_OVERLAP = 5, 20_000, 0.10
 MIX_SCALE = 0.01
 # seconds of measurement each timed pass stands for: a run times
-# round(seconds / this) whole passes, at run_seconds=8 one round of q1-q20
-# (~9 s of wall time on a 4-CPU box) and two passes of the mix (3-5 s each)
-REF_ROUND_S, MIX_PASS_S = 9.0, 4.0
-# The JVM's JIT compilers keep compiling through the first seven or so
-# passes of the mix (5-6 CPU seconds in the third pass, 1.6-2.5 from the
-# seventh on). Their CPU time is reported but not gated (``Run.end_to_end``);
-# the rest of a pass is steady after two warm-up passes. The reference
-# templates compile new code on every round, so one warm-up round is enough
-# there.
+# round(seconds / this) whole passes, at run_seconds=9 one round of q1-q20
+# (~9 s of wall time on a 4-CPU box) and three passes of the mix (3-4 s each)
+REF_ROUND_S, MIX_PASS_S = 9.0, 3.0
+# The JVM's JIT compilers keep compiling through every pass of the mix
+# (~13 CPU seconds in the first, 4-5 in the fourth, 2-3.5 from the seventh
+# on), and the rest of a pass's CPU time falls with them, by about 5% a
+# pass over passes three to seven. Their CPU time is reported but not gated
+# (``Run.end_to_end``); two warm-up passes take the steepest part of the
+# fall out of the timed ones. The reference templates compile new code on
+# every round, so one warm-up round is enough there.
 MIX_WARMUPS = 2
 # Registered queries, one per operator module the mix covers. The first
 # builds a persisted, content-keyed artifact (the dedup corpus band index),
