@@ -47,21 +47,23 @@ def collect(
 def insert(spark: SparkSession, workdir: str) -> dict[str, int]:
     """E2: transform (T1-T5) → columnar warehouse (replaces TiDB INSERT).
 
-    Cross-batch INSERT IGNORE semantics: new rows are anti-joined against
-    the existing table before append (etl.artifacts.dedup_primary_key).
+    Cross-batch INSERT IGNORE semantics: the batch's new ids are found
+    once, against the stored metadata as it was before this batch, and
+    only their records reach the three tables — so an id's colors, like
+    its metadata and media, are the ones first delivered. The new-id
+    batch is checkpointed because the first append changes what a
+    re-read of the store would return.
     """
     raw = spark.read.schema(RAW_ARTIFACT).parquet(f"{workdir}/raw")
-    tables = A.transform_all(raw)
+    stored = f"{workdir}/artifactmetadata"
+    append = os.path.exists(stored)
+    if append:
+        old_ids = spark.read.parquet(stored).select("id")
+        raw = raw.join(old_ids, "id", "left_anti").localCheckpoint(eager=True)
     counts: dict[str, int] = {}
-    for name, df in tables.items():
+    for name, df in A.transform_all(raw).items():
         path = f"{workdir}/{name}"
-        key = "id" if name == "artifactmetadata" else "objectid"
-        if os.path.exists(path) and name != "artifactcolors":
-            existing = spark.read.parquet(path)
-            df = A.dedup_primary_key(df, key, existing=existing)
-            df.write.mode("append").parquet(path)
-        else:
-            df.write.mode("overwrite").parquet(path)
+        df.write.mode("append" if append else "overwrite").parquet(path)
         counts[name] = spark.read.parquet(path).count()
     return counts
 

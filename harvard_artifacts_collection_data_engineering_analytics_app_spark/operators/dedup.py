@@ -167,14 +167,20 @@ def _shingle_relation(d: DataFrame) -> DataFrame:
     tags=("dedup", "jaccard"),
 )
 def dd_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All near-duplicate pairs with trigram-shingle Jaccard ≥ 0.8.
-
-    Distributed as an inverted-index self-join on the shingle (no crossJoin):
-    explode → join on shingle → count common → Jaccard from set sizes.
-    """
+    """All near-duplicate pairs with trigram-shingle Jaccard ≥ 0.8."""
     # Barrier: the shingle arrays feed both self-join sides AND the size
     # lookups; one materialized pass instead of re-tokenizing per branch.
     sh = _shingle_relation(_docs(spark, sf_dir)).localCheckpoint(eager=False)
+    return _exact_jaccard_pairs(sh).select(
+        "a_id", "b_id", F.round("jac", 6).alias("jaccard")
+    )
+
+
+def _exact_jaccard_pairs(sh: DataFrame) -> DataFrame:
+    """(a_id, b_id, jac) of every pair of a (doc_id, sh) relation with
+    shingle Jaccard ≥ JACCARD_THRESHOLD, as an inverted-index self-join on
+    the shingle (no crossJoin): explode → join on shingle → count common
+    → Jaccard from set sizes."""
     sizes = sh.select("doc_id", F.size("sh").alias("n_sh"))
     inv = sh.select("doc_id", F.explode("sh").alias("s"))
     a, b = inv.alias("a"), inv.alias("b")
@@ -198,7 +204,7 @@ def dd_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(sb), "b_id")
         .withColumn("jac", jac)
         .filter(F.col("jac") >= JACCARD_THRESHOLD)
-        .select("a_id", "b_id", F.round("jac", 6).alias("jaccard"))
+        .select("a_id", "b_id", "jac")
     )
 
 
@@ -251,21 +257,14 @@ def _minhash_i(hs: F.Column, i: int) -> F.Column:
     )
 
 
-def minhash_signature(hs: F.Column, num_hashes: int = NUM_HASHES) -> F.Column:
-    """array<bigint> MinHash signature over a base-hash array column."""
-    return F.array(*[_minhash_i(hs, i) for i in range(num_hashes)])
-
-
 def band_hashes(
     hs: F.Column,
     num_bands: int = NUM_BANDS,
     rows_per_band: int = ROWS_PER_BAND,
 ) -> F.Column:
-    """array<string> of LSH band keys from the base-hash array.
-
-    Each minhash is a cheap affine min over the (materialized) base
-    hashes, evaluated exactly once inside its band.
-    """
+    """array<string> of LSH band keys from the base-hash array: the
+    pure-expression twin of ``_md5_band_keys`` over the kernel's minhash
+    columns, kept as the reference the kernel is tested against."""
     return F.array(
         *[
             F.md5(
@@ -287,29 +286,40 @@ def band_hashes(
 # recall — the approximation itself is value-checked, like ss_lsh_topk.
 
 
-def _duck_band_exprs(
-    n_bands: int | None = None, rows_per_band: int | None = None
-) -> str:
-    """UNION ALL selects — one per band — generated from the same affine
-    coefficients the Spark expressions use. Parametric over the banding
-    so the sweep oracle can regroup the SAME 32 hashes."""
-    n_bands = NUM_BANDS if n_bands is None else n_bands
-    rows_per_band = ROWS_PER_BAND if rows_per_band is None else rows_per_band
+def _duck_minhash(i: int) -> str:
+    """DuckDB expression for minhash ``i`` over the base-hash list ``hs``."""
+    a, c = _affine_coeffs(i)
+    return (
+        f"list_min(list_transform(hs, h -> "
+        f"((h % {MINHASH_MOD}) * {a} + {c}) % {MINHASH_MOD}))"
+    )
+
+
+def _duck_band_exprs() -> str:
+    """UNION ALL selects — one per band — of the md5 band keys."""
     selects = []
-    for b in range(n_bands):
-        parts = []
-        for r in range(rows_per_band):
-            a, c = _affine_coeffs(b * rows_per_band + r)
-            parts.append(
-                f"list_min(list_transform(hs, h -> "
-                f"((h % {MINHASH_MOD}) * {a} + {c}) % {MINHASH_MOD}))::VARCHAR"
-            )
-        joined = " || ',' || ".join(parts)
+    for b in range(NUM_BANDS):
+        joined = " || ',' || ".join(
+            f"{_duck_minhash(b * ROWS_PER_BAND + r)}::VARCHAR"
+            for r in range(ROWS_PER_BAND)
+        )
         selects.append(
             f"SELECT doc_id, {b} AS band_idx, md5({joined}) AS band_hash FROM shn"
         )
     return " UNION ALL ".join(selects)
 
+
+# sh: distinct trigram shingles per document; shn: the documents that have
+# any, with their md5 base hashes — the oracle side of _minhash_relation.
+_DUCK_SHN_CTES = f"""sh AS MATERIALIZED (
+        SELECT doc_id, {SQL_SHINGLES3} AS s FROM documents
+    ),
+    shn AS MATERIALIZED (
+        SELECT doc_id, s,
+               list_transform(s, x ->
+                   CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT)) AS hs
+        FROM sh WHERE len(s) > 0
+    )"""
 
 # CTE list (no leading WITH) ending in `verified` — composable so other
 # oracles (e.g. operators/components.py) can build on the same verified
@@ -321,15 +331,7 @@ def _duck_band_exprs(
 # applied across the board, r12): tx_corpus_build 73 s → 1.4 s,
 # dd_cluster_* 28-43 s → ~1.2 s each, dd_bbit_minhash_calibration
 # 15 s → 1.7 s — identical results (sorted; the harness sorts).
-DUCK_LSH_PAIR_CTES = f"""sh AS MATERIALIZED (
-        SELECT doc_id, {SQL_SHINGLES3} AS s FROM documents
-    ),
-    shn AS MATERIALIZED (
-        SELECT doc_id, s,
-               list_transform(s, x ->
-                   CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT)) AS hs
-        FROM sh WHERE len(s) > 0
-    ),
+DUCK_LSH_PAIR_CTES = f"""{_DUCK_SHN_CTES},
     bands AS MATERIALIZED (
         {_duck_band_exprs()}
     ),
@@ -356,44 +358,78 @@ _DUCK_MINHASH_LSH = f"""
 """
 
 
-_SIG_SCHEMA = "doc_id long, sh array<string>, bands array<string>"
+def _py_text_hashing():
+    """(tokens, hash60): Python twins of ``T.tokens`` and
+    ``T.portable_hash60`` for the Arrow kernels. Returned as closures so
+    they travel to the Python workers by value.
 
-
-def _signature_relation(d: DataFrame) -> DataFrame:
-    """(doc_id, shingles, band hashes) via Arrow-batched numpy MinHash.
-
-    The pure-expression formulation (dd_minhash_lsh_expr) spends ~86 s of
-    CPU at sf0.1 in interpreted higher-order lambdas (32 affine passes
-    over each shingle-hash array get no codegen); one vectorized numpy
-    matmul-shaped pass computes the identical signatures ~50× cheaper.
-    Hash math is bit-identical to the expression and DuckDB versions
-    (md5-hex[:15] → int, affine mod 2³¹−1, comma-joined band md5), so the
-    same oracle value-checks both. Round-robin repartition first: the
-    documents table often arrives as one parquet split and per-doc work
-    would otherwise pin to one core.
-    """
+    ASCII ``\\s`` + space-only strip: Spark splits with
+    ``split(trim(text), '\\s+')`` (Java ``\\s`` is ``[ \\t\\n\\x0b\\f\\r]``)
+    and its trim(), like DuckDB's, strips spaces only. Python's Unicode
+    ``\\s`` / ``str.strip()`` would diverge on U+00A0, U+3000 or a
+    leading tab (round-15 advice; pinned by the edge-case documents in
+    tests/test_dedup_semantics.py). The oracle's RE2 ``\\s`` differs from
+    Java's in one byte: it does not match the vertical tab \\x0b."""
     import hashlib
     import re
 
+    ws = re.compile(r"[ \t\n\x0b\f\r]+")
+
+    def tokens(text: str) -> list[str]:
+        return ws.split(text.strip(" "))
+
+    def hash60(s: str) -> int:
+        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+    return tokens, hash60
+
+
+def _minhash_relation(d: DataFrame) -> DataFrame:
+    """(doc_id, sh, m0..m31): the one MinHash signature kernel. Each
+    document is tokenized, 3-shingled (distinct, first-seen order),
+    md5-hashed (hex[:15] → int) and minhashed under the 32 affine hashes
+    in ONE Arrow ``mapInPandas`` pass; documents with no shingle (NULL
+    text, fewer than 3 tokens) are dropped. Consumers derive their band
+    keys from the ``m`` columns as JVM expressions: ``_md5_band_keys``
+    (what DUCK_LSH_PAIR_CTES replays) or ``_fold_band_keys`` (the LSH
+    sweep's dual affine fold).
+
+    Why numpy: the pure-expression formulation (dd_minhash_lsh_expr)
+    spends ~86 s of CPU at sf0.1 in interpreted higher-order lambdas (32
+    affine passes over each shingle-hash array get no codegen); one
+    vectorized pass computes the identical integers ~50× cheaper. Round
+    16 MEASURED moving the hashing to the JVM (word_shingles +
+    conv(substr(md5)) per shingle, the kernel reduced to the affine
+    matmul) and it LOST at both scales — sf0.1 isolated 2.16→2.39 /
+    2.06→2.84 s, sf1 2.39→3.30 / 2.82→3.22 s same-hour A/B — because
+    the per-shingle md5 is an interpreted ``transform`` lambda too, and
+    the Arrow payload grows from ``text`` to sh+hs arrays.
+
+    The 32 minhashes cross Arrow as one array column and are split into
+    columns JVM-side: building and converting 34 pandas columns measured
+    ~8 ms a 13-document batch against ~1.4 ms for the array form, and the
+    incremental paths sign batches that small. The split and the band
+    keys are SQL text (``selectExpr``): built as Column objects, the 32
+    item/alias nodes and the band md5s cost ~160 ms of driver Python per
+    query, ~40× the SQL form.
+    Round-robin repartition first: the documents table often arrives as
+    one parquet split and per-doc work would otherwise pin to one core.
+    No checkpoint here: callers materialize it when they reuse it, and
+    st_near_dup_ingest feeds it a streaming frame."""
     import numpy as np
     import pandas as pd
 
+    tokens, hash60 = _py_text_hashing()
     A = np.array([a for a, _ in _AFFINE], dtype=np.uint64)
     B = np.array([b for _, b in _AFFINE], dtype=np.uint64)
-    # ASCII \s + space-only strip: the oracle tokenizes with DuckDB's
-    # RE2 regexp_split_to_array(trim(text), '\s+') — RE2 \s is the ASCII
-    # class below and trim() strips spaces only. Python's Unicode \s /
-    # str.strip() would diverge on Unicode whitespace or leading tabs
-    # (round-15 advice; no such bytes in the corpus, pinned regardless).
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
 
     def compute(batches):
         for pdf in batches:
-            ids, shs, band_lists = [], [], []
+            ids, shs, sigs = [], [], []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 if text is None:
                     continue
-                toks = ws.split(text.strip(" "))
+                toks = tokens(text)
                 if len(toks) < 3:
                     continue
                 sh = list(
@@ -402,32 +438,95 @@ def _signature_relation(d: DataFrame) -> DataFrame:
                     )
                 )
                 hs = np.fromiter(
-                    (int(hashlib.md5(s.encode()).hexdigest()[:15], 16) for s in sh),
-                    dtype=np.uint64,
-                    count=len(sh),
+                    (hash60(s) for s in sh), dtype=np.uint64, count=len(sh)
                 )
                 # (n_shingles, NUM_HASHES); products < 2⁶² so uint64 is exact
-                sig = ((hs[:, None] % MINHASH_MOD) * A[None, :] + B[None, :]) % MINHASH_MOD
-                sig = sig.min(axis=0)
-                band_lists.append(
-                    [
-                        hashlib.md5(
-                            ",".join(
-                                str(int(x))
-                                for x in sig[
-                                    b * ROWS_PER_BAND : (b + 1) * ROWS_PER_BAND
-                                ]
-                            ).encode()
-                        ).hexdigest()
-                        for b in range(NUM_BANDS)
-                    ]
-                )
+                sig = ((hs[:, None] % MINHASH_MOD) * A + B) % MINHASH_MOD
                 ids.append(doc_id)
                 shs.append(sh)
-            yield pd.DataFrame({"doc_id": ids, "sh": shs, "bands": band_lists})
+                sigs.append(sig.min(axis=0).tolist())
+            yield pd.DataFrame({"doc_id": ids, "sh": shs, "m": sigs})
 
     n = d.sparkSession.sparkContext.defaultParallelism
-    return d.repartition(n).select("doc_id", "text").mapInPandas(compute, _SIG_SCHEMA)
+    return (
+        d.repartition(n)
+        .select("doc_id", "text")
+        .mapInPandas(compute, "doc_id long, sh array<string>, m array<long>")
+        .selectExpr("doc_id", "sh", *[f"m[{i}] AS m{i}" for i in range(NUM_HASHES)])
+    )
+
+
+def _md5_band_keys() -> list[str]:
+    """SQL for the NUM_BANDS band keys over m0..m31: md5 of the band's
+    comma-joined minhashes, the string DUCK_LSH_PAIR_CTES' bands build."""
+    return [
+        "md5(concat_ws(',', "
+        + ", ".join(
+            f"CAST(m{b * ROWS_PER_BAND + r} AS STRING)" for r in range(ROWS_PER_BAND)
+        )
+        + "))"
+        for b in range(NUM_BANDS)
+    ]
+
+
+def _band_rows(
+    sig: DataFrame,
+    id_col: str = "doc_id",
+    keys: list[str] | None = None,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """(id_col, *carry, band_idx, band_hash): one row per (document, band)
+    of a relation with m0..m31; ``keys`` (SQL) default to
+    ``_md5_band_keys``."""
+    return sig.selectExpr(
+        f"doc_id AS {id_col}",
+        *carry,
+        f"posexplode(array({', '.join(keys or _md5_band_keys())}))"
+        " AS (band_idx, band_hash)",
+    )
+
+
+def _band_candidates(sig: DataFrame, keys: list[str] | None = None) -> DataFrame:
+    """Distinct (a_id, b_id), a_id < b_id, of documents sharing a band
+    bucket: the band self-join. Only (band_idx, band_hash) shuffles; the
+    candidates are a vanishing fraction of n²."""
+    bands = _band_rows(sig, keys=keys)
+    ba, bb = bands.alias("ba"), bands.alias("bb")
+    return (
+        ba.join(
+            bb,
+            (F.col("ba.band_idx") == F.col("bb.band_idx"))
+            & (F.col("ba.band_hash") == F.col("bb.band_hash"))
+            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
+        )
+        .select(
+            F.col("ba.doc_id").alias("a_id"), F.col("bb.doc_id").alias("b_id")
+        )
+        .distinct()
+    )
+
+
+def _jaccard(x: str, y: str) -> F.Column:
+    """Exact Jaccard of two shingle-array columns."""
+    return F.size(F.array_intersect(x, y)).cast("double") / F.nullif(
+        F.size(F.array_union(x, y)).cast("double"), F.lit(0.0)
+    )
+
+
+def _lsh_pairs(sig: DataFrame, sh: DataFrame) -> DataFrame:
+    """(a_id, b_id, jaccard): the band candidates of ``sig`` verified
+    with exact shingle Jaccard ≥ JACCARD_THRESHOLD against the
+    (doc_id, sh) relation ``sh``."""
+    sh_a = sh.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("sh_a"))
+    sh_b = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("sh_b"))
+    return (
+        _band_candidates(sig)
+        .join(sh_a, "a_id")
+        .join(sh_b, "b_id")
+        .withColumn("jac", _jaccard("sh_a", "sh_b"))
+        .filter(F.col("jac") >= JACCARD_THRESHOLD)
+        .select("a_id", "b_id", F.round("jac", 6).alias("jaccard"))
+    )
 
 
 @register(
@@ -438,53 +537,41 @@ def _signature_relation(d: DataFrame) -> DataFrame:
 def dd_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate generation + exact Jaccard verification.
 
-    signature (32 portable hashes, numpy over Arrow batches) → 4 bands ×
-    8 rows → band-bucket self-join → verified with exact shingle Jaccard
-    ≥ 0.8 JVM-side. The oracle replays the identical LSH pipeline in SQL
+    signature (32 portable hashes, the Arrow kernel) → 4 bands × 8 rows
+    → band-bucket self-join → verified with exact shingle Jaccard ≥ 0.8
+    JVM-side. The oracle replays the identical LSH pipeline in SQL
     (portable hashes ⇒ identical buckets), so results are value-checked
     at any scale factor; recall vs the brute-force ground truth is
-    asserted separately in tests. At 100 TB only the (band_idx,
-    band_hash) buckets shuffle — candidates are a vanishing fraction of
-    n².
+    asserted separately in tests.
     """
     ensure_analytics_conf(spark)
     # The signature relation feeds FOUR consumers (two band-join sides,
     # two verify sides); without a materialization barrier each branch
-    # would re-run tokenize→shingle→md5→minhash from the scan. A
-    # materialization barrier is the 100 TB answer too: one pass over the
-    # corpus, spill-to-disk blocks, candidates+verify read them back.
-    # localCheckpoint (not persist): checkpoint blocks are reclaimed by the
-    # ContextCleaner when the result goes out of scope, whereas a persisted
-    # plan stays pinned in the CacheManager for the session lifetime — a
-    # leak across this engine's 130+-query verify/bench sessions.
-    sig = _signature_relation(_docs(spark, sf_dir)).localCheckpoint(eager=False)
-    bands = sig.select(
-        "doc_id", F.posexplode("bands").alias("band_idx", "band_hash")
-    )
-    ba, bb = bands.alias("ba"), bands.alias("bb")
-    candidates = (
-        ba.join(
-            bb,
-            (F.col("ba.band_idx") == F.col("bb.band_idx"))
-            & (F.col("ba.band_hash") == F.col("bb.band_hash"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(
-            F.col("ba.doc_id").alias("a_id"), F.col("bb.doc_id").alias("b_id")
-        )
-        .distinct()
-    )
-    sh_a = sig.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("sh_a"))
-    sh_b = sig.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("sh_b"))
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.nullif(
-        F.size(F.array_union("sh_a", "sh_b")).cast("double"), F.lit(0.0)
-    )
+    # would re-run the kernel from the scan. localCheckpoint (not
+    # persist): checkpoint blocks are reclaimed by the ContextCleaner
+    # when the result goes out of scope, whereas a persisted plan stays
+    # pinned in the CacheManager for the session lifetime — a leak across
+    # this engine's 130+-query verify/bench sessions.
+    sig = _minhash_relation(_docs(spark, sf_dir)).localCheckpoint(eager=False)
+    return _lsh_pairs(sig, sig)
+
+
+def _catalyst_minhashes(d: DataFrame) -> DataFrame:
+    """(doc_id, m0..m31) from a (doc_id, hs) relation: explode + 32
+    codegen'd MIN aggregates rather than 32 interpreted transform/
+    array_min lambdas (higher-order functions get no whole-stage
+    codegen). Same integers as the kernel and the DuckDB oracle."""
     return (
-        candidates.join(sh_a, "a_id")
-        .join(sh_b, "b_id")
-        .withColumn("jac", jac)
-        .filter(F.col("jac") >= JACCARD_THRESHOLD)
-        .select("a_id", "b_id", F.round("jac", 6).alias("jaccard"))
+        d.select("doc_id", F.explode("hs").alias("h"))
+        .groupBy("doc_id")
+        .agg(
+            *[
+                F.min(((F.col("h") % MINHASH_MOD) * a + c) % MINHASH_MOD).alias(
+                    f"m{i}"
+                )
+                for i, (a, c) in enumerate(_AFFINE)
+            ]
+        )
     )
 
 
@@ -495,91 +582,25 @@ def dd_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dd_minhash_lsh_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pure-Catalyst MinHash-LSH — same pipeline as dd_minhash_lsh with
-    signatures as expression trees instead of the Arrow fast path.
+    the m0..m31 columns computed by an aggregate instead of the Arrow
+    kernel; bands, candidates and verification are shared.
 
     Kept registered (and oracle-checked against the same SQL) as the
-    no-Python-workers variant; the interpreted-HOF signature cost makes
+    no-Python-workers variant; the interpreted per-shingle md5 makes
     dd_minhash_lsh the default at scale.
     """
-    # Materialization barrier: the shingle + base-hash arrays feed the two
-    # band-join sides and the two verify lookups. A plain repartition
-    # leaves the reuse to ReuseExchange, which only de-duplicates
-    # identical subplans — the verify branches project differently and
-    # re-run the md5 transform; an eager localCheckpoint computes the
-    # arrays exactly once (measured 4.3 s → ~2 s cold at sf0.1). Still
-    # zero Python workers: the signatures themselves remain expression
-    # trees.
+    # Materialization barrier: the shingle + base-hash arrays feed the
+    # minhash aggregate and the two verify lookups; a localCheckpoint
+    # computes them once (measured 4.3 s → ~2 s cold at sf0.1).
+    # Hash-partitioned by doc_id, so the groupBy in _catalyst_minhashes
+    # introduces NO exchange.
     d = (
         _shingle_relation(_docs(spark, sf_dir))
         .withColumn("hs", shingle_base_hashes(F.col("sh")))
         .repartition("doc_id")
         .localCheckpoint(eager=False)
     )
-    # Signatures via explode + 32 codegen'd MIN aggregates rather than 32
-    # interpreted transform/array_min lambdas (higher-order functions get
-    # no whole-stage codegen): the relation is already hash-partitioned by
-    # doc_id, so the groupBy introduces NO exchange, and each of the 32
-    # affine minhashes is a flat map-side-combined aggregate — the exact
-    # formulation a 100 TB run wants anyway. Same integers as
-    # minhash_signature/band_hashes (and the DuckDB oracle) by
-    # construction. Modest locally (2.4 s → 2.1 s at sf0.1: the shared
-    # shingle/md5 checkpoint dominates there), but the agg formulation
-    # removes the 32-wide interpreted array materialization per row,
-    # which is the term that grows with document size.
-    minh = (
-        d.select("doc_id", F.explode("hs").alias("h"))
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.min(
-                    ((F.col("h") % MINHASH_MOD) * a + c) % MINHASH_MOD
-                ).alias(f"m{i}")
-                for i, (a, c) in enumerate(_AFFINE[:NUM_HASHES])
-            ]
-        )
-    )
-    band_cols = [
-        F.md5(
-            F.concat_ws(
-                ",",
-                *[
-                    F.col(f"m{b * ROWS_PER_BAND + r}").cast("string")
-                    for r in range(ROWS_PER_BAND)
-                ],
-            )
-        )
-        for b in range(NUM_BANDS)
-    ]
-    bands = minh.select(
-        "doc_id",
-        F.posexplode(F.array(*band_cols)).alias("band_idx", "band_hash"),
-    )
-    ba, bb = bands.alias("ba"), bands.alias("bb")
-    candidates = (
-        ba.join(
-            bb,
-            (F.col("ba.band_idx") == F.col("bb.band_idx"))
-            & (F.col("ba.band_hash") == F.col("bb.band_hash"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(
-            F.col("ba.doc_id").alias("a_id"), F.col("bb.doc_id").alias("b_id")
-        )
-        .distinct()
-    )
-
-    sh_a = d.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("sh_a"))
-    sh_b = d.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("sh_b"))
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.nullif(
-        F.size(F.array_union("sh_a", "sh_b")).cast("double"), F.lit(0.0)
-    )
-    return (
-        candidates.join(sh_a, "a_id")
-        .join(sh_b, "b_id")
-        .withColumn("jac", jac)
-        .filter(F.col("jac") >= JACCARD_THRESHOLD)
-        .select("a_id", "b_id", F.round("jac", 6).alias("jaccard"))
-    )
+    return _lsh_pairs(_catalyst_minhashes(d), d)
 
 
 # --- SimHash -----------------------------------------------------------------------
@@ -615,53 +636,39 @@ def _simhash_relation(d: DataFrame) -> DataFrame:
     expressibility test) evaluates 60 interpreted lambda passes over every
     token-hash array — ~10 s cold at sf0.1, all signature CPU. One
     vectorized pass over a (n_tokens, 60) bit matrix computes identical
-    signatures in well under a second. Hash math mirrors the expression
-    and DuckDB versions bit-for-bit: SQL trim strips SPACES only (hence
-    ``strip(' ')``, not ``strip()``), tokens are the ``\\s+`` split,
-    de-duplicated, and hashed md5-hex[:15] → int60. Round-robin
+    signatures in well under a second. Tokens and hashes are the MinHash
+    kernel's (``_py_text_hashing``), de-duplicated. NULL text signs as 0,
+    as the expression and the oracle do (their token array is NULL, so
+    every bit's vote is NULL and falls to the ELSE 0 branch). Round-robin
     repartition first: one parquet split would pin per-doc work to a
     single core.
     """
-    import hashlib
-    import re
-
     import numpy as np
     import pandas as pd
 
-    # ASCII \s + space-only strip: matches the oracle's RE2
-    # regexp_split_to_array(trim(text), '\s+') exactly (round-15 advice;
-    # see _signature_relation).
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
+    tokens, hash60 = _py_text_hashing()
     bit_idx = np.arange(SIMHASH_BITS, dtype=np.uint64)
 
     def compute(batches):
         for pdf in batches:
-            ids, sigs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+            sigs = []
+            for text in pdf["text"]:
                 if text is None:
-                    ids.append(doc_id)
-                    sigs.append(None)
+                    sigs.append(0)
                     continue
-                toks = dict.fromkeys(ws.split(text.strip(" ")))
+                toks = dict.fromkeys(tokens(text))
                 hs = np.fromiter(
-                    (
-                        int(hashlib.md5(t.encode()).hexdigest()[:15], 16)
-                        for t in toks
-                    ),
-                    dtype=np.uint64,
-                    count=len(toks),
+                    (hash60(t) for t in toks), dtype=np.uint64, count=len(toks)
                 )
                 bits = (hs[:, None] >> bit_idx[None, :]) & np.uint64(1)
                 majority = (2 * bits.astype(np.int64) - 1).sum(axis=0) >= 0
-                sig = int(
-                    (majority.astype(np.uint64) << bit_idx).sum(dtype=np.uint64)
+                sigs.append(
+                    int((majority.astype(np.uint64) << bit_idx).sum(dtype=np.uint64))
                 )
-                ids.append(doc_id)
-                sigs.append(sig)
             yield pd.DataFrame(
                 {
-                    "doc_id": pd.array(ids, dtype="int64"),
-                    "simhash": pd.array(sigs, dtype="Int64"),
+                    "doc_id": pdf["doc_id"],
+                    "simhash": np.array(sigs, dtype=np.int64),
                 }
             )
 
@@ -1626,24 +1633,9 @@ def dd_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     end.
     """
     ensure_analytics_conf(spark)
-    sig = _signature_relation(_docs(spark, sf_dir)).localCheckpoint(eager=True)
-    incoming = (
-        T.portable_hash60(
-            F.concat(F.lit("split:"), F.col("doc_id").cast("string"))
-        )
-        % 100
-        >= INCR_BATCH_GE
-    )
-    sig = sig.withColumn("incoming", incoming)
-    bands = sig.select(
-        "doc_id", "incoming", F.posexplode("bands").alias("band_idx", "band_hash")
-    )
-    bi = bands.filter(F.col("incoming")).select(
-        F.col("doc_id").alias("in_id"), "band_idx", "band_hash"
-    )
-    be = bands.filter(~F.col("incoming")).select(
-        F.col("doc_id").alias("ex_id"), "band_idx", "band_hash"
-    )
+    sig = _minhash_relation(_docs(spark, sf_dir)).localCheckpoint(eager=True)
+    bi = _band_rows(sig.filter(_incoming_pred()), "in_id")
+    be = _band_rows(sig.filter(~_incoming_pred()), "ex_id")
     cand = (
         bi.join(be, ["band_idx", "band_hash"])
         .select("in_id", "ex_id")
@@ -1659,13 +1651,10 @@ def _verify_incremental(
 ) -> DataFrame:
     """Shared verification tail for the incremental dedup paths: exact
     Jaccard on candidate pairs only, then the per-incoming-doc match agg."""
-    jac = F.size(F.array_intersect("sh_i", "sh_e")).cast("double") / F.nullif(
-        F.size(F.array_union("sh_i", "sh_e")).cast("double"), F.lit(0.0)
-    )
     return (
         cand.join(sh_i, "in_id")
         .join(sh_e, "ex_id")
-        .withColumn("jac", jac)
+        .withColumn("jac", _jaccard("sh_i", "sh_e"))
         .filter(F.col("jac") >= JACCARD_THRESHOLD)
         .groupBy(F.col("in_id").alias("incoming_doc_id"))
         .agg(
@@ -1739,17 +1728,11 @@ def build_corpus_dedup_index(
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         shutil.rmtree(f"{warehouse}/{tbl}", ignore_errors=True)
         gc_stale_artifacts(spark, tbl)  # superseded content keys (r6 advice)
-    sig = (
-        _signature_relation(
-            _docs(spark, sf_dir).filter(~_incoming_pred())
-        )
-        .localCheckpoint(eager=True)
-    )
+    sig = _minhash_relation(
+        _docs(spark, sf_dir).filter(~_incoming_pred())
+    ).localCheckpoint(eager=True)
     (
-        sig.select(
-            F.col("doc_id").alias("ex_id"),
-            F.posexplode("bands").alias("band_idx", "band_hash"),
-        )
+        _band_rows(sig, "ex_id")
         .write.bucketBy(buckets, "band_idx", "band_hash")
         .sortBy("band_idx", "band_hash")
         .mode("overwrite")
@@ -1783,15 +1766,12 @@ def incremental_minhash_against_index(
     the property that makes per-batch dedup cost independent of corpus
     size (plan-asserted in tests/test_warehouse.py).
     """
-    sig_i = _signature_relation(
+    sig_i = _minhash_relation(
         _docs(spark, sf_dir).filter(_incoming_pred())
     ).localCheckpoint(eager=True)
-    bi = sig_i.select(
-        F.col("doc_id").alias("in_id"),
-        F.posexplode("bands").alias("band_idx", "band_hash"),
-    )
     cand = (
-        bi.join(spark.table(band_table), ["band_idx", "band_hash"])
+        _band_rows(sig_i, "in_id")
+        .join(spark.table(band_table), ["band_idx", "band_hash"])
         .select("in_id", "ex_id")
         .distinct()
     )
@@ -2123,7 +2103,7 @@ SWEEP_CONFIGS = ((4, 8), (8, 4), (16, 2))
 
 # Dual affine fold for the sweep's band hashes: two independent folds over
 # the band's minhash values (each h = (h*P + v) % MINHASH_MOD), combined as
-# h1 * MINHASH_MOD + h2 into one < 2^62 key. Integer-only, so numpy int64
+# h1 * MINHASH_MOD + h2 into one < 2^62 key. Integer-only, so Spark longs
 # and DuckDB BIGINT replay it bit-identically — this retired the
 # per-(doc, band) Python md5 digests (judge VERDICT r11 #3). The dual fold
 # keeps the effective width ~62 bits, so accidental band collisions stay
@@ -2133,27 +2113,33 @@ SWEEP_FOLD_P1 = 1000003
 SWEEP_FOLD_P2 = 999983
 
 
+def _band_fold(vals: list[str]) -> str:
+    """SQL of the dual affine fold over one band's minhash expressions,
+    valid in both engines (h·P + v stays < 2⁵¹, the key < 2⁶²)."""
+    f1, f2 = vals[0], vals[0]
+    for v in vals[1:]:
+        f1 = f"(({f1} * {SWEEP_FOLD_P1} + {v}) % {MINHASH_MOD})"
+        f2 = f"(({f2} * {SWEEP_FOLD_P2} + {v}) % {MINHASH_MOD})"
+    return f"({f1} * {MINHASH_MOD} + {f2})"
+
+
+def _fold_band_keys(n_bands: int, rows_per_band: int) -> list[str]:
+    """SQL for the sweep's band keys over the kernel's m0..m31."""
+    return [
+        _band_fold([f"m{b * rows_per_band + r}" for r in range(rows_per_band)])
+        for b in range(n_bands)
+    ]
+
+
 def _duck_band_fold_exprs(n_bands: int, rows_per_band: int) -> str:
     """UNION ALL selects — one per band — band_hash as the dual affine
-    fold (bit-identical to the vectorized numpy fold in
-    ``_sweep_signature_relation``)."""
+    fold over the oracle's minhashes."""
     selects = []
     for b in range(n_bands):
-        vals = []
-        for r in range(rows_per_band):
-            a, c = _affine_coeffs(b * rows_per_band + r)
-            vals.append(
-                f"list_min(list_transform(hs, h -> "
-                f"((h % {MINHASH_MOD}) * {a} + {c}) % {MINHASH_MOD}))"
-            )
-        f1, f2 = vals[0], vals[0]
-        for v in vals[1:]:
-            f1 = f"(({f1} * {SWEEP_FOLD_P1} + {v}) % {MINHASH_MOD})"
-            f2 = f"(({f2} * {SWEEP_FOLD_P2} + {v}) % {MINHASH_MOD})"
-        selects.append(
-            f"SELECT doc_id, {b} AS band_idx, "
-            f"({f1} * {MINHASH_MOD} + {f2}) AS band_hash FROM shn"
+        key = _band_fold(
+            [_duck_minhash(b * rows_per_band + r) for r in range(rows_per_band)]
         )
+        selects.append(f"SELECT doc_id, {b} AS band_idx, {key} AS band_hash FROM shn")
     return " UNION ALL ".join(selects)
 
 
@@ -2190,15 +2176,7 @@ def _duck_sweep_sql() -> str:
                 // NULLIF((SELECT n FROM truth), 0) AS BIGINT) AS recall_milli
     """)
     return f"""
-    WITH sh AS MATERIALIZED (
-        SELECT doc_id, {SQL_SHINGLES3} AS s FROM documents
-    ),
-    shn AS MATERIALIZED (
-        SELECT doc_id, s,
-               list_transform(s, x ->
-                   CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT)) AS hs
-        FROM sh WHERE len(s) > 0
-    ),
+    WITH {_DUCK_SHN_CTES},
     exj AS MATERIALIZED (
         SELECT doc_id, unnest(s) AS g, len(s) AS ns FROM sh
     ),
@@ -2215,82 +2193,6 @@ def _duck_sweep_sql() -> str:
     {" UNION ALL ".join(cfg_rows)}
     ORDER BY bands
     """
-
-
-_SWEEP_SCHEMA = "doc_id long, sh array<string>, " + ", ".join(
-    f"b{b} array<long>" for b, _ in SWEEP_CONFIGS
-)
-
-
-def _sweep_signature_relation(d: DataFrame) -> DataFrame:
-    """(doc_id, band hashes per SWEEP_CONFIGS grouping) in ONE Arrow pass:
-    the 32 minhash values are computed once and regrouped three ways —
-    exactly how a production sweep amortizes the signature cost across
-    the configs it evaluates. Minhash math is bit-identical to
-    _signature_relation / the DuckDB oracle; band hashes are the dual
-    affine fold, vectorized numpy over the whole batch at once (judge
-    VERDICT r11 #3 retired the per-(doc, band) Python md5 digests and
-    their per-value decimal formatting)."""
-    import hashlib
-    import re
-
-    import numpy as np
-    import pandas as pd
-
-    A = np.array([a for a, _ in _AFFINE], dtype=np.uint64)
-    B = np.array([b for _, b in _AFFINE], dtype=np.uint64)
-    # ASCII \s + space-only strip: matches the oracle's RE2
-    # regexp_split_to_array(trim(text), '\s+') exactly (round-15 advice;
-    # see _signature_relation).
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
-
-    def compute(batches):
-        for pdf in batches:
-            ids, shs, sig_rows = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None:
-                    continue
-                toks = ws.split(text.strip(" "))
-                if len(toks) < 3:
-                    continue
-                sh = list(
-                    dict.fromkeys(
-                        " ".join(toks[i : i + 3]) for i in range(len(toks) - 2)
-                    )
-                )
-                hs = np.fromiter(
-                    (int(hashlib.md5(s.encode()).hexdigest()[:15], 16) for s in sh),
-                    dtype=np.uint64,
-                    count=len(sh),
-                )
-                sig = (
-                    (hs[:, None] % MINHASH_MOD) * A[None, :] + B[None, :]
-                ) % MINHASH_MOD
-                ids.append(doc_id)
-                shs.append(sh)
-                sig_rows.append(sig.min(axis=0))
-            out = {"doc_id": ids, "sh": shs}
-            S = (
-                np.stack(sig_rows).astype(np.int64)
-                if sig_rows
-                else np.zeros((0, len(_AFFINE)), dtype=np.int64)
-            )
-            for b, r in SWEEP_CONFIGS:
-                V = S.reshape(len(S), b, r)
-                h1 = V[:, :, 0]
-                h2 = V[:, :, 0]
-                for j in range(1, r):
-                    # h*P + v < 2^31 * 2^20 + 2^31 — int64-safe, and the
-                    # same arithmetic _duck_band_fold_exprs emits as SQL
-                    h1 = (h1 * SWEEP_FOLD_P1 + V[:, :, j]) % MINHASH_MOD
-                    h2 = (h2 * SWEEP_FOLD_P2 + V[:, :, j]) % MINHASH_MOD
-                out[f"b{b}"] = (h1 * MINHASH_MOD + h2).tolist()
-            yield pd.DataFrame(out)
-
-    n = d.sparkSession.sparkContext.defaultParallelism
-    return d.repartition(n).select("doc_id", "text").mapInPandas(
-        compute, _SWEEP_SCHEMA
-    )
 
 
 @register(
@@ -2319,60 +2221,19 @@ def dd_lsh_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     VERDICT r11 #3). All crossJoins below are 1-row broadcast scalars
     (the repo's scalar-subquery pattern).
     """
-    sig = _sweep_signature_relation(_docs(spark, sf_dir)).localCheckpoint(
-        eager=True
-    )
+    sig = _minhash_relation(_docs(spark, sf_dir)).localCheckpoint(eager=True)
     # ground truth = dd_ngram_jaccard's exact inverted-index join (no
     # cartesian; that registered operator IS the truth definition), but
     # computed over THIS query's already-materialized shingle relation —
     # calling the operator would tokenize + md5 the corpus a second time
     # (measured 1.2 s of the 3.9 s isolated total at sf0.1)
-    sizes = sig.select("doc_id", F.size("sh").alias("n_sh"))
-    inv = sig.select("doc_id", F.explode("sh").alias("s"))
-    t_common = (
-        inv.alias("a")
-        .join(
-            inv.alias("b"),
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id")
-        )
-        .agg(F.count("*").alias("common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("a_id"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n_sh").alias("n_b"))
-    t_jac = F.col("common").cast("double") / F.nullif(
-        (F.col("n_a") + F.col("n_b") - F.col("common")).cast("double"),
-        F.lit(0.0),
-    )
     truth_pairs = (
-        t_common.join(F.broadcast(sa), "a_id")
-        .join(F.broadcast(sb), "b_id")
-        .filter(t_jac >= JACCARD_THRESHOLD)
-        .select("a_id", "b_id")
-        .localCheckpoint(eager=True)
+        _exact_jaccard_pairs(sig).select("a_id", "b_id").localCheckpoint(eager=True)
     )
     truth = truth_pairs.agg(F.count("*").alias("n_true"))
     per_cfg = []
     for b, r in SWEEP_CONFIGS:
-        bands = sig.select(
-            "doc_id", F.posexplode(f"b{b}").alias("band_idx", "band_hash")
-        )
-        cands = (
-            bands.alias("x")
-            .join(
-                bands.alias("y"),
-                (F.col("x.band_idx") == F.col("y.band_idx"))
-                & (F.col("x.band_hash") == F.col("y.band_hash"))
-                & (F.col("x.doc_id") < F.col("y.doc_id")),
-            )
-            .select(
-                F.col("x.doc_id").alias("a_id"), F.col("y.doc_id").alias("b_id")
-            )
-            .distinct()
-        )
+        cands = _band_candidates(sig, _fold_band_keys(b, r))
         # Candidate volume and verified recall in ONE aggregate over one
         # left join: truth_pairs is a distinct pair SET, so the join never
         # duplicates rows — COUNT(*) is the candidate count and the tag
@@ -2789,149 +2650,59 @@ def dd_er_linkage_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 CAL_PPM = 1_000_000
 
 
-def _cal_sig_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sh, m0..m31) in ONE Arrow pass, checkpointed: tokenize,
-    shingle, md5 and the 32 affine minhashes all in one numpy/hashlib
-    kernel (bit-identical uint64 math to _signature_relation and the
-    oracle's list_min(list_transform(...))), the mins emitted as
-    COLUMNS. No explode, no aggregation exchange, no second
-    materialization job — and one relation feeds the bands and both
-    report sides of the calibration queries, so each side attaches
-    signatures AND shingles in a single join (two joins total, was
-    four).
+def _cal_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH candidate pairs with both sides attached: shingles (sh_a,
+    sh_b) and minhashes (a0..a31, b0..b31) — the shared input of both
+    calibration reports. One checkpointed kernel relation feeds the bands
+    and both sides, so each side attaches signatures AND shingles in a
+    single join."""
+    sig = _minhash_relation(_docs(spark, sf_dir)).localCheckpoint(eager=False)
 
-    Round 16 MEASURED the hand-off's JVM-hashing recovery idea
-    (word_shingles + conv(substr(md5)) per shingle in the JVM, Arrow
-    kernel reduced to the affine matmul) and it LOST at both scales —
-    sf0.1 isolated 2.16→2.39 / 2.06→2.84 s, sf1 2.39→3.30 / 2.82→3.22 s
-    same-hour A/B — because the per-shingle md5 is a higher-order
-    `transform` lambda, which is INTERPRETED, not codegen (the
-    dd_minhash_lsh_expr lesson applies to the hashing too, not just the
-    mins), and the Arrow payload grows from `text` to sh+hs arrays. The
-    Python-loop kernel below stands as measured-best at BOTH scales."""
-    import hashlib
-    import re
-
-    import numpy as np
-    import pandas as pd
-
-    A = np.array([a for a, _ in _AFFINE], dtype=np.uint64)
-    B = np.array([b for _, b in _AFFINE], dtype=np.uint64)
-    # ASCII \s + space-only strip: matches the oracle's RE2
-    # regexp_split_to_array(trim(text), '\s+') exactly (round-15 advice;
-    # see _signature_relation).
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
-
-    def compute(batches):
-        for pdf in batches:
-            ids, shs, sig_rows = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None:
-                    continue
-                toks = ws.split(text.strip(" "))
-                if len(toks) < 3:
-                    continue
-                sh = list(
-                    dict.fromkeys(
-                        " ".join(toks[i : i + 3]) for i in range(len(toks) - 2)
-                    )
-                )
-                hs = np.fromiter(
-                    (int(hashlib.md5(s.encode()).hexdigest()[:15], 16) for s in sh),
-                    dtype=np.uint64,
-                    count=len(sh),
-                )
-                sig = (
-                    (hs[:, None] % MINHASH_MOD) * A[None, :] + B[None, :]
-                ) % MINHASH_MOD
-                ids.append(doc_id)
-                shs.append(sh)
-                sig_rows.append(sig.min(axis=0))
-            S = (
-                np.stack(sig_rows).astype(np.int64)
-                if sig_rows
-                else np.zeros((0, len(_AFFINE)), dtype=np.int64)
-            )
-            out = {"doc_id": ids, "sh": shs}
-            for i in range(NUM_HASHES):
-                out[f"m{i}"] = S[:, i]
-            yield pd.DataFrame(out)
-
-    d = _docs(spark, sf_dir)
-    n = d.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id long, sh array<string>, " + ", ".join(
-        f"m{i} long" for i in range(NUM_HASHES)
-    )
-    return (
-        d.repartition(n)
-        .select("doc_id", "text")
-        .mapInPandas(compute, schema)
-        .localCheckpoint(eager=False)
-    )
-
-
-def _cal_band_candidates(sig: DataFrame) -> DataFrame:
-    """Banded LSH candidate pairs (a_id < b_id) over the m0..m31 columns
-    of ``_cal_sig_relation`` — the shared candidate generator of both
-    calibration queries."""
-    band_cols = [
-        F.md5(
-            F.concat_ws(
-                ",",
-                *[
-                    F.col(f"m{b * ROWS_PER_BAND + r}").cast("string")
-                    for r in range(ROWS_PER_BAND)
-                ],
-            )
+    def side(p: str) -> DataFrame:
+        return sig.selectExpr(
+            f"doc_id AS {p}_id",
+            f"sh AS sh_{p}",
+            *[f"m{i} AS {p}{i}" for i in range(NUM_HASHES)],
         )
-        for b in range(NUM_BANDS)
-    ]
-    bands = sig.select(
-        "doc_id",
-        F.posexplode(F.array(*band_cols)).alias("band_idx", "band_hash"),
-    )
-    ba, bb = bands.alias("ba"), bands.alias("bb")
-    return (
-        ba.join(
-            bb,
-            (F.col("ba.band_idx") == F.col("bb.band_idx"))
-            & (F.col("ba.band_hash") == F.col("bb.band_hash"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(
-            F.col("ba.doc_id").alias("a_id"), F.col("bb.doc_id").alias("b_id")
-        )
-        .distinct()
+
+    return _band_candidates(sig).join(side("a"), "a_id").join(side("b"), "b_id")
+
+
+def _n_agree(cond: str) -> str:
+    """SQL: how many of the 32 positions satisfy ``cond`` (formatted with
+    ``i``); Spark compares a{i}/b{i}, the oracles sa.s{i}/sb.s{i}."""
+    return " + ".join(
+        f"CASE WHEN {cond.format(i=i)} THEN 1 ELSE 0 END" for i in range(NUM_HASHES)
     )
 
 
-def _cal_oracle() -> str:
-    """LSH candidates + per-position signature agreement vs exact Jaccard.
-    The 32 per-position minhashes reuse the exact affine family the band
-    hashes are built from, so the estimate is the one production sketches
-    would ship."""
-    sig_cols = ", ".join(
-        f"list_min(list_transform(hs, h -> "
-        f"((h % {MINHASH_MOD}) * {a} + {c}) % {MINHASH_MOD})) AS s{i}"
-        for i, (a, c) in enumerate(_AFFINE[:NUM_HASHES])
-    )
-    match_sum = " + ".join(
-        f"CASE WHEN sa.s{i} = sb.s{i} THEN 1 ELSE 0 END"
-        for i in range(NUM_HASHES)
-    )
+def _duck_cal_sql(cols: str) -> str:
+    """The verified LSH pairs with both sides' 32 minhashes attached
+    (sa.s{i}, sb.s{i}), reporting ``cols`` and the exact Jaccard. The
+    per-position minhashes reuse the exact affine family the band hashes
+    are built from, so the estimate is the one production sketches would
+    ship."""
+    sig_cols = ", ".join(f"{_duck_minhash(i)} AS s{i}" for i in range(NUM_HASHES))
     return f"""
     WITH {DUCK_LSH_PAIR_CTES},
     sigs AS (SELECT doc_id, {sig_cols} FROM shn)
     SELECT v.a_id, v.b_id,
-           CAST({match_sum} AS BIGINT) AS n_match_pos,
-           CAST((({match_sum}) * {CAL_PPM}) // {NUM_HASHES} AS BIGINT)
-               AS est_ppm,
+           {cols},
            ROUND(v.jac, 6) AS jaccard
     FROM verified v
     JOIN sigs sa ON sa.doc_id = v.a_id
     JOIN sigs sb ON sb.doc_id = v.b_id
     ORDER BY v.a_id, v.b_id
     """
+
+
+def _cal_oracle() -> str:
+    match_sum = _n_agree("sa.s{i} = sb.s{i}")
+    return _duck_cal_sql(
+        f"""CAST({match_sum} AS BIGINT) AS n_match_pos,
+           CAST((({match_sum}) * {CAL_PPM}) // {NUM_HASHES} AS BIGINT)
+               AS est_ppm"""
+    )
 
 
 @register(
@@ -2957,38 +2728,16 @@ def dd_minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFram
     every column replays bit-for-bit in the oracle.
 
     Plan shape (100 TB): candidates come from the banded LSH join (never
-    all-pairs); the per-position signatures come from ONE map-side Arrow
-    pass — the vectorized numpy/hashlib minhash kernel of
-    `_cal_sig_relation` (round-15 advice fixed this paragraph to match
-    the kernel actually used) — no explode, no aggregation exchange, no
-    second materialization job; one checkpointed (doc_id, sh, m0..m31)
-    relation feeds bands, estimates, AND the exact verify, so each
-    report side attaches signatures and shingles in a single join (two
-    joins, was four).
+    all-pairs); the per-position signatures are the ``m`` columns of the
+    one map-side Arrow minhash pass (``_minhash_relation``) — no explode,
+    no aggregation exchange — and that checkpointed relation feeds the
+    bands, the estimates AND the exact verify (``_cal_pairs``).
     """
-    sig = _cal_sig_relation(spark, sf_dir)
-    candidates = _cal_band_candidates(sig)
-    side_a = sig.select(
-        F.col("doc_id").alias("a_id"),
-        F.col("sh").alias("sh_a"),
-        *[F.col(f"m{i}").alias(f"a{i}") for i in range(NUM_HASHES)],
-    )
-    side_b = sig.select(
-        F.col("doc_id").alias("b_id"),
-        F.col("sh").alias("sh_b"),
-        *[F.col(f"m{i}").alias(f"b{i}") for i in range(NUM_HASHES)],
-    )
-    n_match = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(NUM_HASHES)
-    ).cast("long")
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.nullif(
-        F.size(F.array_union("sh_a", "sh_b")).cast("double"), F.lit(0.0)
-    )
     return (
-        candidates.join(side_a, "a_id")
-        .join(side_b, "b_id")
-        .withColumn("n_match_pos", n_match)
+        _cal_pairs(spark, sf_dir)
+        .withColumn(
+            "n_match_pos", F.expr(f"CAST({_n_agree('a{i} = b{i}')} AS BIGINT)")
+        )
         .select(
             "a_id",
             "b_id",
@@ -2996,7 +2745,7 @@ def dd_minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFram
             F.expr(f"(n_match_pos * {CAL_PPM}) DIV {NUM_HASHES}").alias(
                 "est_ppm"
             ),
-            F.round(jac, 6).alias("jaccard"),
+            F.round(_jaccard("sh_a", "sh_b"), 6).alias("jaccard"),
         )
         .orderBy("a_id", "b_id")
     )
@@ -3118,37 +2867,18 @@ def _bbit_oracle() -> str:
     """The full-width calibration oracle plus the 1-bit columns: parity
     agreement count, raw match ppm, and the bias-corrected estimator
     Ĵ = (E − 1/2)/(1 − 1/2) = 2E − 1 (clamped at 0)."""
-    sig_cols = ", ".join(
-        f"list_min(list_transform(hs, h -> "
-        f"((h % {MINHASH_MOD}) * {a} + {c}) % {MINHASH_MOD})) AS s{i}"
-        for i, (a, c) in enumerate(_AFFINE[:NUM_HASHES])
-    )
-    bit_sum = " + ".join(
-        f"CASE WHEN sa.s{i} % 2 = sb.s{i} % 2 THEN 1 ELSE 0 END"
-        for i in range(NUM_HASHES)
-    )
-    full_sum = " + ".join(
-        f"CASE WHEN sa.s{i} = sb.s{i} THEN 1 ELSE 0 END"
-        for i in range(NUM_HASHES)
-    )
-    return f"""
-    WITH {DUCK_LSH_PAIR_CTES},
-    sigs AS (SELECT doc_id, {sig_cols} FROM shn)
-    SELECT v.a_id, v.b_id,
-           CAST({bit_sum} AS BIGINT) AS n_bit_match,
+    bit_sum = _n_agree("sa.s{i} % 2 = sb.s{i} % 2")
+    full_sum = _n_agree("sa.s{i} = sb.s{i}")
+    return _duck_cal_sql(
+        f"""CAST({bit_sum} AS BIGINT) AS n_bit_match,
            CAST((({bit_sum}) * {CAL_PPM}) // {NUM_HASHES} AS BIGINT)
                AS raw_bit_ppm,
            GREATEST(CAST(0 AS BIGINT),
                     2 * CAST((({bit_sum}) * {CAL_PPM}) // {NUM_HASHES}
                              AS BIGINT) - {CAL_PPM}) AS bbit_est_ppm,
            CAST((({full_sum}) * {CAL_PPM}) // {NUM_HASHES} AS BIGINT)
-               AS full_est_ppm,
-           ROUND(v.jac, 6) AS jaccard
-    FROM verified v
-    JOIN sigs sa ON sa.doc_id = v.a_id
-    JOIN sigs sb ON sb.doc_id = v.b_id
-    ORDER BY v.a_id, v.b_id
-    """
+               AS full_est_ppm"""
+    )
 
 
 @register(
@@ -3172,41 +2902,16 @@ def dd_bbit_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact verify); all estimates are integer ppm via truncating DIV; the
     clamp is integer GREATEST. Bit-replayed by the oracle.
 
-    Plan shape (100 TB): identical to dd_minhash_jaccard_calibration —
-    banded candidates only, signatures from the one map-side Arrow
-    minhash pass (`_cal_sig_relation`'s numpy/hashlib kernel; round-15
-    advice fixed this paragraph to match the kernel actually used — no
-    explode/agg exchange, one checkpointed relation feeds bands and
-    both report sides, two attach joins instead of four), and the b-bit
-    columns are free (parity of columns already in flight).
+    Plan shape (100 TB): identical to dd_minhash_jaccard_calibration
+    (``_cal_pairs``), and the b-bit columns are free (parity of columns
+    already in flight).
     """
-    sig = _cal_sig_relation(spark, sf_dir)
-    candidates = _cal_band_candidates(sig)
-    side_a = sig.select(
-        F.col("doc_id").alias("a_id"),
-        F.col("sh").alias("sh_a"),
-        *[F.col(f"m{i}").alias(f"a{i}") for i in range(NUM_HASHES)],
-    )
-    side_b = sig.select(
-        F.col("doc_id").alias("b_id"),
-        F.col("sh").alias("sh_b"),
-        *[F.col(f"m{i}").alias(f"b{i}") for i in range(NUM_HASHES)],
-    )
-    n_bit = sum(
-        F.when(F.col(f"a{i}") % 2 == F.col(f"b{i}") % 2, 1).otherwise(0)
-        for i in range(NUM_HASHES)
-    ).cast("long")
-    n_full = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(NUM_HASHES)
-    ).cast("long")
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.nullif(
-        F.size(F.array_union("sh_a", "sh_b")).cast("double"), F.lit(0.0)
-    )
     return (
-        candidates.join(side_a, "a_id")
-        .join(side_b, "b_id")
-        .withColumn("n_bit_match", n_bit)
+        _cal_pairs(spark, sf_dir)
+        .withColumn(
+            "n_bit_match",
+            F.expr(f"CAST({_n_agree('a{i} % 2 = b{i} % 2')} AS BIGINT)"),
+        )
         .withColumn(
             "raw_bit_ppm", F.expr(f"(n_bit_match * {CAL_PPM}) DIV {NUM_HASHES}")
         )
@@ -3214,7 +2919,9 @@ def dd_bbit_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bbit_est_ppm",
             F.expr(f"GREATEST(CAST(0 AS BIGINT), 2 * raw_bit_ppm - {CAL_PPM})"),
         )
-        .withColumn("_n_full", n_full)
+        .withColumn(
+            "_n_full", F.expr(f"CAST({_n_agree('a{i} = b{i}')} AS BIGINT)")
+        )
         .withColumn(
             "full_est_ppm", F.expr(f"(_n_full * {CAL_PPM}) DIV {NUM_HASHES}")
         )
@@ -3225,7 +2932,7 @@ def dd_bbit_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             "raw_bit_ppm",
             "bbit_est_ppm",
             "full_est_ppm",
-            F.round(jac, 6).alias("jaccard"),
+            F.round(_jaccard("sh_a", "sh_b"), 6).alias("jaccard"),
         )
         .orderBy("a_id", "b_id")
     )

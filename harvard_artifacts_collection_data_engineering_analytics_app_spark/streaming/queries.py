@@ -435,8 +435,10 @@ def st_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.dedup import (
         JACCARD_THRESHOLD,
+        _band_rows,
         _incoming_pred,
-        _signature_relation,
+        _jaccard,
+        _minhash_relation,
         build_corpus_dedup_index,
         corpus_index_names,
     )
@@ -452,24 +454,17 @@ def st_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, sf_dir, band_table=band_table, sig_table=sig_table
         )
     incoming = read_documents_stream(spark, sf_dir).filter(_incoming_pred())
-    sig_i = _signature_relation(incoming)
     # carry the shingle array through the band explode: joining candidates
-    # back to sig_i would be a stream-stream join (needs watermarks); the
-    # stream is batch-sized, so the wider explode is the cheaper plan
-    bi = sig_i.select(
-        F.col("doc_id").alias("in_id"),
-        F.col("sh").alias("sh_i"),
-        F.posexplode("bands").alias("band_idx", "band_hash"),
-    )
+    # back to the signatures would be a stream-stream join (needs
+    # watermarks); the stream is batch-sized, so the wider explode is the
+    # cheaper plan
+    bi = _band_rows(_minhash_relation(incoming), "in_id", carry=("sh AS sh_i",))
     cand = bi.join(
         spark.table(band_table), ["band_idx", "band_hash"]
     ).select("in_id", "sh_i", "ex_id")
-    jac = F.size(F.array_intersect("sh_i", "sh_e")).cast("double") / F.nullif(
-        F.size(F.array_union("sh_i", "sh_e")).cast("double"), F.lit(0.0)
-    )
     pairs = (
         cand.join(spark.table(sig_table), "ex_id")
-        .withColumn("jac", jac)
+        .withColumn("jac", _jaccard("sh_i", "sh_e"))
         .filter(F.col("jac") >= JACCARD_THRESHOLD)
         .groupBy("in_id", "ex_id")
         .agg(F.max("jac").alias("jac"))

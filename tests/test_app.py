@@ -25,13 +25,55 @@ def test_collect_insert_query_roundtrip(spark, tmp_path):
 
 
 def test_insert_is_idempotent_like_insert_ignore(spark, tmp_path):
-    """Re-inserting the same batch must not grow the PK tables
-    (INSERT IGNORE semantics, harvard_artifacts_app.py:241)."""
+    """Re-inserting the same batch must not grow the PK tables, and a
+    second batch sharing 10% of its ids adds only its new ids to all
+    three tables, so every id keeps its first-delivered colors (INSERT
+    IGNORE semantics, harvard_artifacts_app.py:241)."""
     wd = str(tmp_path / "wd2")
     app.collect(spark, wd, rest.synthetic_fetcher(200), target_records=200)
     first = app.insert(spark, wd)
     second = app.insert(spark, wd)
     assert first == second
+
+    # ids 180..379: 20 shared with the first batch, all with new colors
+    late = [
+        {
+            "id": i,
+            "title": f"Late {i}",
+            "colors": [
+                {"spectrum": "#ccc", "hue": "Violet", "color": "#654321",
+                 "percent": j / 10, "css3": "#ddd"}
+                for j in range(1 + i % 3)
+            ],
+        }
+        for i in range(180, 380)
+    ]
+
+    def fetch_late(page: int) -> list[dict]:
+        return late[(page - 1) * rest.PAGE_SIZE : page * rest.PAGE_SIZE]
+
+    app.collect(spark, wd, fetch_late, target_records=len(late))
+    counts = app.insert(spark, wd)
+    assert counts["artifactmetadata"] == counts["artifactmedia"] == 380
+
+    delivered = rest.fetch_serial(rest.synthetic_fetcher(200), 200) + late
+    first_delivery: dict[int, dict] = {}
+    for r in delivered:
+        first_delivery.setdefault(r["id"], r)
+    cols = ("spectrum", "hue", "color", "percent", "css3")
+    want = sorted(
+        (i, *(c[k] for k in cols))
+        for i, r in first_delivery.items()
+        for c in (r.get("colors") or [])[:5]
+    )
+    got = sorted(
+        tuple(r)
+        for r in spark.read.parquet(f"{wd}/artifactcolors")
+        .select("objectid", *cols)
+        .collect()
+    )
+    assert got == want
+    assert len(set(got)) == len(got)
 
 
 def test_chart_spec_matches_reference_auto_bar(spark):

@@ -97,32 +97,78 @@ def test_simhash_numpy_matches_catalyst_expr(spark, sf_dir):
     assert fast == expr
 
 
-def test_numpy_signatures_bit_identical_to_expression(spark, oracle_sf_dir):
-    """The Arrow/numpy MinHash fast path (_signature_relation) must produce
-    exactly the band hashes of the canonical Catalyst formulation
-    (shingle_base_hashes -> band_hashes) — the bit-identity claim the fast
-    path's docstring makes, pinned here so neither side can drift."""
-    import pyspark.sql.functions as F
+# Hand-built documents for the kernels' edge cases: NULL and empty text,
+# fewer than 3 tokens, a leading tab, mixed ASCII whitespace runs (with a
+# vertical tab), U+00A0 and U+3000 inside tokens, repeated shingles.
+EDGE_DOCS = [
+    (1, None),
+    (2, ""),
+    (3, "only two"),
+    (4, "\tleading tab then words"),
+    (5, "mixed \t\n ascii\r\n\x0b\fwhitespace  runs of words"),
+    (6, "caf\u00e9\u00a0au lait\u3000bowl and more words"),
+    (7, "the same words the same words the same words"),
+    (8, "  spaces around the words  "),
+    (9, "\u3000ideographic space leads and trails\u3000"),
+    (10, "trailing tab\t"),
+]
 
+
+def _assert_kernels_match_expressions(docs):
+    """The Arrow kernels against their Catalyst twins on one documents
+    frame: band keys, the 32 minhash columns, and the simhash. Returns
+    the ids the MinHash kernel signed."""
     from harvard_artifacts_collection_data_engineering_analytics_app_spark.operators import (
         dedup as D,
     )
 
-    docs = D._docs(spark, oracle_sf_dir).limit(50)
+    m_cols = [f"m{i}" for i in range(D.NUM_HASHES)]
+    sig = D._minhash_relation(docs).select(
+        "doc_id", F.expr(f"array({', '.join(D._md5_band_keys())})").alias("bands"),
+        *m_cols,
+    )
+    sig = {r["doc_id"]: r for r in sig.collect()}
+    sh = D._shingle_relation(docs).withColumn(
+        "hs", D.shingle_base_hashes(F.col("sh"))
+    )
     expr_bands = {
-        (r["doc_id"], tuple(r["bands"]))
-        for r in D._shingle_relation(docs)
-        .select(
-            "doc_id",
-            D.band_hashes(D.shingle_base_hashes(F.col("sh"))).alias("bands"),
-        )
-        .collect()
+        r["doc_id"]: list(r["bands"])
+        for r in sh.select(
+            "doc_id", D.band_hashes(F.col("hs")).alias("bands")
+        ).collect()
     }
-    numpy_bands = {
-        (r["doc_id"], tuple(r["bands"]))
-        for r in D._signature_relation(docs).select("doc_id", "bands").collect()
+    assert {d: list(r["bands"]) for d, r in sig.items()} == expr_bands
+    expr_m = {
+        r["doc_id"]: [r[c] for c in m_cols]
+        for r in D._catalyst_minhashes(sh).collect()
     }
-    assert expr_bands == numpy_bands
+    assert {d: [r[c] for c in m_cols] for d, r in sig.items()} == expr_m
+    expr_sim = {
+        r["doc_id"]: r["simhash"]
+        for r in docs.select(
+            "doc_id", F.expr(D._SPARK_SIMHASH).alias("simhash")
+        ).collect()
+    }
+    fast_sim = {r["doc_id"]: r["simhash"] for r in D._simhash_relation(docs).collect()}
+    assert fast_sim == expr_sim
+    return set(sig)
+
+
+def test_numpy_signatures_bit_identical_to_expression(spark, oracle_sf_dir):
+    """The Arrow/numpy MinHash kernel (_minhash_relation) must produce
+    exactly the band hashes of the canonical Catalyst formulation
+    (shingle_base_hashes -> band_hashes) and the minhash columns of
+    dd_minhash_lsh_expr's aggregate, and the simhash kernel must equal
+    _SPARK_SIMHASH — on corpus documents and on hand-built edge cases."""
+    from harvard_artifacts_collection_data_engineering_analytics_app_spark.operators import (
+        dedup as D,
+    )
+
+    docs = D._docs(spark, oracle_sf_dir).select("doc_id", "text").limit(50)
+    assert len(_assert_kernels_match_expressions(docs)) > 0
+    edge = spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
+    # NULL, empty and two-token documents have no shingle
+    assert _assert_kernels_match_expressions(edge) == set(range(4, 11))
 
 
 def test_incremental_indexed_equals_recomputed(spark, oracle_sf_dir):
@@ -158,12 +204,11 @@ def test_incremental_index_scan_has_no_exchange(spark, oracle_sf_dir):
         D.build_corpus_dedup_index(
             spark, oracle_sf_dir, band_table=band_table, sig_table=sig_table
         )
-    sig_i = D._signature_relation(
-        D._docs(spark, oracle_sf_dir).filter(D._incoming_pred())
-    )
-    bi = sig_i.select(
-        F.col("doc_id").alias("in_id"),
-        F.posexplode("bands").alias("band_idx", "band_hash"),
+    bi = D._band_rows(
+        D._minhash_relation(
+            D._docs(spark, oracle_sf_dir).filter(D._incoming_pred())
+        ),
+        "in_id",
     )
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

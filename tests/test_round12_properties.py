@@ -111,20 +111,22 @@ def test_sink_audit_result_is_bucket_count_invariant(spark):
     ]
 
 
-def test_sweep_band_fold_cross_engine_parity():
-    """The numpy dual affine fold and _duck_band_fold_exprs' SQL must
-    produce identical band hashes for identical signatures — the
-    cross-engine contract the r12 sweep rewrite rests on (same integer
-    grid both sides, no string formatting in between)."""
+def test_sweep_band_fold_cross_engine_parity(spark):
+    """The Spark dual affine fold (_fold_band_keys), its numpy statement
+    and _duck_band_fold_exprs' SQL must produce identical band hashes for
+    identical signatures — the cross-engine contract the r12 sweep
+    rewrite rests on (same integer grid on every side, no string
+    formatting in between)."""
     import duckdb
     import numpy as np
+    import pyspark.sql.functions as F
 
     from harvard_artifacts_collection_data_engineering_analytics_app_spark.operators.dedup import (
         MINHASH_MOD,
         SWEEP_CONFIGS,
         SWEEP_FOLD_P1,
         SWEEP_FOLD_P2,
-        _affine_coeffs,
+        _fold_band_keys,
     )
 
     rng = np.random.default_rng(12345)
@@ -138,6 +140,17 @@ def test_sweep_band_fold_cross_engine_parity():
             h1 = (h1 * SWEEP_FOLD_P1 + V[:, :, j]) % MINHASH_MOD
             h2 = (h2 * SWEEP_FOLD_P2 + V[:, :, j]) % MINHASH_MOD
         H = h1 * MINHASH_MOD + h2
+        sig = spark.createDataFrame(
+            [[int(x) for x in row] for row in S],
+            ", ".join(f"m{j} long" for j in range(n_hashes)),
+        )
+        got_spark = [
+            list(r["k"])
+            for r in sig.select(
+                F.expr(f"array({', '.join(_fold_band_keys(b_cfg, r_cfg))})").alias("k")
+            ).collect()
+        ]
+        assert got_spark == H.tolist(), (b_cfg, r_cfg)
         for band in range(b_cfg):
             # replay the oracle's nested-expression arithmetic per band
             vals = [f"v{j}" for j in range(r_cfg)]
