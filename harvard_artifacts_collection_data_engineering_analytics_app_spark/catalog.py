@@ -11,7 +11,10 @@ local testdata and a production warehouse.
 
 from __future__ import annotations
 
+from typing import Any, Callable
+
 import pyspark.sql.functions as F
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, TimestampNTZType
 
@@ -42,6 +45,13 @@ def content_key(sf_dir: str, table: str) -> str:
     alternating-SF runs (bench.py sf0.1 vs var/sf1) used to thrash every
     persisted IVF/PQ/dedup index each time the other side rebuilt
     (round-7 advice, LOW).
+
+    Session artifacts (the checkpointed kNN graphs and NSW indexes, the
+    broadcast vector matrix) follow the same rule: ``session_artifact``
+    keys them by (applicationId, content key), so a source rewritten
+    mid-session rebuilds them instead of serving the old graph.
+    ``persisted_artifact`` and ``session_artifact`` are the only callers
+    that should need this key.
     """
     import hashlib
     import os
@@ -66,11 +76,11 @@ def content_key(sf_dir: str, table: str) -> str:
 
 
 def log_artifact_build(*tables: str) -> None:
-    """One visible line per persisted-artifact build. Gate and bench logs
-    conflate first-touch index builds with the query that triggered them
-    (a 32 s `dd_cluster_keepers` gate row was ~all index build in the r8
-    judge run); this line lets a log reader split build cost from query
-    cost (judge VERDICT r8 #7)."""
+    """One visible line per artifact build, persisted or session. Gate
+    and bench logs conflate first-touch index builds with the query that
+    triggered them (a 32 s `dd_cluster_keepers` gate row was ~all index
+    build in the r8 judge run); this line lets a log reader split build
+    cost from query cost (judge VERDICT r8 #7)."""
     print(f"    building artifact: {', '.join(tables)}", flush=True)
 
 
@@ -149,6 +159,79 @@ def gc_stale_artifacts(spark: SparkSession, table: str) -> list[str]:
             flush=True,
         )
     return dropped
+
+
+def _tables_exist(spark: SparkSession, *names: str) -> bool:
+    return all(spark.catalog.tableExists(n) for n in names)
+
+
+def persisted_artifact(
+    spark: SparkSession,
+    sf_dir: str,
+    source: str,
+    prefixes: tuple[str, ...],
+    write: Callable[..., None],
+    ready: Callable[..., bool] = _tables_exist,
+) -> tuple[str, ...]:
+    """The warehouse tables ``{prefix}_{content_key(sf_dir, source)}``,
+    one per prefix, built on first use.
+
+    Returns the names at once when ``ready(spark, *names)`` holds (by
+    default: every table exists). Otherwise logs one build, drops each
+    table AND its warehouse directory (a managed-table LOCATION can
+    outlive a catalog that forgot it — fresh driver session, same cwd —
+    and saveAsTable then fails with LOCATION_ALREADY_EXISTS), collects
+    the superseded keys (``gc_stale_artifacts``), and calls
+    ``write(*names)``."""
+    import shutil
+    from urllib.parse import urlparse
+
+    key = content_key(sf_dir, source)
+    names = tuple(f"{p}_{key}" for p in prefixes)
+    if ready(spark, *names):
+        return names
+    log_artifact_build(*names)
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    for name in names:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
+        gc_stale_artifacts(spark, name)
+    write(*names)
+    return names
+
+
+# name -> ((applicationId, content key), artifact): one live entry per name
+_SESSION_ARTIFACTS: dict[str, tuple[tuple[str, str], Any]] = {}
+
+
+def session_artifact(
+    spark: SparkSession,
+    sf_dir: str,
+    source: str,
+    name: str,
+    build: Callable[[], Any],
+) -> Any:
+    """The object ``build()`` made for this session and the current
+    content of ``source`` — a checkpointed DataFrame or a broadcast that
+    several queries share within a session.
+
+    One entry is kept per ``name``. A new session or a rewritten source
+    rebuilds it (one ``log_artifact_build``) and drops the old entry; a
+    superseded broadcast of the same session is ``destroy()``ed, and a
+    superseded checkpoint's blocks go with its last reference (Spark's
+    ContextCleaner)."""
+    key = (spark.sparkContext.applicationId, content_key(sf_dir, source))
+    held = _SESSION_ARTIFACTS.get(name)
+    if held is not None:
+        if held[0] == key:
+            return held[1]
+        del _SESSION_ARTIFACTS[name]
+        if held[0][0] == key[0] and isinstance(held[1], Broadcast):
+            held[1].destroy()
+    log_artifact_build(f"{name}_{key[1]}")
+    artifact = build()
+    _SESSION_ARTIFACTS[name] = (key, artifact)
+    return artifact
 
 
 # The driver-generated star schema + extension tables (TESTDATA.md).

@@ -34,7 +34,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..catalog import load_table
+from ..catalog import load_table, persisted_artifact, session_artifact
 from ..queries.registry import register
 from ..session import ensure_analytics_conf
 
@@ -1112,25 +1112,15 @@ def ss_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- persisted IVF index (ANN serving shape) -----------------------------------------
 
 
-def ivf_index_names(sf_dir: str) -> tuple[str, str]:
-    """(inverted-list table, centroid table) keyed by source dir AND file
-    content fingerprint — same regeneration-proof staleness guard as the
-    dedup corpus index (catalog.content_key)."""
-    from ..catalog import content_key
-
-    h = content_key(sf_dir, "embeddings")
-    return f"ivf_lists_{h}", f"ivf_centroids_{h}"
-
-
 def _ivf_index_ready(
     spark: SparkSession, idx_table: str, cent_table: str
 ) -> bool:
     """True iff both halves exist AND the inverted lists carry the
     schema-v2 inlined ``label`` payload (r10 VERDICT #3). A v1 index
-    persisted by an earlier round lacks it; returning False makes the
-    caller rebuild in place (build drops the old table + dir first), so
-    the schema migration is self-healing with no version-suffix leak in
-    the warehouse."""
+    persisted by an earlier round lacks it; returning False makes
+    ``ivf_index`` rebuild in place (the build drops the old table + dir
+    first), so the schema migration is self-healing with no
+    version-suffix leak in the warehouse."""
     if not (
         spark.catalog.tableExists(idx_table)
         and spark.catalog.tableExists(cent_table)
@@ -1139,47 +1129,49 @@ def _ivf_index_ready(
     return "label" in spark.table(idx_table).columns
 
 
-def build_ivf_index(
-    spark: SparkSession, sf_dir: str, idx_table: str, cent_table: str
-) -> None:
-    """Train the quantizer once and persist BOTH halves of an IVF index:
+def ivf_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """(inverted-list table, centroid table) of the persisted IVF index,
+    content-keyed on ``embeddings`` (catalog.persisted_artifact) and
+    built on first use. The build trains the quantizer once and persists
+    BOTH halves:
 
-    - ``idx_table`` (cluster, vec_id, emb, nrm, label): the inverted
-      lists, bucketed by cluster with KM_K buckets, so a probe-time
-      ``cluster IN (...)`` filter prunes non-probed lists at the SCAN
-      (Spark bucket pruning — SelectedBucketsCount in the plan), the
-      storage-level analogue of FAISS reading only nprobe lists. The
-      filter payload (``label``) is INLINED at build — Qdrant/Vespa
-      store payloads alongside postings for exactly this reason — so
-      filtered ANN (ss_filtered_ivf_topk) prunes on the index scan with
-      no query-time join against the embeddings base table
-      (judge VERDICT r10 #3);
-    - ``cent_table`` (j, m): the K trained centroids (fixed-point ints),
+    - the inverted lists (cluster, vec_id, emb, nrm, label), bucketed by
+      cluster with KM_K buckets, so a probe-time ``cluster IN (...)``
+      filter prunes non-probed lists at the SCAN (Spark bucket pruning —
+      SelectedBucketsCount in the plan), the storage-level analogue of
+      FAISS reading only nprobe lists. The filter payload (``label``) is
+      INLINED at build — Qdrant/Vespa store payloads alongside postings
+      for exactly this reason — so filtered ANN (ss_filtered_ivf_topk)
+      prunes on the index scan with no query-time join against the
+      embeddings base table (judge VERDICT r10 #3);
+    - the centroids (j, m): the K trained centroids (fixed-point ints),
       so serving never retrains — probe selection reads K tiny rows.
     """
-    import shutil
-    from urllib.parse import urlparse
 
-    from ..catalog import gc_stale_artifacts, log_artifact_build
+    def write(idx_table: str, cent_table: str) -> None:
+        vfix = _km_fixed_vectors(spark, sf_dir).localCheckpoint(eager=True)
+        centroids = _train_centroids(vfix)
+        assigned = _km_assign(vfix, centroids).select("vec_id", "cluster")
+        (
+            assigned.join(_vectors(spark, sf_dir, ("label",)), "vec_id")
+            .select("cluster", "vec_id", "emb", "nrm", "label")
+            .write.bucketBy(KM_K, "cluster")
+            .sortBy("cluster")
+            .mode("overwrite")
+            .format("parquet")
+            .saveAsTable(idx_table)
+        )
+        _write_centroids(spark, centroids, cent_table)
 
-    log_artifact_build(idx_table, cent_table)
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for tbl in (idx_table, cent_table):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(f"{warehouse}/{tbl}", ignore_errors=True)
-        gc_stale_artifacts(spark, tbl)  # superseded content keys (r6 advice)
-    vfix = _km_fixed_vectors(spark, sf_dir).localCheckpoint(eager=True)
-    centroids = _train_centroids(vfix)
-    assigned = _km_assign(vfix, centroids).select("vec_id", "cluster")
-    (
-        assigned.join(_vectors(spark, sf_dir, ("label",)), "vec_id")
-        .select("cluster", "vec_id", "emb", "nrm", "label")
-        .write.bucketBy(KM_K, "cluster")
-        .sortBy("cluster")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(idx_table)
+    return persisted_artifact(
+        spark, sf_dir, "embeddings", ("ivf_lists", "ivf_centroids"), write,
+        ready=_ivf_index_ready,
     )
+
+
+def _write_centroids(
+    spark: SparkSession, centroids: list, cent_table: str
+) -> None:
     spark.createDataFrame(
         [(j, m) for j, m in centroids], schema="j long, m array<long>"
     ).write.mode("overwrite").format("parquet").saveAsTable(cent_table)
@@ -1201,9 +1193,7 @@ def ss_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-sorted bucket files otherwise). Per-query IO is nprobe/K of
     the corpus either way, not just post-scan join selectivity."""
     ensure_analytics_conf(spark)
-    idx_table, cent_table = ivf_index_names(sf_dir)
-    if not _ivf_index_ready(spark, idx_table, cent_table):
-        build_ivf_index(spark, sf_dir, idx_table, cent_table)
+    idx_table, cent_table = ivf_index(spark, sf_dir)
     centroids = sorted(
         (int(r["j"]), [int(v) for v in r["m"]])
         for r in spark.table(cent_table).collect()
@@ -1683,52 +1673,38 @@ def ss_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- persisted PQ index (compressed serving shape) -------------------------------
 
 
-def pq_index_names(sf_dir: str) -> tuple[str, str]:
-    """(codes table, codebook table) keyed by source dir AND file content
-    fingerprint — same regeneration-proof staleness guard as the IVF and
-    dedup-corpus indexes (catalog.content_key)."""
-    from ..catalog import content_key
+def pq_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """(codes table, codebook table) of the persisted PQ index,
+    content-keyed on ``embeddings`` (catalog.persisted_artifact) and
+    built on first use. The build trains codebooks once and persists
+    BOTH halves:
 
-    h = content_key(sf_dir, "embeddings")
-    return f"pq_codes_{h}", f"pq_codebooks_{h}"
-
-
-def build_pq_index(
-    spark: SparkSession, sf_dir: str, codes_table: str, books_table: str
-) -> None:
-    """Train codebooks once and persist BOTH halves of the PQ index:
-
-    - ``codes_table`` (vec_id, codes): the compressed corpus — PQ_M
-      small ints per vector instead of KM_DIM floats. This is the 16×
-      (64× at byte codes) memory reduction that makes the RAM-resident
-      serving tier possible; at 100 TB the codes table is the ONLY
-      corpus-sized state a query touches.
-    - ``books_table`` (s, j, m): PQ_M × PQ_KS trained centroids — the
+    - the codes (vec_id, codes): the compressed corpus — PQ_M small ints
+      per vector instead of KM_DIM floats. This is the 16× (64× at byte
+      codes) memory reduction that makes the RAM-resident serving tier
+      possible; at 100 TB the codes table is the ONLY corpus-sized state
+      a query touches.
+    - the codebooks (s, j, m): PQ_M × PQ_KS trained centroids — the
       constant-sized half a server loads to build per-query LUTs.
     """
-    import shutil
-    from urllib.parse import urlparse
 
-    from ..catalog import gc_stale_artifacts, log_artifact_build
+    def write(codes_table: str, books_table: str) -> None:
+        vfix = _km_fixed_vectors(spark, sf_dir).localCheckpoint(eager=True)
+        books = _pq_train(vfix)
+        (
+            _pq_encode(vfix, books)
+            .write.mode("overwrite")
+            .format("parquet")
+            .saveAsTable(codes_table)
+        )
+        spark.createDataFrame(
+            [(s, j, m) for s in range(PQ_M) for j, m in books[s]],
+            schema="s int, j long, m array<long>",
+        ).write.mode("overwrite").format("parquet").saveAsTable(books_table)
 
-    log_artifact_build(codes_table, books_table)
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for tbl in (codes_table, books_table):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(f"{warehouse}/{tbl}", ignore_errors=True)
-        gc_stale_artifacts(spark, tbl)  # superseded content keys (r6 advice)
-    vfix = _km_fixed_vectors(spark, sf_dir).localCheckpoint(eager=True)
-    books = _pq_train(vfix)
-    (
-        _pq_encode(vfix, books)
-        .write.mode("overwrite")
-        .format("parquet")
-        .saveAsTable(codes_table)
+    return persisted_artifact(
+        spark, sf_dir, "embeddings", ("pq_codes", "pq_codebooks"), write
     )
-    spark.createDataFrame(
-        [(s, j, m) for s in range(PQ_M) for j, m in books[s]],
-        schema="s int, j long, m array<long>",
-    ).write.mode("overwrite").format("parquet").saveAsTable(books_table)
 
 
 @register(
@@ -1748,12 +1724,7 @@ def ss_pq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     persistence shrinks the per-vector bytes the scan moves at all.
     """
     ensure_analytics_conf(spark)
-    codes_table, books_table = pq_index_names(sf_dir)
-    if not (
-        spark.catalog.tableExists(codes_table)
-        and spark.catalog.tableExists(books_table)
-    ):
-        build_pq_index(spark, sf_dir, codes_table, books_table)
+    codes_table, books_table = pq_index(spark, sf_dir)
     book_rows = spark.table(books_table).collect()
     books: list[list[tuple[int, list[int]]]] = [[] for _ in range(PQ_M)]
     for r in book_rows:
@@ -2069,7 +2040,7 @@ def ss_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     priced by ss_kmeans: one Arrow matmul pass per iteration, O(K·DIM)
     driver merge); the drift report itself is one K-row conditional
     aggregation and a 1-row broadcast total — free. In production the
-    centroids would be the PERSISTED quantizer (build_ivf_index), making
+    centroids would be the PERSISTED quantizer (ivf_index), making
     refresh cost one assignment pass over the new snapshot only.
     """
     v = _km_fixed_vectors(spark, sf_dir).localCheckpoint(eager=True)
@@ -3040,50 +3011,35 @@ def knn_ivf_k(n: int) -> int:
     return max(KM_K, int(math.ceil(math.sqrt(n))))
 
 
-def knn_ivf_index_names(sf_dir: str) -> tuple[str, str]:
-    """(inverted-list table, centroid table) for the GROWN-K graph index —
-    separate artifacts from ivf_index_names' fixed-K serving index (whose
-    K=8 quantizer several fixed-grid oracles replay)."""
-    from ..catalog import content_key
+def knn_ivf_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """(inverted-list table, centroid table) of the GROWN-K graph index —
+    ivf_index's twin with corpus-grown K, separate artifacts from its
+    fixed-K serving index (whose K=8 quantizer several fixed-grid oracles
+    replay). The build trains K = knn_ivf_k(n) centroids (deterministic
+    low-id seeds, KM_ITERS Lloyd rounds on the exact fixed-point grid),
+    persists the inverted lists bucketed by cluster (K buckets) and the
+    centroid relation."""
 
-    h = content_key(sf_dir, "embeddings")
-    return f"knn_ivf_lists_{h}", f"knn_ivf_centroids_{h}"
+    def write(idx_table: str, cent_table: str) -> None:
+        vfix = _km_fixed_vectors(spark, sf_dir).localCheckpoint(eager=True)
+        k = knn_ivf_k(vfix.count())
+        centroids = _train_centroids(vfix, k=k)
+        assigned = _km_assign(vfix, centroids).select("vec_id", "cluster")
+        (
+            assigned.join(_vectors(spark, sf_dir), "vec_id")
+            .select("cluster", "vec_id", "emb", "nrm")
+            .write.bucketBy(k, "cluster")
+            .sortBy("cluster")
+            .mode("overwrite")
+            .format("parquet")
+            .saveAsTable(idx_table)
+        )
+        _write_centroids(spark, centroids, cent_table)
 
-
-def build_knn_ivf_index(
-    spark: SparkSession, sf_dir: str, idx_table: str, cent_table: str
-) -> None:
-    """build_ivf_index's twin with corpus-grown K: train K = knn_ivf_k(n)
-    centroids (deterministic low-id seeds, KM_ITERS Lloyd rounds on the
-    exact fixed-point grid), persist the inverted lists bucketed by
-    cluster (K buckets) and the centroid relation."""
-    import shutil
-    from urllib.parse import urlparse
-
-    from ..catalog import gc_stale_artifacts, log_artifact_build
-
-    log_artifact_build(idx_table, cent_table)
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for tbl in (idx_table, cent_table):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(f"{warehouse}/{tbl}", ignore_errors=True)
-        gc_stale_artifacts(spark, tbl)
-    vfix = _km_fixed_vectors(spark, sf_dir).localCheckpoint(eager=True)
-    k = knn_ivf_k(vfix.count())
-    centroids = _train_centroids(vfix, k=k)
-    assigned = _km_assign(vfix, centroids).select("vec_id", "cluster")
-    (
-        assigned.join(_vectors(spark, sf_dir), "vec_id")
-        .select("cluster", "vec_id", "emb", "nrm")
-        .write.bucketBy(k, "cluster")
-        .sortBy("cluster")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(idx_table)
+    return persisted_artifact(
+        spark, sf_dir, "embeddings", ("knn_ivf_lists", "knn_ivf_centroids"),
+        write,
     )
-    spark.createDataFrame(
-        [(j, m) for j, m in centroids], schema="j long, m array<long>"
-    ).write.mode("overwrite").format("parquet").saveAsTable(cent_table)
 
 
 def _knn_ivf_oracle(k: int) -> str:
@@ -3137,7 +3093,7 @@ def ss_knn_graph_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same output contract as ss_knn_graph (a_id, nbr_rank, b_id, cosine).
     The index is the GROWN-K build (K = max(KM_K, ⌈√n⌉), see
-    build_knn_ivf_index): each inverted list holds ~√n vectors, each
+    knn_ivf_index): each inverted list holds ~√n vectors, each
     query scores Θ(√n·nprobe) candidates, and the whole graph is
     Θ(n^1.5·nprobe) — actually sub-quadratic at every scale, not just
     "sub-quadratic once someone raises K" (judge VERDICT r8 #5). The
@@ -3163,9 +3119,6 @@ def ss_knn_graph_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _knn_graph_ivf_topk(spark, sf_dir, KNN_GRAPH_K)
 
 
-_KNN_IVF_GRAPH_CACHE: dict = {}
-
-
 def _knn_graph_ivf_topk(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     """The IVF-restricted kNN-graph kernel at degree ``k`` (see
     ss_knn_graph_ivf for the plan-shape story). ``k`` parameterizes only
@@ -3173,27 +3126,23 @@ def _knn_graph_ivf_topk(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     assignment, list scoring, and comparators are identical, so
     _knn_ivf_oracle(k) replays it exactly.
 
-    Materialized once per (session, corpus, k) — the IVF-built graph is
-    the shared input of the NSW index build, the NN-Descent refine, and
-    the convergence loop, which otherwise each re-ran the probe + list
-    scoring inside one gate/bench session (the _exact_knn16 discipline
-    applied to the approximate kernel)."""
+    Materialized once per (session, corpus content, k) — the IVF-built
+    graph is the shared input of the NSW index build, the NN-Descent
+    refine, and the convergence loop, which otherwise each re-ran the
+    probe + list scoring inside one gate/bench session."""
+    return session_artifact(
+        spark, sf_dir, "embeddings", f"knn_ivf_graph_k{k}",
+        lambda: _build_knn_graph_ivf(spark, sf_dir, k),
+    )
+
+
+def _build_knn_graph_ivf(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    cache_key = (spark.sparkContext.applicationId, sf_dir, k)
-    cached = _KNN_IVF_GRAPH_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
-
     keep_margin = max(KNN_LOCAL_MARGIN, k + 4)
     ensure_analytics_conf(spark)
-    idx_table, cent_table = knn_ivf_index_names(sf_dir)
-    if not (
-        spark.catalog.tableExists(idx_table)
-        and spark.catalog.tableExists(cent_table)
-    ):
-        build_knn_ivf_index(spark, sf_dir, idx_table, cent_table)
+    idx_table, cent_table = knn_ivf_index(spark, sf_dir)
     centroids = sorted(
         (int(r["j"]), [int(v) for v in r["m"]])
         for r in spark.table(cent_table).collect()
@@ -3263,7 +3212,7 @@ def _knn_graph_ivf_topk(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     )
     raw = F.col("cosine_raw")
     w = Window.partitionBy("a_id").orderBy(F.desc("cosine"), F.asc("b_id"))
-    out = (
+    return (
         scored.select(
             "a_id",
             "b_id",
@@ -3277,8 +3226,6 @@ def _knn_graph_ivf_topk(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
         .orderBy("a_id", "nbr_rank")
         .localCheckpoint(eager=True)
     )
-    _KNN_IVF_GRAPH_CACHE[cache_key] = out
-    return out
 
 
 # --- power iteration (top principal direction) ------------------------------------
@@ -3849,9 +3796,7 @@ def ss_cluster_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     with storage and shuffles K rows), one scalar total broadcast back.
     """
     ensure_analytics_conf(spark)
-    idx_table, cent_table = ivf_index_names(sf_dir)
-    if not _ivf_index_ready(spark, idx_table, cent_table):
-        build_ivf_index(spark, sf_dir, idx_table, cent_table)
+    idx_table, cent_table = ivf_index(spark, sf_dir)
     sizes = (
         spark.table(idx_table)
         .groupBy("cluster")
@@ -4091,7 +4036,7 @@ def ss_hamming_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "ivf", "index-shape", "diagnostics"),
 )
 def ss_grown_ivf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shape report of the GROWN-K kNN-graph index (build_knn_ivf_index):
+    """Shape report of the GROWN-K kNN-graph index (knn_ivf_index):
     the trained K = max(KM_K, ⌈√n⌉), how many inverted lists are
     non-empty, the min/max list size, and the indexed vector count — the
     numbers that certify the Θ(n^1.5·nprobe) candidate bound actually
@@ -4106,12 +4051,7 @@ def ss_grown_ivf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     five-scalar aggregate. The K-row list relation is the only state.
     """
     ensure_analytics_conf(spark)
-    idx_table, cent_table = knn_ivf_index_names(sf_dir)
-    if not (
-        spark.catalog.tableExists(idx_table)
-        and spark.catalog.tableExists(cent_table)
-    ):
-        build_knn_ivf_index(spark, sf_dir, idx_table, cent_table)
+    idx_table, cent_table = knn_ivf_index(spark, sf_dir)
     n = load_table(spark, sf_dir, "embeddings").count()
     k = knn_ivf_k(n)
     ls = (
@@ -4248,7 +4188,7 @@ def ss_filtered_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     so scoring cost is filter-selectivity × nprobe/K of the corpus —
     post-filtering top-k instead silently returns < k rows for selective
     filters. The filter attribute is a column OF the index (inlined at
-    build by build_ivf_index, as Vespa/Qdrant store payloads alongside
+    build by ivf_index, as Vespa/Qdrant store payloads alongside
     postings — judge VERDICT r10 #3), so the predicate prunes at the
     index scan and the query path touches ONLY idx_table + cent_table:
     zero reads of the embeddings base table (plan-asserted in
@@ -4264,9 +4204,7 @@ def ss_filtered_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is value-checked.
     """
     ensure_analytics_conf(spark)
-    idx_table, cent_table = ivf_index_names(sf_dir)
-    if not _ivf_index_ready(spark, idx_table, cent_table):
-        build_ivf_index(spark, sf_dir, idx_table, cent_table)
+    idx_table, cent_table = ivf_index(spark, sf_dir)
     centroids = sorted(
         (int(r["j"]), [int(v) for v in r["m"]])
         for r in spark.table(cent_table).collect()
@@ -4514,53 +4452,45 @@ def _cos_e6(emb_a, emb_b, nrm_a, nrm_b) -> F.Column:
     return F.round(_cosine(emb_a, emb_b, nrm_a, nrm_b) * 1e6).cast("long")
 
 
-_NSW_INDEX_CACHE: dict = {}
-_EXACT_KNN16_CACHE: dict = {}
-
-
 def _exact_knn16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact directed degree-16 kNN graph (a_id, nbr_rank, b_id,
     cosine), computed by the priced O(n²) block kernel ONCE per
-    (session, corpus) and checkpointed — it is both the raw material of
-    the exact NSW index (_nsw_index symmetrizes it) and the ground-truth
-    baseline of the index-quality reports (ss_nsw_nn_descent_refine), so
-    the quadratic is paid once, not per consumer."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EXACT_KNN16_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = _knn_graph_topk(
-        spark, sf_dir, NSW_GRAPH_K, max(KNN_LOCAL_MARGIN, NSW_GRAPH_K + 4)
-    ).localCheckpoint(eager=True)
-    _EXACT_KNN16_CACHE[key] = df
-    return df
-
-
-def _nsw_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The NSW serving index: degree-16 exact kNN edges, symmetrized,
-    neighbor vectors inlined, materialized once per (session, corpus) and
-    SHARED by every search op — a serving system holds one index for all
-    queries, it does not rebuild per request. The eager localCheckpoint
-    pins the materialization; the cache key is (applicationId, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _NSW_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    v = _vectors(spark, sf_dir)
-    directed = _exact_knn16(spark, sf_dir).select("a_id", "b_id")
-    undirected = directed.unionByName(
-        directed.select(
-            F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id")
-        )
-    ).distinct()
-    vb = v.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("emb").alias("b_emb"),
-        F.col("nrm").alias("b_nrm"),
+    (session, corpus content) and checkpointed — it is both the raw
+    material of the exact NSW index and the ground-truth baseline of the
+    index-quality reports (ss_nsw_nn_descent_refine), so the quadratic is
+    paid once, not per consumer."""
+    return session_artifact(
+        spark, sf_dir, "embeddings", "exact_knn16",
+        lambda: _knn_graph_topk(
+            spark, sf_dir, NSW_GRAPH_K, max(KNN_LOCAL_MARGIN, NSW_GRAPH_K + 4)
+        ).localCheckpoint(eager=True),
     )
-    edges_vec = undirected.join(vb, "b_id").localCheckpoint(eager=True)
-    _NSW_INDEX_CACHE[key] = edges_vec
-    return edges_vec
+
+
+def _nsw_index(
+    spark: SparkSession, sf_dir: str, name: str, directed: DataFrame
+) -> DataFrame:
+    """An NSW serving index over a ``directed`` degree-16 kNN graph
+    (exact: ``_exact_knn16``; IVF-bootstrapped: ``_knn_graph_ivf_topk``):
+    edges symmetrized, neighbor vectors inlined, materialized once per
+    (session, corpus content) under ``name`` and SHARED by every search
+    op — a serving system holds one index for all queries, it does not
+    rebuild per request. The eager localCheckpoint pins the
+    materialization."""
+
+    def build() -> DataFrame:
+        d = directed.select("a_id", "b_id")
+        undirected = d.unionByName(
+            d.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id"))
+        ).distinct()
+        vb = _vectors(spark, sf_dir).select(
+            F.col("vec_id").alias("b_id"),
+            F.col("emb").alias("b_emb"),
+            F.col("nrm").alias("b_nrm"),
+        )
+        return undirected.join(vb, "b_id").localCheckpoint(eager=True)
+
+    return session_artifact(spark, sf_dir, "embeddings", name, build)
 
 
 def _nsw_entry_rows(v: DataFrame, m: int, stride: int) -> DataFrame:
@@ -4882,7 +4812,9 @@ def ss_nsw_greedy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ensure_analytics_conf(spark)
     v = _vectors(spark, sf_dir)
-    edges_vec = _nsw_index(spark, sf_dir)
+    edges_vec = _nsw_index(
+        spark, sf_dir, "nsw_index_exact", _exact_knn16(spark, sf_dir)
+    )
 
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
@@ -5219,7 +5151,13 @@ def ss_nsw_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncates to a LogicalRDD per round) while the whole walk runs as
     ONE Spark job.
     """
-    return _nsw_beam_search_over(spark, sf_dir, _nsw_index(spark, sf_dir))
+    return _nsw_beam_search_over(
+        spark,
+        sf_dir,
+        _nsw_index(
+            spark, sf_dir, "nsw_index_exact", _exact_knn16(spark, sf_dir)
+        ),
+    )
 
 
 def _nsw_beam_search_over(
@@ -5388,48 +5326,18 @@ def _nsw_beam_report(v: DataFrame, q: DataFrame, final: DataFrame) -> DataFrame:
 
 # --- NSW over the IVF-bootstrapped index (judge VERDICT r13 #4) -----------------
 #
-# _nsw_index builds its degree-16 graph with the EXACT block-pair kernel —
+# ss_nsw_beam_search's degree-16 graph comes from the EXACT block-pair kernel —
 # O(n²) BLAS, deliberately priced as ground truth (sf1 ratio 7.4). This is
 # the index you'd actually BUILD at 100 TB: the same degree-16 graph
 # bootstrapped from the IVF-restricted candidate pairs (_knn_graph_ivf_topk,
 # Θ(n^1.5·nprobe) candidates), searched by the identical ef-search kernel,
 # value-oracled end to end (the oracle replays the corpus-grown quantizer,
 # the probe restriction, AND the walk), with the same brute-force top-1
-# recall self-check priced in the output.
-
-_NSW_IVF_INDEX_CACHE: dict = {}
-
-
-def _nsw_index_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The scale-path NSW serving index: degree-16 IVF-restricted kNN
-    edges, symmetrized, neighbor vectors inlined, materialized once per
-    (session, corpus) — _nsw_index with the exact kernel swapped for the
-    sub-quadratic bootstrap. Reference: the HNSW construction literature
-    builds from approximate neighbors too (Malkov & Yashunin 2018 §4);
-    NN-Descent-style refinement would tighten it further but the probe
-    restriction already recovers the planted structure (recall rows are
-    part of the registered output, not a side claim)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _NSW_IVF_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    v = _vectors(spark, sf_dir)
-    directed = _knn_graph_ivf_topk(spark, sf_dir, NSW_GRAPH_K).select(
-        "a_id", "b_id"
-    )
-    undirected = directed.unionByName(
-        directed.select(
-            F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id")
-        )
-    ).distinct()
-    vb = v.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("emb").alias("b_emb"),
-        F.col("nrm").alias("b_nrm"),
-    )
-    edges_vec = undirected.join(vb, "b_id").localCheckpoint(eager=True)
-    _NSW_IVF_INDEX_CACHE[key] = edges_vec
-    return edges_vec
+# recall self-check priced in the output. The HNSW construction literature
+# builds from approximate neighbors too (Malkov & Yashunin 2018 §4);
+# NN-Descent-style refinement would tighten it further, but the probe
+# restriction already recovers the planted structure (recall rows are part
+# of the registered output, not a side claim).
 
 
 @register(
@@ -5456,7 +5364,10 @@ def ss_nsw_ivf_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered as the priced ground truth; this one is the serving
     recipe.
     """
-    return _nsw_beam_search_over(spark, sf_dir, _nsw_index_ivf(spark, sf_dir))
+    directed = _knn_graph_ivf_topk(spark, sf_dir, NSW_GRAPH_K)
+    return _nsw_beam_search_over(
+        spark, sf_dir, _nsw_index(spark, sf_dir, "nsw_index_ivf", directed)
+    )
 
 
 # --- incremental NSW index maintenance (judge VERDICT r13 #6b) -------------------
@@ -5472,8 +5383,6 @@ def ss_nsw_ivf_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 NSW_UPSERT_MOD = 11
 NSW_UPSERT_REM = 7
 NSW_UPSERT_BATCH = 48
-
-_NSW_UPSERT_BASE_CACHE: dict = {}
 
 
 def _nsw_upsert_batch_ids(spark: SparkSession, sf_dir: str) -> list[int]:
@@ -5585,17 +5494,16 @@ def ss_nsw_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_b = F.col("vec_id").isin(b_ids)
     margin = max(KNN_LOCAL_MARGIN, NSW_GRAPH_K + 4)
     # the persisted index stand-in: directed top-16 within C, derived
-    # once per (session, corpus) and checkpointed — the maintenance job
-    # READS the index it maintains (the _nsw_index caching discipline),
-    # so the per-call cost is the incremental insert, not a rebuild
-    key = (spark.sparkContext.applicationId, sf_dir)
-    base = _NSW_UPSERT_BASE_CACHE.get(key)
-    if base is None:
-        base = _knn_graph_topk(
+    # once per (session, corpus content) and checkpointed — the
+    # maintenance job READS the index it maintains, so the per-call cost
+    # is the incremental insert, not a rebuild
+    base = session_artifact(
+        spark, sf_dir, "embeddings", "nsw_upsert_base",
+        lambda: _knn_graph_topk(
             spark, sf_dir, NSW_GRAPH_K, margin,
             query_filter=~in_b, corpus_filter=~in_b,
-        ).localCheckpoint(eager=True)
-        _NSW_UPSERT_BASE_CACHE[key] = base
+        ).localCheckpoint(eager=True),
+    )
     # batch out-edges: exact top-16 of each b over the full corpus
     batch_out = _knn_graph_topk(
         spark, sf_dir, NSW_GRAPH_K, margin, query_filter=in_b
@@ -5708,10 +5616,10 @@ def _nn_descent_round(
 
     ``vec_b`` (optional) is a reusable SparkContext broadcast of the
     whole vector set — (sorted int64 ids, float64 matrix) — built ONCE
-    per query by ``_nsw_vectors_broadcast`` and shared by every round:
-    the scorer then looks embeddings up inside the Arrow kernel instead
-    of paying two BroadcastHashJoin builds per round and shipping two
-    emb columns through the Python boundary per candidate. The matrix
+    per session and corpus by ``_nsw_vectors_broadcast`` and shared by
+    every round: the scorer then looks embeddings up inside the Arrow
+    kernel instead of paying two BroadcastHashJoin builds per round and
+    shipping two emb columns through the Python boundary per candidate. The matrix
     rows are the identical float64 values the join path would attach,
     and the einsum math is unchanged, so scores are bit-identical.
     Size-gated by the caller (NSW_BCAST_MAX_VECS); None falls back to
@@ -5813,7 +5721,7 @@ def _nn_descent_round(
             )
 
     # Broadcast-vector variant of the scorer: embeddings come from the
-    # once-per-query TorrentBroadcast (reused across every round's jobs)
+    # shared session TorrentBroadcast (reused across every round's jobs)
     # via a sorted-id searchsorted lookup; the joins and the per-pair
     # emb payload disappear. M rows are the same float64 arrays the
     # joins would attach, the einsum is unchanged — bit-identical.
@@ -6045,11 +5953,11 @@ NSW_BCAST_MAX_EDGES = int(
 
 # Broadcast the WHOLE vector set into the NN-Descent scorer when the
 # corpus holds at most this many vectors (~128 MB at the cap for 64-dim
-# float64). One TorrentBroadcast is built per query and reused by every
-# round's jobs — the per-round BroadcastHashJoin builds of the two
-# vector sides (rebuilt each round: broadcast exchanges are not reused
-# across jobs) and the per-candidate emb columns through the Arrow
-# boundary both disappear. Above the cap the scorer keeps the
+# float64). One TorrentBroadcast is built per (session, corpus content)
+# and reused by every query and every round's jobs — the per-round
+# BroadcastHashJoin builds of the two vector sides (rebuilt each round:
+# broadcast exchanges are not reused across jobs) and the per-candidate
+# emb columns through the Arrow boundary both disappear. Above the cap the scorer keeps the
 # vector-attach joins (the 100 TB path).
 NSW_BCAST_MAX_VECS = int(
     os.environ.get("SPARK_GRAFT_NSW_BCAST_MAX_VECS", str(250_000))
@@ -6062,21 +5970,23 @@ def _nsw_vectors_broadcast(spark: SparkSession, sf_dir: str, n_vecs: int):
     The matrix rows are the exact float64 emb arrays `_vectors` serves
     and the norms are `_vectors`' own nrm column (the JVM fold's
     values, NOT recomputed), so every lookup consumer operates on
-    bit-identical operands to its join-path twin."""
+    bit-identical operands to its join-path twin. Built once per
+    (session, corpus content) and shared by every walk and NN-Descent
+    query; a superseded one is destroyed (catalog.session_artifact)."""
     if n_vecs > NSW_BCAST_MAX_VECS:
         return None
-    import numpy as np
 
-    rows = (
-        _vectors(spark, sf_dir)
-        .select("vec_id", "emb", "nrm")
-        .toPandas()
-    )
-    order = np.argsort(rows["vec_id"].to_numpy(dtype="int64"))
-    ids = rows["vec_id"].to_numpy(dtype="int64")[order]
-    M = np.array(list(rows["emb"]), dtype="float64")[order]
-    nrm = rows["nrm"].to_numpy(dtype="float64")[order]
-    return spark.sparkContext.broadcast((ids, M, nrm))
+    def build():
+        import numpy as np
+
+        rows = _vectors(spark, sf_dir).select("vec_id", "emb", "nrm").toPandas()
+        order = np.argsort(rows["vec_id"].to_numpy(dtype="int64"))
+        ids = rows["vec_id"].to_numpy(dtype="int64")[order]
+        M = np.array(list(rows["emb"]), dtype="float64")[order]
+        nrm = rows["nrm"].to_numpy(dtype="float64")[order]
+        return spark.sparkContext.broadcast((ids, M, nrm))
+
+    return session_artifact(spark, sf_dir, "embeddings", "nsw_vectors", build)
 
 
 def _nn_descent_converge_oracle() -> str:
@@ -6349,8 +6259,6 @@ NSW_DELETE_BATCH = 48
 # hot-cluster batch drives pivot-adjacent nodes past it.
 NSW_DELETE_MARGIN = 8
 
-_NSW_DELETE_STORED_CACHE: dict = {}
-
 
 def _nsw_delete_batch_ids(spark: SparkSession, sf_dir: str) -> list[int]:
     """The tombstoned vec_ids (≤ NSW_DELETE_BATCH driver scalars — the
@@ -6505,13 +6413,12 @@ def ss_nsw_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_analytics_conf(spark)
     k, m = NSW_GRAPH_K, NSW_DELETE_MARGIN
     b_ids = _nsw_delete_batch_ids(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    stored = _NSW_DELETE_STORED_CACHE.get(key)
-    if stored is None:
-        stored = _knn_graph_topk(
+    stored = session_artifact(
+        spark, sf_dir, "embeddings", "nsw_delete_stored",
+        lambda: _knn_graph_topk(
             spark, sf_dir, k + m, max(KNN_LOCAL_MARGIN, k + m + 4)
-        ).localCheckpoint(eager=True)
-        _NSW_DELETE_STORED_CACHE[key] = stored
+        ).localCheckpoint(eager=True),
+    )
     in_b_a = F.col("a_id").isin(b_ids)
     in_b_b = F.col("b_id").isin(b_ids)
     surv = stored.filter(~in_b_a)

@@ -13,7 +13,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..catalog import load_table
+from ..catalog import load_table, persisted_artifact
 from ..session import ensure_analytics_conf
 from .registry import register
 
@@ -1450,22 +1450,6 @@ def fx_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
 MV_CUTOFF = "2024-01-21"  # base/delta split: ~2/3 of the event-time range
 
 
-def _mv_table(sf_dir: str) -> str:
-    """Stored base-aggregate table keyed by source dir AND a content
-    fingerprint of the events parquet (file names, sizes, mtimes).
-
-    Keying on the path alone is a staleness bug: if the parquet under the
-    same path is regenerated (this repo's round history records exactly
-    that), a path-keyed MV silently merges stale partials and returns
-    wrong totals. Folding the fingerprint into the name makes regeneration
-    produce a different table, forcing a rebuild — the local-mode analogue
-    of a snapshot-id check against a table format's metadata. The same
-    guard protects every persisted artifact (catalog.content_key)."""
-    from ..catalog import content_key
-
-    return f"mv_user_totals_{content_key(sf_dir, 'events')}"
-
-
 @register(
     "fx_incremental_agg_refresh",
     oracle="""
@@ -1494,24 +1478,16 @@ def fx_incremental_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop persists the merged result back via the MERGE upsert
     (etl.warehouse.merge_upsert_partitioned) — the same algebra, so the
     returned relation is exactly what would be stored.
+
+    The stored table is content-keyed on the events parquet
+    (catalog.persisted_artifact): regenerating the parquet under the same
+    path mints a new name and forces a rebuild, where a path-keyed MV
+    would silently merge stale partials into wrong totals.
     """
     e = _t(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("bigint")
-    tbl = _mv_table(sf_dir)
-    if not spark.catalog.tableExists(tbl):
-        # a previous session's managed-table LOCATION can outlive the
-        # in-memory catalog entry; clear both or saveAsTable fails with
-        # LOCATION_ALREADY_EXISTS (same guard as build_ivf_index)
-        import shutil
-        from urllib.parse import urlparse
 
-        from ..catalog import gc_stale_artifacts, log_artifact_build
-
-        log_artifact_build(tbl)
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(f"{warehouse}/{tbl}", ignore_errors=True)
-        gc_stale_artifacts(spark, tbl)  # superseded content keys (r6 advice)
+    def write(tbl: str) -> None:
         (
             e.filter(F.col("ts") < MV_CUTOFF)
             .groupBy("user_id")
@@ -1520,6 +1496,10 @@ def fx_incremental_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             .format("parquet")
             .saveAsTable(tbl)
         )
+
+    (tbl,) = persisted_artifact(
+        spark, sf_dir, "events", ("mv_user_totals",), write
+    )
     base = spark.table(tbl)
     delta = (
         e.filter(F.col("ts") >= MV_CUTOFF)

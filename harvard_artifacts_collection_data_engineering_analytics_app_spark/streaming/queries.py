@@ -413,7 +413,7 @@ def st_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas on the stream — stateless, so fully streaming-legal),
     band-joined against the PERSISTED bucketed corpus index
     (stream-static join; the static side is the bucketed table
-    build_corpus_dedup_index maintains), verified with exact Jaccard
+    corpus_dedup_index maintains), verified with exact Jaccard
     against the stored shingle table, and reduced to distinct verified
     pairs by one streaming aggregation (complete mode). This is the shape
     of a production ingestion pipeline: corpus state lives in tables, the
@@ -439,20 +439,12 @@ def st_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         _incoming_pred,
         _jaccard,
         _minhash_relation,
-        build_corpus_dedup_index,
-        corpus_index_names,
+        corpus_dedup_index,
     )
     from .pipelines import read_documents_stream, run_to_memory
 
     ensure_analytics_conf(spark)
-    band_table, sig_table = corpus_index_names(sf_dir)
-    if not (
-        spark.catalog.tableExists(band_table)
-        and spark.catalog.tableExists(sig_table)
-    ):
-        build_corpus_dedup_index(
-            spark, sf_dir, band_table=band_table, sig_table=sig_table
-        )
+    band_table, sig_table = corpus_dedup_index(spark, sf_dir)
     incoming = read_documents_stream(spark, sf_dir).filter(_incoming_pred())
     # carry the shingle array through the band explode: joining candidates
     # back to the signatures would be a stream-stream join (needs

@@ -199,11 +199,7 @@ def test_incremental_index_scan_has_no_exchange(spark, oracle_sf_dir):
         formatted_plan,
     )
 
-    band_table, sig_table = D.corpus_index_names(oracle_sf_dir)
-    if not spark.catalog.tableExists(band_table):
-        D.build_corpus_dedup_index(
-            spark, oracle_sf_dir, band_table=band_table, sig_table=sig_table
-        )
+    band_table, _ = D.corpus_dedup_index(spark, oracle_sf_dir)
     bi = D._band_rows(
         D._minhash_relation(
             D._docs(spark, oracle_sf_dir).filter(D._incoming_pred())

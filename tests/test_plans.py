@@ -169,9 +169,7 @@ def test_ivf_persisted_probe_prunes_buckets(spark, oracle_sf_dir):
         similarity as S,
     )
 
-    idx_table, cent_table = S.ivf_index_names(oracle_sf_dir)
-    if not spark.catalog.tableExists(idx_table):
-        S.build_ivf_index(spark, oracle_sf_dir, idx_table, cent_table)
+    idx_table, _ = S.ivf_index(spark, oracle_sf_dir)
     import pyspark.sql.functions as F
 
     # autoBucketedScan disables bucketed reading (and with it bucket
@@ -212,9 +210,7 @@ def test_ivf_index_inlines_label_payload(spark, oracle_sf_dir):
         similarity as S,
     )
 
-    idx_table, cent_table = S.ivf_index_names(oracle_sf_dir)
-    if not S._ivf_index_ready(spark, idx_table, cent_table):
-        S.build_ivf_index(spark, oracle_sf_dir, idx_table, cent_table)
+    idx_table, cent_table = S.ivf_index(spark, oracle_sf_dir)
     assert "label" in spark.table(idx_table).columns
     assert S._ivf_index_ready(spark, idx_table, cent_table)
     # a v1 index (no label column) must read as not-ready → rebuild

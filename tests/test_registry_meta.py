@@ -97,3 +97,20 @@ def test_names_are_unique_and_snake_case():
     names = list(registry.all_specs())
     assert len(names) == len(set(names))
     assert all(n.replace("_", "").isalnum() and n == n.lower() for n in names)
+
+
+def test_only_catalog_reads_the_application_id():
+    """Session-scoped caches go through ``catalog.session_artifact``,
+    which keys them by the source's content. A module that reads
+    ``applicationId`` is building its own session cache beside it —
+    keyed by path, the staleness class ``catalog.content_key`` exists to
+    prevent."""
+    import pathlib
+
+    pkg = pathlib.Path(registry.__file__).resolve().parents[1]
+    readers = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if "applicationId" in p.read_text()
+    )
+    assert readers == ["catalog.py"], readers

@@ -128,8 +128,7 @@ def test_knn_graph_ivf_is_subquadratic_with_useful_recall(spark, sf_dir):
         KNN_IVF_NPROBE,
         _km_fixed_vectors,
         _probe_all_vectors,
-        build_knn_ivf_index,
-        knn_ivf_index_names,
+        knn_ivf_index,
         knn_ivf_k,
         ss_knn_graph,
         ss_knn_graph_ivf,
@@ -151,9 +150,7 @@ def test_knn_graph_ivf_is_subquadratic_with_useful_recall(spark, sf_dir):
         "right lists"
     )
 
-    idx_table, cent_table = knn_ivf_index_names(sf_dir)
-    if not spark.catalog.tableExists(idx_table):
-        build_knn_ivf_index(spark, sf_dir, idx_table, cent_table)
+    idx_table, cent_table = knn_ivf_index(spark, sf_dir)
     centroids = sorted(
         (int(r["j"]), [int(v) for v in r["m"]])
         for r in spark.table(cent_table).collect()

@@ -8,7 +8,7 @@ import pytest
 
 def test_knn_ivf_k_matches_duckdb():
     """The grown-K formula (max(KM_K, ceil(sqrt(n)))) must evaluate
-    identically in Python (build_knn_ivf_index) and DuckDB (the oracle's
+    identically in Python (knn_ivf_index) and DuckDB (the oracle's
     KNN_IVF_K_EXPR) for every plausible corpus size — a one-off float
     divergence would train K lists on one engine and replay K±1 on the
     other, failing every downstream value check. Exercises perfect
