@@ -13,6 +13,13 @@ can run the same flow with:
 
 `collect` uses the synthetic fetcher by default (no network in this
 container); pass a real fetcher programmatically via :func:`collect`.
+
+The store is read with the declared schemas (``schemas.ARTIFACT_*``), so
+no read launches a schema-inference job. E3 registers the three store
+tables as temp views once per store version: a repeat query reuses them,
+while an ``insert`` (new files), a new session or another workdir makes
+the next query register them again (:func:`register_views`). Every
+stdout line of the CLI is one JSON object.
 """
 
 from __future__ import annotations
@@ -23,13 +30,19 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import catalog
 from .etl import artifacts as A
 from .queries import artifact_templates as AT
-from .schemas import RAW_ARTIFACT
+from .schemas import ARTIFACT_COLORS, ARTIFACT_MEDIA, ARTIFACT_METADATA, RAW_ARTIFACT
 from .session import get_spark
 from .sources import rest
 
-ARTIFACT_TABLES = ("artifactmetadata", "artifactmedia", "artifactcolors")
+ARTIFACT_SCHEMAS = {
+    "artifactmetadata": ARTIFACT_METADATA,
+    "artifactmedia": ARTIFACT_MEDIA,
+    "artifactcolors": ARTIFACT_COLORS,
+}
+ARTIFACT_TABLES = tuple(ARTIFACT_SCHEMAS)
 
 
 def collect(
@@ -55,22 +68,44 @@ def insert(spark: SparkSession, workdir: str) -> dict[str, int]:
     re-read of the store would return.
     """
     raw = spark.read.schema(RAW_ARTIFACT).parquet(f"{workdir}/raw")
-    stored = f"{workdir}/artifactmetadata"
-    append = os.path.exists(stored)
+    append = os.path.exists(f"{workdir}/artifactmetadata")
     if append:
-        old_ids = spark.read.parquet(stored).select("id")
+        old_ids = read_table(spark, workdir, "artifactmetadata").select("id")
         raw = raw.join(old_ids, "id", "left_anti").localCheckpoint(eager=True)
     counts: dict[str, int] = {}
     for name, df in A.transform_all(raw).items():
         path = f"{workdir}/{name}"
         df.write.mode("append" if append else "overwrite").parquet(path)
-        counts[name] = spark.read.parquet(path).count()
+        counts[name] = read_table(spark, workdir, name).count()
     return counts
 
 
+def read_table(spark: SparkSession, workdir: str, name: str) -> DataFrame:
+    """One store table, read with its declared schema (no inference job)."""
+    return spark.read.schema(ARTIFACT_SCHEMAS[name]).parquet(f"{workdir}/{name}")
+
+
+# (session, catalog.session_version of the store) the temp views were last
+# registered for; temp views belong to one SparkSession, so a session made
+# by ``newSession()`` (same application) registers its own
+_registered: tuple[SparkSession, tuple[str, str]] | None = None
+
+
 def register_views(spark: SparkSession, workdir: str) -> None:
+    """Register the three store tables as temp views, once per store
+    version: a no-op while the session and every file of the three
+    tables are the ones the views were registered for. An ``insert``
+    appends files and so changes the version; the next call re-lists
+    the store and registers the views again."""
+    global _registered
+    version = catalog.session_version(
+        spark, *(f"{workdir}/{name}" for name in ARTIFACT_TABLES)
+    )
+    if _registered == (spark, version):
+        return
     for name in ARTIFACT_TABLES:
-        spark.read.parquet(f"{workdir}/{name}").createOrReplaceTempView(name)
+        read_table(spark, workdir, name).createOrReplaceTempView(name)
+    _registered = (spark, version)
 
 
 def query(spark: SparkSession, workdir: str, name: str) -> DataFrame:

@@ -1,8 +1,12 @@
-"""Table catalog: parquet loaders and temp-view registration.
+"""Table catalog: the parquet loader and the content keys of source files.
 
 Replaces the reference's "connect to TiDB and name tables in SQL strings"
 pattern (``harvard_artifacts_app.py:315-352``) with Spark's catalog. Tables
 are columnar parquet; scans get predicate pushdown + column pruning for free.
+``load_table`` scans one driver table; derived artifacts (persisted indexes,
+session checkpoints and broadcasts) are keyed by the content of their source
+files (``content_key``, ``session_version``). The app's three store tables
+are registered as temp views by ``app.register_views``.
 
 On a 100 TB deployment these would be partitioned/bucketed external tables
 (see ``SCALE.md``); the loader API is path-based so the same code serves
@@ -11,6 +15,8 @@ local testdata and a production warehouse.
 
 from __future__ import annotations
 
+import hashlib
+import os
 from typing import Any, Callable
 
 import pyspark.sql.functions as F
@@ -33,10 +39,8 @@ def content_key(sf_dir: str, table: str) -> str:
     simply misses the catalog lookup and the artifact rebuilds — the
     local-mode analogue of checking a lakehouse table's snapshot id.
 
-    A MISSING source path raises rather than silently degrading to a
-    path-only hash (round-6 advice, LOW): a typo'd table name or
-    not-yet-generated dataset would otherwise quietly revert to exactly
-    the path-keyed staleness behavior this function exists to prevent.
+    A MISSING source path raises (``files_fingerprint``) rather than
+    silently degrading to a path-only hash (round-6 advice, LOW).
 
     Key layout: first 4 hex = SOURCE-DIR tag (abspath of ``sf_dir``),
     last 8 hex = content fingerprint. ``gc_stale_artifacts`` scopes its
@@ -53,26 +57,52 @@ def content_key(sf_dir: str, table: str) -> str:
     ``persisted_artifact`` and ``session_artifact`` are the only callers
     that should need this key.
     """
-    import hashlib
-    import os
-
     src = os.path.join(sf_dir, f"{table}.parquet")
-    parts = [table]
-    if os.path.isdir(src):
-        for name in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, name))
-            parts.append(f"{name}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    else:
-        raise FileNotFoundError(
-            f"content_key: source table does not exist: {src} — a "
-            "path-only fingerprint would silently re-enable path-keyed "
-            "staleness for persisted artifacts"
-        )
+    parts = [table, *files_fingerprint(src)]
     tag = hashlib.md5(os.path.abspath(sf_dir).rstrip("/").encode()).hexdigest()[:4]
     return tag + hashlib.md5("|".join(parts).encode()).hexdigest()[:8]
+
+
+def files_fingerprint(path: str) -> list[str]:
+    """``name:size:mtime_ns`` of every file in the directory ``path``
+    (sorted by name), or ``size:mtime_ns`` of ``path`` itself when it is
+    a file: the content fingerprint ``content_key`` and
+    ``session_version`` hash. An append adds names and a rewrite changes
+    sizes or mtimes, so either changes the fingerprint.
+
+    A MISSING path raises rather than silently degrading to a path-only
+    fingerprint: a typo'd table name or not-yet-generated dataset would
+    otherwise quietly revert to exactly the path-keyed staleness this
+    fingerprint exists to prevent."""
+    if os.path.isdir(path):
+        parts = []
+        for name in sorted(os.listdir(path)):
+            st = os.stat(os.path.join(path, name))
+            parts.append(f"{name}:{st.st_size}:{st.st_mtime_ns}")
+        return parts
+    if os.path.exists(path):
+        st = os.stat(path)
+        return [f"{st.st_size}:{st.st_mtime_ns}"]
+    raise FileNotFoundError(
+        f"source table does not exist: {path} — a path-only fingerprint "
+        "would silently re-enable path-keyed staleness for derived artifacts"
+    )
+
+
+def session_version(spark: SparkSession, *paths: str) -> tuple[str, str]:
+    """(applicationId, fingerprint of the files under ``paths``): equal
+    across two calls exactly when the session's application and every
+    file under the paths are unchanged. It keys session state derived
+    from files outside the ``{sf_dir}/{table}.parquet`` layout — the
+    app store's temp views (``app.register_views``) — without a build
+    line on stdout, which ``session_artifact`` prints."""
+    parts = [
+        f"{os.path.abspath(p)}={','.join(files_fingerprint(p))}" for p in paths
+    ]
+    return (
+        spark.sparkContext.applicationId,
+        hashlib.md5("|".join(parts).encode()).hexdigest(),
+    )
 
 
 def log_artifact_build(*tables: str) -> None:
@@ -111,7 +141,6 @@ def gc_stale_artifacts(spark: SparkSession, table: str) -> list[str]:
     correctness-safe) and is swept too.
     """
     import json
-    import os
     import re
     import shutil
     from urllib.parse import urlparse
@@ -277,16 +306,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
     return df
 
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> None:
-    """Register temp views so ``spark.sql`` can reference tables by name."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)

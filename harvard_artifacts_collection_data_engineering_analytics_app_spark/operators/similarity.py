@@ -4531,21 +4531,32 @@ def _nsw_entry_rows(v: DataFrame, m: int, stride: int) -> DataFrame:
 # node).
 
 
-def _nsw_adjacency_broadcast(spark: SparkSession, edges: DataFrame, ids):
+def _nsw_adjacency_broadcast(
+    spark: SparkSession, sf_dir: str, index: str, edges: DataFrame, ids
+):
     """CSR adjacency over the broadcast id order: (indptr, nbrs) with
     nbrs holding VECTOR IDS (not positions). ``edges`` is the undirected
-    (a_id, b_id) relation (already distinct)."""
-    import numpy as np
+    (a_id, b_id) relation (already distinct) of the ``nsw_index_{index}``
+    index. Built once per (session, corpus content) and index, shared by
+    every walk over that index; a superseded one is destroyed
+    (catalog.session_artifact)."""
 
-    e = edges.select("a_id", "b_id").toPandas()
-    a = np.searchsorted(ids, e["a_id"].to_numpy(dtype="int64"))
-    b = e["b_id"].to_numpy(dtype="int64")
-    order = np.argsort(a, kind="stable")
-    a, b = a[order], b[order]
-    indptr = np.zeros(len(ids) + 1, dtype="int64")
-    np.add.at(indptr, a + 1, 1)
-    indptr = np.cumsum(indptr)
-    return spark.sparkContext.broadcast((indptr, b))
+    def build():
+        import numpy as np
+
+        e = edges.select("a_id", "b_id").toPandas()
+        a = np.searchsorted(ids, e["a_id"].to_numpy(dtype="int64"))
+        b = e["b_id"].to_numpy(dtype="int64")
+        order = np.argsort(a, kind="stable")
+        a, b = a[order], b[order]
+        indptr = np.zeros(len(ids) + 1, dtype="int64")
+        np.add.at(indptr, a + 1, 1)
+        indptr = np.cumsum(indptr)
+        return spark.sparkContext.broadcast((indptr, b))
+
+    return session_artifact(
+        spark, sf_dir, "embeddings", f"nsw_adjacency_{index}", build
+    )
 
 
 def _np_cos_e6(q_emb, q_nrm, B, bn):
@@ -4843,7 +4854,7 @@ def ss_nsw_greedy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in _nsw_entry_rows(v, int(m), stride).collect()
         ]
         adj_b = _nsw_adjacency_broadcast(
-            spark, edges_vec.select("a_id", "b_id"), vec_b.value[0]
+            spark, sf_dir, "exact", edges_vec, vec_b.value[0]
         )
         winner = q.mapInPandas(
             _nsw_greedy_walk_kernel(
@@ -5152,23 +5163,20 @@ def ss_nsw_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE Spark job.
     """
     return _nsw_beam_search_over(
-        spark,
-        sf_dir,
-        _nsw_index(
-            spark, sf_dir, "nsw_index_exact", _exact_knn16(spark, sf_dir)
-        ),
+        spark, sf_dir, "exact", _exact_knn16(spark, sf_dir)
     )
 
 
 def _nsw_beam_search_over(
-    spark: SparkSession, sf_dir: str, edges_vec: DataFrame
+    spark: SparkSession, sf_dir: str, index: str, directed: DataFrame
 ) -> DataFrame:
     """The shared ef-search kernel (see ss_nsw_beam_search for the full
     story): the walk is a pure function of the edge relation, so the
     exact-index and IVF-built-index operators differ ONLY in the
-    ``edges_vec`` they pass — mirroring the one-CTE difference between
-    their oracles (_nsw_beam_oracle)."""
+    ``directed`` graph they index (as ``nsw_index_{index}``) — mirroring
+    the one-CTE difference between their oracles (_nsw_beam_oracle)."""
     ensure_analytics_conf(spark)
+    edges_vec = _nsw_index(spark, sf_dir, f"nsw_index_{index}", directed)
     v = _vectors(spark, sf_dir)
 
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
@@ -5196,7 +5204,7 @@ def _nsw_beam_search_over(
             for r in _nsw_entry_rows(v, int(m), stride).collect()
         ]
         adj_b = _nsw_adjacency_broadcast(
-            spark, edges_vec.select("a_id", "b_id"), vec_b.value[0]
+            spark, sf_dir, index, edges_vec, vec_b.value[0]
         )
         final = q.mapInPandas(
             _nsw_beam_walk_kernel(
@@ -5365,9 +5373,7 @@ def ss_nsw_ivf_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     recipe.
     """
     directed = _knn_graph_ivf_topk(spark, sf_dir, NSW_GRAPH_K)
-    return _nsw_beam_search_over(
-        spark, sf_dir, _nsw_index(spark, sf_dir, "nsw_index_ivf", directed)
-    )
+    return _nsw_beam_search_over(spark, sf_dir, "ivf", directed)
 
 
 # --- incremental NSW index maintenance (judge VERDICT r13 #6b) -------------------

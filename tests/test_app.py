@@ -2,10 +2,55 @@
 
 from __future__ import annotations
 
+import json
+
+import pytest
+
 from harvard_artifacts_collection_data_engineering_analytics_app_spark import app
 from harvard_artifacts_collection_data_engineering_analytics_app_spark.sources import (
     rest,
 )
+
+
+def _late_records(ids) -> list[dict]:
+    """Records with 1-3 colors each, none shared with the synthetic ones."""
+    return [
+        {
+            "id": i,
+            "title": f"Late {i}",
+            "colors": [
+                {"spectrum": "#ccc", "hue": "Violet", "color": "#654321",
+                 "percent": j / 10, "css3": "#ddd"}
+                for j in range(1 + i % 3)
+            ],
+        }
+        for i in ids
+    ]
+
+
+def _pages(records: list[dict]) -> rest.PageFetcher:
+    def fetch_page(page: int) -> list[dict]:
+        return records[(page - 1) * rest.PAGE_SIZE : page * rest.PAGE_SIZE]
+
+    return fetch_page
+
+
+def _load(spark, wd: str, fetch_page: rest.PageFetcher, n: int) -> dict[str, int]:
+    app.collect(spark, wd, fetch_page, target_records=n)
+    return app.insert(spark, wd)
+
+
+def _colors(spark, wd: str) -> int:
+    """q15: SELECT COUNT(*) AS total_color_entries FROM artifactcolors."""
+    return app.query(spark, wd, "q15").collect()[0][0]
+
+
+@pytest.fixture(scope="module")
+def store(spark, tmp_path_factory):
+    """A store of 300 synthetic records that the tests below only read."""
+    wd = str(tmp_path_factory.mktemp("store"))
+    _load(spark, wd, rest.synthetic_fetcher(300), 300)
+    return wd
 
 
 def test_collect_insert_query_roundtrip(spark, tmp_path):
@@ -36,24 +81,8 @@ def test_insert_is_idempotent_like_insert_ignore(spark, tmp_path):
     assert first == second
 
     # ids 180..379: 20 shared with the first batch, all with new colors
-    late = [
-        {
-            "id": i,
-            "title": f"Late {i}",
-            "colors": [
-                {"spectrum": "#ccc", "hue": "Violet", "color": "#654321",
-                 "percent": j / 10, "css3": "#ddd"}
-                for j in range(1 + i % 3)
-            ],
-        }
-        for i in range(180, 380)
-    ]
-
-    def fetch_late(page: int) -> list[dict]:
-        return late[(page - 1) * rest.PAGE_SIZE : page * rest.PAGE_SIZE]
-
-    app.collect(spark, wd, fetch_late, target_records=len(late))
-    counts = app.insert(spark, wd)
+    late = _late_records(range(180, 380))
+    counts = _load(spark, wd, _pages(late), len(late))
     assert counts["artifactmetadata"] == counts["artifactmedia"] == 380
 
     delivered = rest.fetch_serial(rest.synthetic_fetcher(200), 200) + late
@@ -98,3 +127,71 @@ def test_chart_spec_matches_reference_auto_bar(spark):
     assert chart_spec(not_numeric) == []
     one_col = spark.createDataFrame([("a",)], "label string")
     assert chart_spec(one_col) == []
+
+
+def test_query_sees_each_insert_in_the_same_session(spark, tmp_path):
+    """The temp views are kept across queries; an insert must still
+    reach the next query."""
+    wd = str(tmp_path / "wd")
+    _load(spark, wd, rest.synthetic_fetcher(300), 300)
+    before = _colors(spark, wd)
+    late = _late_records(range(1000, 1100))
+    _load(spark, wd, _pages(late), len(late))
+    assert _colors(spark, wd) - before == sum(len(r["colors"]) for r in late)
+
+
+def test_repeat_query_registers_no_views(spark, store, monkeypatch):
+    """A repeat query on an unchanged store reads no table; a new
+    session of the same application registers its own views."""
+    app.query(spark, store, "q5")
+    reads: list[str] = []
+    read_table = app.read_table
+
+    def counted(spark, workdir, name):
+        reads.append(name)
+        return read_table(spark, workdir, name)
+
+    monkeypatch.setattr(app, "read_table", counted)
+    colors = _colors(spark, store)
+    for name in ("q5", "q12", "q20"):
+        app.query(spark, store, name).collect()
+    assert reads == []
+
+    assert _colors(spark.newSession(), store) == colors
+    assert reads == list(app.ARTIFACT_TABLES)
+
+
+def test_query_reads_the_workdir_it_is_given(spark, store, tmp_path):
+    colors = _colors(spark, store)
+    other = str(tmp_path / "other")
+    late = _late_records(range(1000, 1040))
+    _load(spark, other, _pages(late), len(late))
+    assert _colors(spark, other) == sum(len(r["colors"]) for r in late)
+    assert _colors(spark, store) == colors
+
+
+def test_store_matches_the_declared_schemas(spark, store):
+    """The store is read with ``app.ARTIFACT_SCHEMAS`` (no inference), so
+    what the ETL writes must keep matching them column for column and
+    type for type."""
+    for name, declared in app.ARTIFACT_SCHEMAS.items():
+        written = spark.read.parquet(f"{store}/{name}").schema
+        assert [(f.name, f.dataType) for f in written] == [
+            (f.name, f.dataType) for f in declared
+        ], name
+
+
+def test_cli_prints_one_json_object_per_line(spark, tmp_path, capsys, monkeypatch):
+    # get_spark on a running session would re-apply its defaults (e.g.
+    # shuffle partitions) to the session every later test shares
+    monkeypatch.setattr(app, "get_spark", lambda **kw: spark)
+    wd = str(tmp_path / "cli")
+    app.main(["--workdir", wd, "--records", "300", "collect"])
+    app.main(["--workdir", wd, "--records", "300", "insert"])
+    loads = [json.loads(line) for line in capsys.readouterr().out.splitlines()]
+    assert loads[0] == {"collected": 300}
+    assert loads[1]["inserted"]["artifactmetadata"] == 300
+
+    app.main(["--workdir", wd, "query", "all"])
+    out = [json.loads(line) for line in capsys.readouterr().out.splitlines()]
+    assert [o["query"] for o in out] == [f"q{i}" for i in range(1, 21)]

@@ -1,6 +1,7 @@
 """Content-keyed artifacts in one session: a source parquet rewritten
 under the same path must rebuild every artifact derived from it, and an
-unchanged source must reuse them (``catalog.session_artifact``)."""
+unchanged source must reuse them (``catalog.session_artifact``,
+``catalog.persisted_artifact``)."""
 
 from __future__ import annotations
 
@@ -19,10 +20,23 @@ from harvard_artifacts_collection_data_engineering_analytics_app_spark.queries.r
 
 from .oracle_harness import compare, duckdb_connection
 
-QUERIES = ("ss_nsw_beam_search", "ss_nsw_index_upsert")
-# the session artifacts the two queries read: the exact degree-16 graph,
-# the NSW index over it, the broadcast vector matrix and the upsert base
-ARTIFACTS = ["exact_knn16", "nsw_index_exact", "nsw_upsert_base", "nsw_vectors"]
+QUERIES = ("ss_nsw_beam_search", "ss_nsw_ivf_beam_search", "ss_nsw_index_upsert")
+# the artifacts the three queries read: the exact degree-16 graph and the
+# IVF-built one (with its persisted IVF lists and centroids), the NSW index
+# over each and its broadcast CSR adjacency, the broadcast vector matrix
+# and the upsert base
+ARTIFACTS = [
+    "exact_knn16",
+    "knn_ivf_centroids",
+    "knn_ivf_graph_k16",
+    "knn_ivf_lists",
+    "nsw_adjacency_exact",
+    "nsw_adjacency_ivf",
+    "nsw_index_exact",
+    "nsw_index_ivf",
+    "nsw_upsert_base",
+    "nsw_vectors",
+]
 
 
 def _run(spark, data: str) -> dict:
