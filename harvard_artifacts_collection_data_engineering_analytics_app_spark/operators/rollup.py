@@ -1077,14 +1077,19 @@ def ht_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     # negative numerators; Δh is always > 0), and the median is the
     # rank-(n+1)//2 element under the full (slope, h1, h2) tie order —
     # np.lexsort with keys in reverse significance reproduces it exactly.
+    # An hour whose values are all NULL has y NULL: every pair touching it
+    # has a NULL slope, counted in n_pairs and sorted last (the oracle's
+    # ORDER BY default, NULLS LAST), so the median is NULL when the rank
+    # lands among them.
     def ts_median(pdf):
         import numpy as np
         import pandas as pd
 
         h = pdf["h"].to_numpy(dtype="int64")
-        y = pdf["y"].to_numpy(dtype="int64")
+        y_null = pdf["y"].isna().to_numpy()
+        y = pdf["y"].fillna(0).to_numpy(dtype="int64")
         order = np.argsort(h)
-        h, y = h[order], y[order]
+        h, y, y_null = h[order], y[order], y_null[order]
         m = len(h)
         if m < 2:
             return pd.DataFrame(
@@ -1102,15 +1107,18 @@ def ht_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         # truncate toward zero: floor == trunc except for negative
         # non-exact quotients, where trunc = floor + 1
         q += (num - q * den != 0) & (num < 0)
+        q_null = y_null[ia] | y_null[ib]
         n_pairs = len(q)
         rank = (n_pairs + 1) // 2 - 1  # 0-based lower median
-        sel = np.lexsort((h[ib], h[ia], q))[rank]
+        sel = np.lexsort((h[ib], h[ia], q, q_null))[rank]
         return pd.DataFrame(
             {
                 "event_type": [pdf["event_type"].iloc[0]],
                 "n_points": np.array([m], dtype="int64"),
                 "n_pairs": np.array([n_pairs], dtype="int64"),
-                "ts_slope_micro": q[sel : sel + 1],
+                "ts_slope_micro": pd.array(
+                    [None if q_null[sel] else int(q[sel])], dtype="Int64"
+                ),
             }
         )
 

@@ -181,10 +181,7 @@ def test_store_matches_the_declared_schemas(spark, store):
         ], name
 
 
-def test_cli_prints_one_json_object_per_line(spark, tmp_path, capsys, monkeypatch):
-    # get_spark on a running session would re-apply its defaults (e.g.
-    # shuffle partitions) to the session every later test shares
-    monkeypatch.setattr(app, "get_spark", lambda **kw: spark)
+def test_cli_prints_one_json_object_per_line(spark, tmp_path, capsys):
     wd = str(tmp_path / "cli")
     app.main(["--workdir", wd, "--records", "300", "collect"])
     app.main(["--workdir", wd, "--records", "300", "insert"])

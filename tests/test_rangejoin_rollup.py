@@ -93,3 +93,52 @@ def test_hierarchical_rollup_grain_counts_consistent(spark):
     out = RU.hierarchical_rollup(df, "ts", ("event_type",), "value").collect()
     for g in RU.GRAINS:
         assert sum(r["cnt"] for r in out if r["grain"] == g) == 200
+
+
+def test_theil_sen_all_null_hour_matches_oracle(spark, tmp_path):
+    """An hour whose values are all NULL has y NULL in both engines: its
+    pairs get NULL slopes, still count in n_pairs and sort last, so the
+    median is NULL once more than half the pairs are NULL."""
+    import duckdb
+
+    from harvard_artifacts_collection_data_engineering_analytics_app_spark.queries.registry import (
+        all_specs,
+    )
+
+    from .oracle_harness import compare
+
+    epoch = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    rows = [
+        # "some": hour 1 is all NULL -> 3 of 6 pairs NULL, median non-NULL
+        ("some", 0, 1.0), ("some", 1, None), ("some", 1, None),
+        ("some", 2, 5.0), ("some", 3, -2.5),
+        # "most": hours 1 and 2 all NULL -> 5 of 6 pairs NULL, median NULL
+        ("most", 0, 1.0), ("most", 1, None), ("most", 2, None),
+        ("most", 3, 4.0),
+        # "mixed": a NULL next to a value in one hour is just skipped
+        ("mixed", 0, 1.0), ("mixed", 0, None), ("mixed", 5, 2.0),
+    ]
+    df = spark.createDataFrame(
+        [
+            (i, epoch + dt.timedelta(hours=h, minutes=i % 7), 1, t, v, "{}")
+            for i, (t, h, v) in enumerate(rows)
+        ],
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+    )
+    path = str(tmp_path)
+    df.coalesce(1).write.parquet(f"{path}/events.parquet")
+    spec = all_specs()["ht_theil_sen_slope"]
+    got = spec.builder(spark, path).toPandas()
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW events AS SELECT * FROM "
+            f"read_parquet('{path}/events.parquet/*.parquet')"
+        )
+        want = con.execute(spec.oracle).fetch_df()
+    finally:
+        con.close()
+    assert compare(got, want) == []
+    null = got.set_index("event_type")["ts_slope_micro"].isna().to_dict()
+    assert null == {"most": True, "some": False, "mixed": False}
