@@ -27,6 +27,10 @@ from ..session import ensure_analytics_conf
 PR_SCALE = 1_000_000_000_000  # 1e12 fixed-point rank grid
 PR_ROUNDS = 3
 PR_TOP = 20
+# The damped transfer of one round, as a _rank_round aggregate: PageRank
+# adds its uniform teleport share inside the aggregate, PPR adds the
+# seeds' share after it.
+PR_SPREAD = "(85 * SUM((P.p * E.w) DIV E.outw)) DIV 100"
 
 # Broadcast the per-round rank relation when |V| is at most this many
 # nodes (a 16-byte (node, p) row → ~160 MB of broadcast at the cap).
@@ -45,11 +49,12 @@ PR_BCAST_MAX_NODES = int(
 )
 
 
-def _pr_ctes() -> list[str]:
-    """The p0..p{PR_ROUNDS} chained-CTE PageRank replay — composable so
-    gr_pagerank_convergence can difference consecutive rounds."""
-    base = f"(3 * {PR_SCALE} // 20) // nn.n"  # floor(0.15 * SCALE) / n
-    ctes = [
+def _bipartite_ctes() -> list[str]:
+    """DuckDB twin of ``_bipartite_edges``: ``raw`` (customer 2c →
+    supplier 2s+1, w orders), ``e`` (raw symmetrized) and ``deg`` (src,
+    weighted degree W) — the graph PageRank, personalized PageRank and
+    Katz walk."""
+    return [
         """raw AS (
         SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst, COUNT(*) AS w
         FROM orders JOIN lineitem ON l_orderkey = o_orderkey
@@ -61,6 +66,14 @@ def _pr_ctes() -> list[str]:
         SELECT dst AS src, src AS dst, w FROM raw
     )""",
         "deg AS (SELECT src, CAST(SUM(w) AS BIGINT) AS W FROM e GROUP BY src)",
+    ]
+
+
+def _pr_ctes() -> list[str]:
+    """The p0..p{PR_ROUNDS} chained-CTE PageRank replay — composable so
+    gr_pagerank_convergence can difference consecutive rounds."""
+    base = f"(3 * {PR_SCALE} // 20) // nn.n"  # floor(0.15 * SCALE) / n
+    ctes = _bipartite_ctes() + [
         "nn AS (SELECT COUNT(*) AS n FROM deg)",
         f"p0 AS (SELECT src AS node, {PR_SCALE} // nn.n AS p FROM deg, nn)",
     ]
@@ -123,10 +136,10 @@ def gr_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The symmetric customer↔supplier co-purchase edge relation
-    ``(src, dst, w, outw)`` with weighted degree attached, eagerly
-    checkpointed — the shared graph behind gr_pagerank,
-    gr_pagerank_convergence, and gr_katz_centrality (one build, three
-    consumers; the oracle-side twin is ``_pr_ctes()[:3]``)."""
+    ``(src, dst, w, outw)`` with weighted degree attached, lazily
+    checkpointed — the one build behind gr_pagerank,
+    gr_pagerank_convergence, gr_personalized_pagerank and
+    gr_katz_centrality (the oracle-side twin is ``_bipartite_ctes()``)."""
     ensure_analytics_conf(spark)
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
@@ -151,6 +164,46 @@ def _bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.join(deg, "src").localCheckpoint(eager=False)
 
 
+def _uniform_ranks(edges: DataFrame, p: int) -> DataFrame:
+    """Rank ``p`` on every node of ``edges``: the (src, p) start of the
+    global rank iterations."""
+    return (
+        edges.select("src")
+        .distinct()
+        .select("src", F.lit(p).cast("long").alias("p"))
+    )
+
+
+def _rank_round(
+    edges: DataFrame, ranks: DataFrame, agg: str, n_nodes: int | None = None
+) -> DataFrame:
+    """One rank-propagation round, the step PageRank, personalized
+    PageRank and Katz share: ``edges`` (src, dst, w, outw) ⋈ ``ranks``
+    (src, p) on src, grouped by dst, with ``agg`` as the one integer
+    aggregate (SQL over ``E.w``, ``E.outw`` and ``P.p``). Returns the
+    next (src, p), not checkpointed: each caller picks its eagerness.
+
+    The rank side is broadcast when ``n_nodes`` (|V|) is at most
+    PR_BCAST_MAX_NODES; None marks a seed-frontier rank side (PPR), which
+    is broadcast without a count. Integer sums are
+    join-strategy-independent, so ranks are bit-identical either way.
+    """
+    # Qualified aliases keep the self-referential join resolvable, and
+    # the out-degree column is 'outw' rather than the conventional 'W'
+    # because Spark SQL name resolution is case-INSENSITIVE: `E.w`
+    # would match both the edge weight and the degree column.
+    r = ranks.select(F.col("src").alias("node"), "p").alias("P")
+    if n_nodes is None or n_nodes <= PR_BCAST_MAX_NODES:
+        r = F.broadcast(r)
+    return (
+        edges.alias("E")
+        .join(r, F.col("E.src") == F.col("P.node"))
+        .groupBy(F.col("E.dst").alias("nxt"))
+        .agg(F.expr(agg).cast("long").alias("p"))
+        .select(F.col("nxt").alias("src"), "p")
+    )
+
+
 def _pagerank_trajectory(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -160,50 +213,23 @@ def _pagerank_trajectory(
     the ranks it claims to diagnose — same factoring as _coservice_lpa).
     Returns ``(p_prev, p_final)``: the rank relations (src, p) after
     rounds PR_ROUNDS−1 and PR_ROUNDS, both on the exact PR_SCALE integer
-    grid and both eagerly checkpointed."""
+    grid and both lazily checkpointed."""
     edges = _bipartite_edges(spark, sf_dir)
 
     # Node count and initial ranks read the CHECKPOINTED edges — deriving
     # them from `deg` would re-run the whole orders⋈lineitem build once
-    # more per reference (measured ~1 s each at sf0.1).
+    # more per reference (measured ~1 s each at sf0.1). An empty graph
+    # has no rank rows, so any nonzero divisor serves it.
     n_nodes = edges.select(F.countDistinct("src")).collect()[0][0]
-    base = (3 * PR_SCALE // 20) // n_nodes
-
-    p = (
-        edges.select("src")
-        .distinct()
-        .select("src", F.lit(PR_SCALE // n_nodes).cast("long").alias("p"))
-    )
-    prev = p
+    share = max(n_nodes, 1)
+    agg = f"{(3 * PR_SCALE // 20) // share} + {PR_SPREAD}"
+    p = prev = _uniform_ranks(edges, PR_SCALE // share)
     for _ in range(PR_ROUNDS):
         prev = p
-        # Qualified aliases keep the self-referential join resolvable, and
-        # the out-degree column is 'outw' rather than the conventional 'W'
-        # because Spark SQL name resolution is case-INSENSITIVE: `E.w`
-        # would match both the edge weight and the degree column.
-        # Size-gated broadcast of the |V|-row rank side (see
-        # PR_BCAST_MAX_NODES): integer sums are join-strategy-independent,
-        # so ranks are bit-identical either way.
-        ranks = p.select(F.col("src").alias("node"), "p").alias("P")
-        if n_nodes <= PR_BCAST_MAX_NODES:
-            ranks = F.broadcast(ranks)
-        p = (
-            edges.alias("E")
-            .join(ranks, F.col("E.src") == F.col("P.node"))
-            .groupBy(F.col("E.dst").alias("nxt"))
-            .agg(
-                (
-                    F.lit(base)
-                    + F.expr("(85 * SUM((P.p * E.w) DIV E.outw)) DIV 100")
-                )
-                .cast("long")
-                .alias("p")
-            )
-            .select(F.col("nxt").alias("src"), "p")
-            .localCheckpoint(eager=False)  # lazy: fixed rounds, no driver
-            # read in the loop — the caller's single action materializes
-            # every round in dependency order (lineage still truncated)
-        )
+        # lazy: fixed rounds, no driver read in the loop — the caller's
+        # single action materializes every round in dependency order
+        # (lineage still truncated)
+        p = _rank_round(edges, p, agg, n_nodes).localCheckpoint(eager=False)
     return prev, p
 
 
@@ -218,50 +244,69 @@ TRI_MONTH_LO = "1995-01-01"
 TRI_MONTH_HI = "1995-02-01"
 
 
-def _tri_ctes() -> str:
-    """Shared CTE chain (no WITH/SELECT): co-service edges → degrees →
-    oriented edges → triangles → per-node triangle counts. gr_triangles
-    and gr_clustering_coeff build on the identical relations."""
-    return f"""os AS (
+def _coservice_ctes() -> list[str]:
+    """DuckDB twin of ``_coservice_pairs``: ``os`` (January order,
+    supplier), ``p`` (pairs x < y with w shared orders) and ``edges`` (p
+    symmetrized)."""
+    return [
+        f"""os AS (
         SELECT DISTINCT l_orderkey AS ok, l_suppkey AS s
         FROM lineitem
         JOIN orders ON o_orderkey = l_orderkey
         WHERE o_orderdate >= TIMESTAMP '{TRI_MONTH_LO}'
           AND o_orderdate <  TIMESTAMP '{TRI_MONTH_HI}'
-    ),
-    e AS (
+    )""",
+        """p AS (
+        SELECT a.s AS x, b.s AS y, COUNT(*) AS w
+        FROM os a JOIN os b ON a.ok = b.ok AND a.s < b.s
+        GROUP BY a.s, b.s
+    )""",
+        "edges AS (SELECT x, y, w FROM p UNION ALL SELECT y, x, w FROM p)",
+    ]
+
+
+def _tri_ctes(upto: str = "pn") -> list[str]:
+    """DuckDB twin of ``_tri_relations``, the CTE chain from ``os``
+    through ``upto``: co-service edges → degrees → oriented edges →
+    triangles → per-node triangle counts."""
+    ctes = [
+        _coservice_ctes()[0],
+        """e AS (
         SELECT DISTINCT a.s AS x, b.s AS y
         FROM os a JOIN os b ON a.ok = b.ok AND a.s < b.s
-    ),
-    sym AS (SELECT x, y FROM e UNION ALL SELECT y AS x, x AS y FROM e),
-    deg AS (SELECT x AS node, COUNT(*) AS d FROM sym GROUP BY x),
-    oe AS (
+    )""",
+        "sym AS (SELECT x, y FROM e UNION ALL SELECT y AS x, x AS y FROM e)",
+        "deg AS (SELECT x AS node, COUNT(*) AS d FROM sym GROUP BY x)",
+        """oe AS (
         SELECT CASE WHEN (dx.d, e.x) < (dy.d, e.y) THEN e.x ELSE e.y END AS u,
                CASE WHEN (dx.d, e.x) < (dy.d, e.y) THEN e.y ELSE e.x END AS v,
                CASE WHEN (dx.d, e.x) < (dy.d, e.y) THEN dy.d ELSE dx.d END AS dv
         FROM e
         JOIN deg dx ON dx.node = e.x
         JOIN deg dy ON dy.node = e.y
-    ),
-    tri AS (
+    )""",
+        """tri AS (
         SELECT e1.u AS a, e1.v AS b, e2.v AS c
         FROM oe e1
         JOIN oe e2 ON e1.u = e2.u AND (e1.dv, e1.v) < (e2.dv, e2.v)
         JOIN oe e3 ON e3.u = e1.v AND e3.v = e2.v
-    ),
-    pn AS (
+    )""",
+        """pn AS (
         SELECT node, COUNT(*) AS tri_cnt FROM (
             SELECT a AS node FROM tri
             UNION ALL SELECT b FROM tri
             UNION ALL SELECT c FROM tri
         ) GROUP BY node
-    )"""
+    )""",
+    ]
+    names = [c.split(" ", 1)[0] for c in ctes]
+    return ctes[: names.index(upto) + 1]
 
 
 def _tri_oracle() -> str:
     return (
         "WITH "
-        + _tri_ctes()
+        + ",\n    ".join(_tri_ctes())
         + f"\n    SELECT node, tri_cnt FROM pn ORDER BY tri_cnt DESC, node LIMIT {TRI_TOP}"
     )
 
@@ -291,7 +336,7 @@ def gr_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the join — the graph is built from the filtered fact, never
     filtered after pair explosion.
     """
-    tri, _deg = _tri_relations(spark, sf_dir)
+    tri, _ed, _deg = _tri_relations(spark, sf_dir)
     return (
         tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
         .groupBy("node")
@@ -301,10 +346,24 @@ def gr_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _co_edges_deg(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(undirected dedup edges(x, y) with x < y, degree(node, d)) of the
-    one-month co-service graph — shared by the triangle family and
-    gr_assortativity."""
+def _supplier_pairs(os_: DataFrame) -> DataFrame:
+    """(x, y, w): supplier pairs x < y that share w orders of ``os_``
+    (ok, s) — the weighted co-service edges."""
+    return (
+        os_.alias("a")
+        .join(
+            os_.alias("b"),
+            (F.col("a.ok") == F.col("b.ok")) & (F.col("a.s") < F.col("b.s")),
+        )
+        .groupBy(F.col("a.s").alias("x"), F.col("b.s").alias("y"))
+        .agg(F.count("*").alias("w"))
+    )
+
+
+def _coservice_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The one-month co-service graph (x, y, w), x < y — the one build
+    every January consumer projects and checkpoints from (DuckDB twin:
+    ``_coservice_ctes()``)."""
     ensure_analytics_conf(spark)
     o = (
         load_table(spark, sf_dir, "orders")
@@ -317,34 +376,46 @@ def _co_edges_deg(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("s")
     )
-    os_ = li.join(o, li["ok"] == o["o_orderkey"]).select("ok", "s").distinct()
-    e = (
-        os_.alias("a")
-        .join(
-            os_.alias("b"),
-            (F.col("a.ok") == F.col("b.ok")) & (F.col("a.s") < F.col("b.s")),
-        )
-        .select(F.col("a.s").alias("x"), F.col("b.s").alias("y"))
-        .distinct()
+    return _supplier_pairs(
+        li.join(o, li["ok"] == o["o_orderkey"]).select("ok", "s").distinct()
     )
-    sym = e.unionByName(e.select(F.col("y").alias("x"), F.col("x").alias("y")))
-    deg = sym.groupBy("x").agg(F.count("*").alias("d")).select(
-        F.col("x").alias("node"), "d"
-    )
-    return e, deg
 
 
-def _tri_relations(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(triangles(a,b,c), degree(node,d)) on the one-month co-service
-    graph — the shared core of gr_triangles / gr_clustering_coeff; see
+def _symmetric(df: DataFrame) -> DataFrame:
+    """``df`` plus ``df`` with x and y swapped; other columns ride along."""
+    rest = [c for c in df.columns if c not in ("x", "y")]
+    return df.unionByName(
+        df.select(F.col("y").alias("x"), F.col("x").alias("y"), *rest)
+    )
+
+
+def _degrees(e: DataFrame) -> DataFrame:
+    """(node, d): the degree of every node of the undirected pairs ``e``
+    (x, y)."""
+    return (
+        _symmetric(e)
+        .groupBy("x")
+        .agg(F.count("*").alias("d"))
+        .select(F.col("x").alias("node"), "d")
+    )
+
+
+def _tri_relations(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(triangles (a, b, c), edges with end degrees (x, y, dx, dy),
+    degree (node, d)) on the one-month co-service graph — the shared core
+    of gr_triangles, gr_clustering_coeff and gr_edge_jaccard; see
     gr_triangles' docstring for the orientation-bound plan argument."""
-    e, deg = _co_edges_deg(spark, sf_dir)
+    e = _coservice_pairs(spark, sf_dir).select("x", "y")
+    deg = _degrees(e)
+    # ed feeds the three wedge-join sides and gr_edge_jaccard's final
+    # edge list — materialize it once (SCALE.md signature-reuse rule) so
+    # the edge build is not replayed per consumer branch.
     ed = (
-        e.join(
-            deg.select(F.col("node").alias("x"), F.col("d").alias("dx")), "x"
-        ).join(
-            deg.select(F.col("node").alias("y"), F.col("d").alias("dy")), "y"
-        )
+        e.join(deg.select(F.col("node").alias("x"), F.col("d").alias("dx")), "x")
+        .join(deg.select(F.col("node").alias("y"), F.col("d").alias("dy")), "y")
+        .localCheckpoint(eager=False)
     )
     # Orientation by the strict total order (degree, node id). Struct
     # comparison is positional and lexicographic in Spark, matching
@@ -353,16 +424,10 @@ def _tri_relations(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
     lower_first = F.struct(
         F.col("dx").alias("d"), F.col("x").alias("n")
     ) < F.struct(F.col("dy").alias("d"), F.col("y").alias("n"))
-    # The oriented-edge relation feeds three join consumers — materialize
-    # it once (SCALE.md signature-reuse rule) so the orders⋈lineitem edge
-    # build is not replayed per consumer branch.
-    oe = (
-        ed.select(
-            F.when(lower_first, F.col("x")).otherwise(F.col("y")).alias("u"),
-            F.when(lower_first, F.col("y")).otherwise(F.col("x")).alias("v"),
-            F.when(lower_first, F.col("dy")).otherwise(F.col("dx")).alias("dv"),
-        )
-        .localCheckpoint(eager=False)
+    oe = ed.select(
+        F.when(lower_first, F.col("x")).otherwise(F.col("y")).alias("u"),
+        F.when(lower_first, F.col("y")).otherwise(F.col("x")).alias("v"),
+        F.when(lower_first, F.col("dy")).otherwise(F.col("dx")).alias("dv"),
     )
     wedge_ord = F.struct(
         F.col("e1.dv").alias("d"), F.col("e1.v").alias("n")
@@ -380,20 +445,17 @@ def _tri_relations(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
             F.col("e2.v").alias("c"),
         )
     )
-    return tri, deg
+    return tri, ed, deg
 
 
 def _deg_hist_oracle() -> str:
-    return """
-    WITH os AS (
+    full_history_os = """os AS (
         SELECT DISTINCT l_orderkey AS ok, l_suppkey AS s FROM lineitem
-    ),
-    e AS (
-        SELECT DISTINCT a.s AS x, b.s AS y
-        FROM os a JOIN os b ON a.ok = b.ok AND a.s < b.s
-    ),
-    sym AS (SELECT x, y FROM e UNION ALL SELECT y AS x, x AS y FROM e),
-    deg AS (SELECT x AS node, COUNT(*) AS d FROM sym GROUP BY x)
+    )"""
+    return (
+        "\n    WITH "
+        + ",\n    ".join([full_history_os] + _tri_ctes("deg")[1:])
+        + """
     SELECT CAST(LENGTH(BIN(d)) AS BIGINT) AS bucket,
            COUNT(*) AS n_nodes,
            MIN(d) AS min_deg,
@@ -402,6 +464,7 @@ def _deg_hist_oracle() -> str:
     GROUP BY bucket
     ORDER BY bucket
     """
+    )
 
 
 @register(
@@ -420,21 +483,12 @@ def gr_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edge build; the histogram itself is at most 64 rows.
     """
     ensure_analytics_conf(spark)
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("s")
-    )
-    os_ = li.distinct()
-    e = (
-        os_.alias("a")
-        .join(
-            os_.alias("b"),
-            (F.col("a.ok") == F.col("b.ok")) & (F.col("a.s") < F.col("b.s")),
-        )
-        .select(F.col("a.s").alias("x"), F.col("b.s").alias("y"))
+    os_ = (
+        load_table(spark, sf_dir, "lineitem")
+        .select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("s"))
         .distinct()
     )
-    sym = e.unionByName(e.select(F.col("y").alias("x"), F.col("x").alias("y")))
-    deg = sym.groupBy("x").agg(F.count("*").alias("d"))
+    deg = _degrees(_supplier_pairs(os_).select("x", "y"))
     return (
         deg.groupBy(
             F.length(F.bin(F.col("d"))).cast("long").alias("bucket")
@@ -452,34 +506,10 @@ EJ_TOP = 20
 
 
 def _edge_jaccard_oracle() -> str:
-    return f"""
-    WITH os AS (
-        SELECT DISTINCT l_orderkey AS ok, l_suppkey AS s
-        FROM lineitem
-        JOIN orders ON o_orderkey = l_orderkey
-        WHERE o_orderdate >= TIMESTAMP '{TRI_MONTH_LO}'
-          AND o_orderdate <  TIMESTAMP '{TRI_MONTH_HI}'
-    ),
-    e AS (
-        SELECT DISTINCT a.s AS x, b.s AS y
-        FROM os a JOIN os b ON a.ok = b.ok AND a.s < b.s
-    ),
-    sym AS (SELECT x, y FROM e UNION ALL SELECT y AS x, x AS y FROM e),
-    deg AS (SELECT x AS node, COUNT(*) AS d FROM sym GROUP BY x),
-    oe AS (
-        SELECT CASE WHEN (dx.d, e.x) < (dy.d, e.y) THEN e.x ELSE e.y END AS u,
-               CASE WHEN (dx.d, e.x) < (dy.d, e.y) THEN e.y ELSE e.x END AS v,
-               CASE WHEN (dx.d, e.x) < (dy.d, e.y) THEN dy.d ELSE dx.d END AS dv
-        FROM e
-        JOIN deg dx ON dx.node = e.x
-        JOIN deg dy ON dy.node = e.y
-    ),
-    tri AS (
-        SELECT e1.u AS a, e1.v AS b, e2.v AS c
-        FROM oe e1
-        JOIN oe e2 ON e1.u = e2.u AND (e1.dv, e1.v) < (e2.dv, e2.v)
-        JOIN oe e3 ON e3.u = e1.v AND e3.v = e2.v
-    ),
+    return (
+        "\n    WITH "
+        + ",\n    ".join(_tri_ctes("tri"))
+        + f""",
     common AS (
         SELECT LEAST(p, q) AS x, GREATEST(p, q) AS y, COUNT(*) AS cm
         FROM (
@@ -501,6 +531,7 @@ def _edge_jaccard_oracle() -> str:
     ORDER BY jaccard_milli DESC, e.x, e.y
     LIMIT {EJ_TOP}
     """
+    )
 
 
 @register(
@@ -527,69 +558,7 @@ def gr_edge_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus one map-side-combined group count and a left join back to the
     edge list — no new shuffle classes beyond gr_triangles.
     """
-    ensure_analytics_conf(spark)
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderdate") >= TRI_MONTH_LO)
-            & (F.col("o_orderdate") < TRI_MONTH_HI)
-        )
-        .select("o_orderkey")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("s")
-    )
-    os_ = li.join(o, li["ok"] == o["o_orderkey"]).select("ok", "s").distinct()
-    e = (
-        os_.alias("a")
-        .join(
-            os_.alias("b"),
-            (F.col("a.ok") == F.col("b.ok")) & (F.col("a.s") < F.col("b.s")),
-        )
-        .select(F.col("a.s").alias("x"), F.col("b.s").alias("y"))
-        .distinct()
-        # e feeds four consumers (sym/deg, orientation join, final edge
-        # list) — materialize once per the signature-reuse rule
-        .localCheckpoint(eager=False)
-    )
-    sym = e.unionByName(e.select(F.col("y").alias("x"), F.col("x").alias("y")))
-    deg = sym.groupBy("x").agg(F.count("*").alias("d")).select(
-        F.col("x").alias("node"), "d"
-    )
-    ed = (
-        e.join(
-            deg.select(F.col("node").alias("x"), F.col("d").alias("dx")), "x"
-        ).join(
-            deg.select(F.col("node").alias("y"), F.col("d").alias("dy")), "y"
-        )
-    )
-    lower_first = F.struct(
-        F.col("dx").alias("d"), F.col("x").alias("n")
-    ) < F.struct(F.col("dy").alias("d"), F.col("y").alias("n"))
-    oe = (
-        ed.select(
-            F.when(lower_first, F.col("x")).otherwise(F.col("y")).alias("u"),
-            F.when(lower_first, F.col("y")).otherwise(F.col("x")).alias("v"),
-            F.when(lower_first, F.col("dy")).otherwise(F.col("dx")).alias("dv"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    wedge_ord = F.struct(
-        F.col("e1.dv").alias("d"), F.col("e1.v").alias("n")
-    ) < F.struct(F.col("e2.dv").alias("d"), F.col("e2.v").alias("n"))
-    tri = (
-        oe.alias("e1")
-        .join(oe.alias("e2"), (F.col("e1.u") == F.col("e2.u")) & wedge_ord)
-        .join(
-            oe.alias("e3"),
-            (F.col("e3.u") == F.col("e1.v")) & (F.col("e3.v") == F.col("e2.v")),
-        )
-        .select(
-            F.col("e1.u").alias("a"),
-            F.col("e1.v").alias("b"),
-            F.col("e2.v").alias("c"),
-        )
-    )
+    tri, ed, _deg = _tri_relations(spark, sf_dir)
     pairs = (
         tri.select(F.col("a").alias("p"), F.col("b").alias("q"))
         .unionByName(tri.select(F.col("a").alias("p"), F.col("c").alias("q")))
@@ -635,20 +604,8 @@ def _kcore_oracle() -> str:
     # one evaluation, the same shape the Spark side's per-round
     # localCheckpoint gives.
     ctes = [
-        f"""os AS MATERIALIZED (
-        SELECT DISTINCT l_orderkey AS ok, l_suppkey AS s
-        FROM lineitem
-        JOIN orders ON o_orderkey = l_orderkey
-        WHERE o_orderdate >= TIMESTAMP '{TRI_MONTH_LO}'
-          AND o_orderdate <  TIMESTAMP '{TRI_MONTH_HI}'
-    )""",
-        """e AS MATERIALIZED (
-        SELECT DISTINCT a.s AS x, b.s AS y
-        FROM os a JOIN os b ON a.ok = b.ok AND a.s < b.s
-    )""",
-        "sym AS MATERIALIZED (SELECT x, y FROM e UNION ALL SELECT y AS x, x AS y FROM e)",
-        "n0 AS MATERIALIZED (SELECT DISTINCT x AS node FROM sym)",
-    ]
+        c.replace(" AS (", " AS MATERIALIZED (", 1) for c in _tri_ctes("sym")
+    ] + ["n0 AS MATERIALIZED (SELECT DISTINCT x AS node FROM sym)"]
     for i in range(KC_PEELS):
         ctes.append(
             f"""n{i + 1} AS MATERIALIZED (
@@ -702,33 +659,10 @@ def gr_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     decomposition (every k at once) swap the constant threshold for the
     current minimum degree, same plan per round.
     """
-    ensure_analytics_conf(spark)
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderdate") >= TRI_MONTH_LO)
-            & (F.col("o_orderdate") < TRI_MONTH_HI)
-        )
-        .select("o_orderkey")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("s")
-    )
-    os_ = li.join(o, li["ok"] == o["o_orderkey"]).select("ok", "s").distinct()
-    e = (
-        os_.alias("a")
-        .join(
-            os_.alias("b"),
-            (F.col("a.ok") == F.col("b.ok")) & (F.col("a.s") < F.col("b.s")),
-        )
-        .select(F.col("a.s").alias("x"), F.col("b.s").alias("y"))
-        .distinct()
-    )
     # the static edge list feeds every peel round — materialize once
-    sym = (
-        e.unionByName(e.select(F.col("y").alias("x"), F.col("x").alias("y")))
-        .localCheckpoint(eager=False)
-    )
+    sym = _symmetric(
+        _coservice_pairs(spark, sf_dir).select("x", "y")
+    ).localCheckpoint(eager=False)
 
     def _core_degrees(nodes: DataFrame) -> DataFrame:
         return (
@@ -782,20 +716,10 @@ AA_NEIGHBOR_CAP = 128
 
 
 def _aa_oracle() -> str:
-    return f"""
-    WITH os AS (
-        SELECT DISTINCT l_orderkey AS ok, l_suppkey AS s
-        FROM lineitem
-        JOIN orders ON o_orderkey = l_orderkey
-        WHERE o_orderdate >= TIMESTAMP '{TRI_MONTH_LO}'
-          AND o_orderdate <  TIMESTAMP '{TRI_MONTH_HI}'
-    ),
-    e AS (
-        SELECT DISTINCT a.s AS x, b.s AS y
-        FROM os a JOIN os b ON a.ok = b.ok AND a.s < b.s
-    ),
-    sym AS (SELECT x, y FROM e UNION ALL SELECT y AS x, x AS y FROM e),
-    deg AS (SELECT x AS node, COUNT(*) AS d FROM sym GROUP BY x),
+    return (
+        "\n    WITH "
+        + ",\n    ".join(_tri_ctes("deg"))
+        + f""",
     w AS (
         SELECT node,
                CAST(floor({AA_SCALE}.0 / ln(d) + 0.5) AS BIGINT) AS wi
@@ -814,6 +738,7 @@ def _aa_oracle() -> str:
     FROM sc ANTI JOIN e ON e.x = sc.u AND e.y = sc.v
     ORDER BY aa_micro DESC, u, v LIMIT {AA_TOP}
     """
+    )
 
 
 @register(
@@ -849,34 +774,10 @@ def gr_linkpred_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncated hubs cost the score almost nothing — the reason the cap is
     standard practice.
     """
-    ensure_analytics_conf(spark)
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderdate") >= TRI_MONTH_LO)
-            & (F.col("o_orderdate") < TRI_MONTH_HI)
-        )
-        .select("o_orderkey")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("s")
-    )
-    os_ = li.join(o, li["ok"] == o["o_orderkey"]).select("ok", "s").distinct()
-    ew = (
-        os_.alias("a")
-        .join(
-            os_.alias("b"),
-            (F.col("a.ok") == F.col("b.ok")) & (F.col("a.s") < F.col("b.s")),
-        )
-        .groupBy(F.col("a.s").alias("x"), F.col("b.s").alias("y"))
-        .agg(F.count("*").alias("ew"))
-        # feeds sym/deg/weights AND the closing anti-join
-        .localCheckpoint(eager=False)
-    )
+    # feeds sym/deg/weights AND the closing anti-join
+    ew = _coservice_pairs(spark, sf_dir).localCheckpoint(eager=False)
     e = ew.select("x", "y")
-    sym = ew.unionByName(
-        ew.select(F.col("y").alias("x"), F.col("x").alias("y"), "ew")
-    )
+    sym = _symmetric(ew)
     deg = sym.groupBy("x").agg(F.count("*").alias("d"))
     w = deg.filter(F.col("d") >= 2).select(
         F.col("x").alias("z"),
@@ -888,7 +789,7 @@ def gr_linkpred_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (shared-order count), neighbor-id tie-break — bounds the wedge join
     # below at CAP^2 * |V| candidate pairs
     nb_rank = F.row_number().over(
-        Window.partitionBy("x").orderBy(F.desc("ew"), F.asc("y"))
+        Window.partitionBy("x").orderBy(F.desc("w"), F.asc("y"))
     )
     capped = (
         sym.withColumn("nb_rank", nb_rank)
@@ -928,19 +829,9 @@ SEG_MIN_W = 3  # repeated co-service: edges with >= 3 shared January orders
 
 @register(
     "gr_supplier_segments",
-    oracle=f"""
-    WITH RECURSIVE os AS (
-        SELECT DISTINCT l_orderkey AS ok, l_suppkey AS s
-        FROM lineitem
-        JOIN orders ON o_orderkey = l_orderkey
-        WHERE o_orderdate >= TIMESTAMP '{TRI_MONTH_LO}'
-          AND o_orderdate <  TIMESTAMP '{TRI_MONTH_HI}'
-    ),
-    p AS (
-        SELECT a.s AS x, b.s AS y, COUNT(*) AS w
-        FROM os a JOIN os b ON a.ok = b.ok AND a.s < b.s
-        GROUP BY a.s, b.s
-    ),
+    oracle="\n    WITH RECURSIVE "
+    + ",\n    ".join(_coservice_ctes()[:2])
+    + f""",
     e AS (SELECT x, y FROM p WHERE w >= {SEG_MIN_W}),
     edges AS (SELECT x AS a, y AS b FROM e UNION SELECT y, x FROM e),
     reach(node, lbl) AS (
@@ -985,27 +876,8 @@ def gr_supplier_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .components import connected_components
 
-    ensure_analytics_conf(spark)
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderdate") >= TRI_MONTH_LO)
-            & (F.col("o_orderdate") < TRI_MONTH_HI)
-        )
-        .select("o_orderkey")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("s")
-    )
-    os_ = li.join(o, li["ok"] == o["o_orderkey"]).select("ok", "s").distinct()
     e = (
-        os_.alias("a")
-        .join(
-            os_.alias("b"),
-            (F.col("a.ok") == F.col("b.ok")) & (F.col("a.s") < F.col("b.s")),
-        )
-        .groupBy(F.col("a.s").alias("x"), F.col("b.s").alias("y"))
-        .agg(F.count("*").alias("w"))
+        _coservice_pairs(spark, sf_dir)
         .filter(F.col("w") >= SEG_MIN_W)
         .select("x", "y")
     )
@@ -1031,21 +903,8 @@ def _lpa_ctes() -> list[str]:
     re-labels every node with the weight-majority label among its
     neighbors, ties broken by the smaller label. Composable (no WITH, no
     final SELECT) so gr_modularity can score the identical label state."""
-    ctes = [
-        f"""os AS (
-        SELECT DISTINCT l_orderkey AS ok, l_suppkey AS s
-        FROM lineitem
-        JOIN orders ON o_orderkey = l_orderkey
-        WHERE o_orderdate >= TIMESTAMP '{TRI_MONTH_LO}'
-          AND o_orderdate <  TIMESTAMP '{TRI_MONTH_HI}'
-    )""",
-        """p AS (
-        SELECT a.s AS x, b.s AS y, COUNT(*) AS w
-        FROM os a JOIN os b ON a.ok = b.ok AND a.s < b.s
-        GROUP BY a.s, b.s
-    )""",
-        "edges AS (SELECT x, y, w FROM p UNION ALL SELECT y, x, w FROM p)",
-        "l0 AS (SELECT DISTINCT x AS node, x AS lbl FROM edges)",
+    ctes = _coservice_ctes() + [
+        "l0 AS (SELECT DISTINCT x AS node, x AS lbl FROM edges)"
     ]
     for r in range(LPA_ROUNDS):
         ctes.append(
@@ -1113,44 +972,16 @@ def gr_labelprop_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _coservice_weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The symmetrized weighted January co-service edge list (x, y, w) —
-    shared by label propagation, modularity scoring, and BFS so every
-    consumer sees the identical checkpointed graph."""
-    ensure_analytics_conf(spark)
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderdate") >= TRI_MONTH_LO)
-            & (F.col("o_orderdate") < TRI_MONTH_HI)
-        )
-        .select("o_orderkey")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("s")
-    )
-    os_ = li.join(o, li["ok"] == o["o_orderkey"]).select("ok", "s").distinct()
-    p = (
-        os_.alias("a")
-        .join(
-            os_.alias("b"),
-            (F.col("a.ok") == F.col("b.ok")) & (F.col("a.s") < F.col("b.s")),
-        )
-        .groupBy(F.col("a.s").alias("x"), F.col("b.s").alias("y"))
-        .agg(F.count("*").alias("w"))
-    )
-    return p.unionByName(
-        p.select(F.col("y").alias("x"), F.col("x").alias("y"), "w")
-    ).localCheckpoint(eager=False)
-
-
 def _coservice_lpa(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """(edges, final LPA labels) — the synchronous weighted-majority loop
     gr_labelprop_communities documents, factored so gr_modularity scores
     the IDENTICAL label state the communities query reports."""
-    edges = _coservice_weighted_edges(spark, sf_dir)
+    # the symmetrized weighted edges (x, y, w) feed every round
+    edges = _symmetric(_coservice_pairs(spark, sf_dir)).localCheckpoint(
+        eager=False
+    )
     labels = edges.select(F.col("x").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
@@ -1245,7 +1076,7 @@ CC_TOP = 20
 @register(
     "gr_clustering_coeff",
     oracle="WITH "
-    + _tri_ctes()
+    + ",\n    ".join(_tri_ctes())
     + f""",
     cc AS (
         SELECT d.node,
@@ -1280,7 +1111,7 @@ def gr_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     coefficient is undefined); triangle-free nodes keep coefficient 0 via
     the COALESCE, not by dropping out.
     """
-    tri, deg = _tri_relations(spark, sf_dir)
+    tri, _ed, deg = _tri_relations(spark, sf_dir)
     pn = (
         tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
         .groupBy("node")
@@ -1308,7 +1139,7 @@ def gr_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "gr_assortativity",
     oracle="WITH "
-    + _tri_ctes()
+    + ",\n    ".join(_tri_ctes())
     + """,
     de AS (
         SELECT dx.d AS x, dy.d AS y
@@ -1352,9 +1183,9 @@ def gr_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf1; at extreme |E| pre-scale degrees (d DIV 16) — Pearson is
     scale-invariant.
     """
-    e, deg = _co_edges_deg(spark, sf_dir)
-    sym = e.unionByName(e.select(F.col("y").alias("x"), F.col("x").alias("y")))
-    de = sym.join(
+    e = _coservice_pairs(spark, sf_dir).select("x", "y")
+    deg = _degrees(e)
+    de = _symmetric(e).join(
         F.broadcast(deg.select(F.col("node").alias("x"), F.col("d").alias("dx"))), "x"
     ).join(
         F.broadcast(deg.select(F.col("node").alias("y"), F.col("d").alias("dy"))), "y"
@@ -1392,18 +1223,7 @@ def _ppr_oracle() -> str:
     seeds = ", ".join(str(2 * k) for k in PPR_SEED_CUSTKEYS)
     ns = len(PPR_SEED_CUSTKEYS)
     base = f"(3 * {PR_SCALE} // 20) // {ns}"  # teleport mass per seed
-    ctes = [
-        """raw AS (
-        SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst, COUNT(*) AS w
-        FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        GROUP BY o_custkey * 2, l_suppkey * 2 + 1
-    )""",
-        """e AS (
-        SELECT src, dst, w FROM raw
-        UNION ALL
-        SELECT dst AS src, src AS dst, w FROM raw
-    )""",
-        "deg AS (SELECT src, CAST(SUM(w) AS BIGINT) AS W FROM e GROUP BY src)",
+    ctes = _bipartite_ctes() + [
         f"seeds AS (SELECT UNNEST([{seeds}]) AS node)",
         f"p0 AS (SELECT node, CAST({PR_SCALE} // {ns} AS BIGINT) AS p FROM seeds)",
     ]
@@ -1457,54 +1277,25 @@ def gr_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic as gr_pagerank — bit-identical across engines, oracle
     replays every round.
     """
-    ensure_analytics_conf(spark)
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    raw = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .groupBy(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
-        .agg(F.count("*").alias("w"))
-    )
-    rev = raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    e = raw.unionByName(rev)
-    deg = e.groupBy("src").agg(F.sum("w").cast("long").alias("outw"))
-    edges = e.join(deg, "src").localCheckpoint(eager=False)
-
+    edges = _bipartite_edges(spark, sf_dir)
     ns = len(PPR_SEED_CUSTKEYS)
-    base = (3 * PR_SCALE // 20) // ns
     seeds = spark.createDataFrame(
-        [(2 * k,) for k in PPR_SEED_CUSTKEYS], "node long"
+        [(2 * k,) for k in PPR_SEED_CUSTKEYS], "src long"
     )
-    p = seeds.select("node", F.lit(PR_SCALE // ns).cast("long").alias("p"))
+    teleport = seeds.select(
+        "src", F.lit((3 * PR_SCALE // 20) // ns).cast("long").alias("p")
+    )
+    p = seeds.select("src", F.lit(PR_SCALE // ns).cast("long").alias("p"))
     for k in range(PPR_ROUNDS):
-        # Broadcast the rank side: it is frontier-sized by PPR's design
-        # (mass only ever reaches seed-reachable nodes), while the edge
-        # list is the big side — and the post-checkpoint RDD scan carries
-        # no size stats, so without the hint every round paid a full
-        # SortMergeJoin shuffle+sort of the edge relation (measured at
-        # sf0.1: 986k edge rows re-exchanged per round; the round-body
-        # plan under the hint is committed at
-        # plans/r16/gr_personalized_pagerank_round_after.txt — judge
-        # VERDICT r15 #7). Integer sums are join-strategy-independent,
-        # so results are unchanged.
-        ranks = F.broadcast(p.alias("P"))
-        spread = (
-            edges.alias("E")
-            .join(ranks, F.col("E.src") == F.col("P.node"))
-            .groupBy(F.col("E.dst").alias("node"))
-            .agg(
-                F.expr("(85 * SUM((P.p * E.w) DIV E.outw)) DIV 100").alias("v")
-            )
-        )
+        # The rank side is frontier-sized by PPR's design (mass only ever
+        # reaches seed-reachable nodes), so it is broadcast without a
+        # count; the round-body plan under the hint is committed at
+        # plans/r16/gr_personalized_pagerank_round_after.txt.
         p = (
-            spread.unionByName(
-                seeds.select("node", F.lit(base).cast("long").alias("v"))
-            )
-            .groupBy("node")
-            .agg(F.sum("v").cast("long").alias("p"))
+            _rank_round(edges, p, PR_SPREAD)
+            .unionByName(teleport)
+            .groupBy("src")
+            .agg(F.sum("p").cast("long").alias("p"))
             # EAGER on purpose for every round that feeds the NEXT
             # round's broadcast: the all-lazy variant (build the
             # broadcast by computing the un-materialized round inside
@@ -1516,7 +1307,11 @@ def gr_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             # above the broadcast gate).
             .localCheckpoint(eager=k < PPR_ROUNDS - 1)
         )
-    return p.orderBy(F.desc("p"), F.asc("node")).limit(PPR_TOP)
+    return (
+        p.select(F.col("src").alias("node"), "p")
+        .orderBy(F.desc("p"), F.asc("node"))
+        .limit(PPR_TOP)
+    )
 
 
 # --- HITS (hubs & authorities) ----------------------------------------------------
@@ -1899,20 +1694,9 @@ BFS_MAX_HOPS = 4
 
 @register(
     "gr_bfs_distance",
-    oracle=f"""
-    WITH RECURSIVE os AS (
-        SELECT DISTINCT l_orderkey AS ok, l_suppkey AS s
-        FROM lineitem
-        JOIN orders ON o_orderkey = l_orderkey
-        WHERE o_orderdate >= TIMESTAMP '{TRI_MONTH_LO}'
-          AND o_orderdate <  TIMESTAMP '{TRI_MONTH_HI}'
-    ),
-    p AS (
-        SELECT a.s AS x, b.s AS y, COUNT(*) AS w
-        FROM os a JOIN os b ON a.ok = b.ok AND a.s < b.s
-        GROUP BY a.s, b.s
-    ),
-    edges AS (SELECT x, y, w FROM p UNION ALL SELECT y, x, w FROM p),
+    oracle="\n    WITH RECURSIVE "
+    + ",\n    ".join(_coservice_ctes())
+    + f""",
     walk(node, d) AS (
         SELECT DISTINCT x, 0 FROM edges WHERE x % {BFS_SEED_MOD} = 0
         UNION
@@ -1947,7 +1731,11 @@ def gr_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup keeper join uses; BFS_MAX_HOPS bounds the rounds independent of
     graph size (same argument as every fixed-point operator here).
     """
-    edges = _coservice_weighted_edges(spark, sf_dir).select("x", "y")
+    edges = (
+        _symmetric(_coservice_pairs(spark, sf_dir))
+        .localCheckpoint(eager=False)
+        .select("x", "y")
+    )
     seeds = (
         edges.select("x")
         .filter(F.col("x") % BFS_SEED_MOD == 0)
@@ -2028,8 +1816,9 @@ def gr_pagerank_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_nodes"),
         F.sum("d").cast("long").alias("l1_residual"),
         F.max("d").cast("long").alias("max_residual"),
+        # NULL on an empty graph, as the oracle's `// 0` (ANSI DIV raises)
         F.expr(
-            f"(count_if(d <= {PR_CONV_EPS}) * 1000000) DIV count(*)"
+            f"(count_if(d <= {PR_CONV_EPS}) * 1000000) DIV nullif(count(*), 0)"
         ).alias("converged_ppm"),
     )
 
@@ -2041,8 +1830,9 @@ REACH_TOP = 20
 
 @register(
     "gr_two_hop_reach",
-    oracle=f"""
-    WITH {_tri_ctes()},
+    oracle="\n    WITH "
+    + ",\n    ".join(_tri_ctes())
+    + f""",
     two AS (
         SELECT p.x AS u, q.y AS w
         FROM sym p JOIN sym q ON p.y = q.x
@@ -2078,10 +1868,7 @@ def gr_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     zipf-variant graph exercises exactly that. Top-k via
     TakeOrderedAndProject; no driver state.
     """
-    e, _deg = _co_edges_deg(spark, sf_dir)
-    sym = e.unionByName(
-        e.select(F.col("y").alias("x"), F.col("x").alias("y"))
-    )
+    sym = _symmetric(_coservice_pairs(spark, sf_dir).select("x", "y"))
     p = sym.select(F.col("x").alias("u"), F.col("y").alias("m"))
     q = sym.select(F.col("x").alias("m"), F.col("y").alias("w"))
     two = p.join(q, "m").filter(F.col("u") != F.col("w")).select("u", "w")
@@ -2104,9 +1891,9 @@ KATZ_TOP = 20
 
 
 def _katz_oracle() -> str:
-    # Reuse the identical raw/e/deg edge-build CTEs as the PageRank
-    # oracle so the two centralities provably walk the same graph.
-    ctes = _pr_ctes()[:3]
+    # The identical raw/e/deg edge-build CTEs as the PageRank oracle, so
+    # the two centralities provably walk the same graph.
+    ctes = _bipartite_ctes()
     ctes.append("mx AS (SELECT 2 * MAX(W) AS d FROM deg)")
     ctes.append(f"x0 AS (SELECT src AS node, CAST({KATZ_SCALE} AS BIGINT) AS x FROM deg)")
     for k in range(KATZ_ROUNDS):
@@ -2162,34 +1949,14 @@ def gr_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = edges.agg(
         F.max("outw").alias("mx"), F.countDistinct("src").alias("nv")
     ).collect()[0]
-    mxd = 2 * stats["mx"]
-    n_nodes = int(stats["nv"])
-    x = (
-        edges.select("src")
-        .distinct()
-        .select("src", F.lit(KATZ_SCALE).cast("long").alias("x"))
-    )
+    # an empty graph has no rank rows, so any nonzero divisor serves it
+    agg = f"{KATZ_SCALE} + SUM(P.p * E.w) DIV {2 * (stats['mx'] or 1)}"
+    x = _uniform_ranks(edges, KATZ_SCALE)
     for _ in range(KATZ_ROUNDS):
-        # Same size-gated rank broadcast as _pagerank_trajectory: the
-        # rank side is |V|-sized and statless post-checkpoint, so the
-        # planner's SortMergeJoin re-shuffled the edge list every round.
-        ranks = x.select(F.col("src").alias("node"), "x").alias("X")
-        if n_nodes <= PR_BCAST_MAX_NODES:
-            ranks = F.broadcast(ranks)
-        x = (
-            edges.alias("E")
-            .join(ranks, F.col("E.src") == F.col("X.node"))
-            .groupBy(F.col("E.dst").alias("nxt"))
-            .agg(
-                (F.lit(KATZ_SCALE) + F.expr(f"SUM(X.x * E.w) DIV {mxd}"))
-                .cast("long")
-                .alias("x")
-            )
-            .select(F.col("nxt").alias("src"), "x")
-            .localCheckpoint(eager=False)  # lazy: fixed rounds, one action
-        )
+        # lazy: fixed rounds, one action
+        x = _rank_round(edges, x, agg, stats["nv"]).localCheckpoint(eager=False)
     return (
-        x.select(F.col("src").alias("node"), F.col("x").alias("katz"))
+        x.select(F.col("src").alias("node"), F.col("p").alias("katz"))
         .orderBy(F.desc("katz"), F.asc("node"))
         .limit(KATZ_TOP)
     )

@@ -66,83 +66,46 @@ def _round_bodies(spark):
 
     out = []
 
-    # --- gr_pagerank / gr_pagerank_convergence round (rank join) ---
+    # --- rank rounds: gr_pagerank / gr_pagerank_convergence, gr_katz_centrality
+    # and gr_personalized_pagerank, each through the shared G._rank_round ---
     edges = G._bipartite_edges(spark, SF_DIR)
-    n_nodes = edges.select(F.countDistinct("src")).collect()[0][0]
-    base = (3 * G.PR_SCALE // 20) // n_nodes
-    p0 = (
-        edges.select("src")
-        .distinct()
-        .select("src", F.lit(G.PR_SCALE // n_nodes).cast("long").alias("p"))
-        .localCheckpoint(eager=False)
-    )
-    ranks = p0.select(F.col("src").alias("node"), "p").alias("P")
-    if n_nodes <= G.PR_BCAST_MAX_NODES:
-        ranks = F.broadcast(ranks)
-    pr_round = (
-        edges.alias("E")
-        .join(ranks, F.col("E.src") == F.col("P.node"))
-        .groupBy(F.col("E.dst").alias("nxt"))
-        .agg(
-            (
-                F.lit(base)
-                + F.expr("(85 * SUM((P.p * E.w) DIV E.outw)) DIV 100")
-            )
-            .cast("long")
-            .alias("p")
-        )
-        .select(F.col("nxt").alias("src"), "p")
-    )
-    out.append(("gr_pagerank_round", pr_round))
-
-    # --- gr_personalized_pagerank round (frontier-broadcast rank join) ---
-    ns = len(G.PPR_SEED_CUSTKEYS)
-    ppr_base = (3 * G.PR_SCALE // 20) // ns
-    seeds = spark.createDataFrame(
-        [(2 * k,) for k in G.PPR_SEED_CUSTKEYS], "node long"
-    )
-    pp = seeds.select(
-        "node", F.lit(G.PR_SCALE // ns).cast("long").alias("p")
-    ).localCheckpoint(eager=True)
-    spread = (
-        edges.alias("E")
-        .join(F.broadcast(pp.alias("P")), F.col("E.src") == F.col("P.node"))
-        .groupBy(F.col("E.dst").alias("node"))
-        .agg(F.expr("(85 * SUM((P.p * E.w) DIV E.outw)) DIV 100").alias("v"))
-    )
-    ppr_round = (
-        spread.unionByName(
-            seeds.select("node", F.lit(ppr_base).cast("long").alias("v"))
-        )
-        .groupBy("node")
-        .agg(F.sum("v").cast("long").alias("p"))
-    )
-    out.append(("gr_personalized_pagerank_round", ppr_round))
-
-    # --- gr_katz_centrality round ---
     stats = edges.agg(
         F.max("outw").alias("mx"), F.countDistinct("src").alias("nv")
     ).collect()[0]
-    mxd = 2 * stats["mx"]
-    x0 = (
-        edges.select("src")
-        .distinct()
-        .select("src", F.lit(G.KATZ_SCALE).cast("long").alias("x"))
-        .localCheckpoint(eager=False)
+    n_nodes = stats["nv"]
+    pr_base = (3 * G.PR_SCALE // 20) // n_nodes
+    pr_round = G._rank_round(
+        edges,
+        G._uniform_ranks(edges, G.PR_SCALE // n_nodes).localCheckpoint(eager=False),
+        f"{pr_base} + {G.PR_SPREAD}",
+        n_nodes,
     )
-    xr = x0.select(F.col("src").alias("node"), "x").alias("X")
-    if n_nodes <= G.PR_BCAST_MAX_NODES:
-        xr = F.broadcast(xr)
-    katz_round = (
-        edges.alias("E")
-        .join(xr, F.col("E.src") == F.col("X.node"))
-        .groupBy(F.col("E.dst").alias("nxt"))
-        .agg(
-            (F.lit(G.KATZ_SCALE) + F.expr(f"SUM(X.x * E.w) DIV {mxd}"))
-            .cast("long")
-            .alias("x")
+    out.append(("gr_pagerank_round", pr_round))
+
+    ns = len(G.PPR_SEED_CUSTKEYS)
+    seeds = spark.createDataFrame(
+        [(2 * k,) for k in G.PPR_SEED_CUSTKEYS], "src long"
+    )
+    pp = seeds.select(
+        "src", F.lit(G.PR_SCALE // ns).cast("long").alias("p")
+    ).localCheckpoint(eager=True)
+    ppr_round = (
+        G._rank_round(edges, pp, G.PR_SPREAD)
+        .unionByName(
+            seeds.select(
+                "src", F.lit((3 * G.PR_SCALE // 20) // ns).cast("long").alias("p")
+            )
         )
-        .select(F.col("nxt").alias("src"), "x")
+        .groupBy("src")
+        .agg(F.sum("p").cast("long").alias("p"))
+    )
+    out.append(("gr_personalized_pagerank_round", ppr_round))
+
+    katz_round = G._rank_round(
+        edges,
+        G._uniform_ranks(edges, G.KATZ_SCALE).localCheckpoint(eager=False),
+        f"{G.KATZ_SCALE} + SUM(P.p * E.w) DIV {2 * stats['mx']}",
+        n_nodes,
     )
     out.append(("gr_katz_centrality_round", katz_round))
 

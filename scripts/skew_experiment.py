@@ -180,30 +180,9 @@ def exp_linkpred() -> None:
     finally:
         G.AA_NEIGHBOR_CAP = cap
     # wedge CANDIDATE counts — the quantity the cap actually bounds
-    # (wall time at this graph size is fixed overhead either way); probe
-    # mirrors the operator's adjacency construction
-    o = (
-        spark.read.parquet(f"{ZIPF_DIR}/orders.parquet")
-        .filter(
-            (F.col("o_orderdate") >= G.TRI_MONTH_LO)
-            & (F.col("o_orderdate") < G.TRI_MONTH_HI)
-        )
-        .select("o_orderkey")
-    )
-    li = spark.read.parquet(f"{ZIPF_DIR}/lineitem.parquet").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("s")
-    )
-    os_ = li.join(o, li["ok"] == o["o_orderkey"]).select("ok", "s").distinct()
-    ew = (
-        os_.alias("a")
-        .join(os_.alias("b"),
-              (F.col("a.ok") == F.col("b.ok")) & (F.col("a.s") < F.col("b.s")))
-        .groupBy(F.col("a.s").alias("x"), F.col("b.s").alias("y"))
-        .agg(F.count("*").alias("ew"))
-    )
-    sym = ew.unionByName(
-        ew.select(F.col("y").alias("x"), F.col("x").alias("y"), "ew")
-    )
+    # (wall time at this graph size is fixed overhead either way); the
+    # probe reads the operator's own co-service graph build
+    sym = G._symmetric(G._coservice_pairs(spark, ZIPF_DIR))
     max_deg = sym.groupBy("x").count().agg(F.max("count")).first()[0]
 
     def wedges(rel):
@@ -215,7 +194,7 @@ def exp_linkpred() -> None:
         )
 
     nb = F.row_number().over(
-        Window.partitionBy("x").orderBy(F.desc("ew"), F.asc("y"))
+        Window.partitionBy("x").orderBy(F.desc("w"), F.asc("y"))
     )
     capped_rel = (
         sym.withColumn("r", nb).filter(F.col("r") <= cap).select("x", "y")

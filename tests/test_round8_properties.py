@@ -16,6 +16,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from .conftest import slow_full
+from .test_graph_properties import _write_coservice_graph
 
 from harvard_artifacts_collection_data_engineering_analytics_app_spark.operators.dedup import (
     ER_MATCH_GE,
@@ -397,25 +398,6 @@ def test_theil_sen_arrow_kernel_fixed_cases(spark, tmp_path_factory):
         and (y2 - y1) < 0
         for (h1, y1), (h2, y2) in _it.combinations(sorted(down), 2)
     )
-
-
-def _write_coservice_graph(spark, path, edges):
-    """Synthesize orders+lineitem so the January co-service graph equals
-    ``edges`` (each undirected edge realized by one shared order)."""
-    import datetime as dt
-
-    orders, lineitems = [], []
-    for i, (u, v) in enumerate(edges):
-        ok = i + 1
-        orders.append((ok, dt.datetime(1995, 1, 2 + (i % 20))))
-        lineitems.append((ok, u))
-        lineitems.append((ok, v))
-    spark.createDataFrame(
-        orders, "o_orderkey long, o_orderdate timestamp"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/orders.parquet")
-    spark.createDataFrame(
-        lineitems, "l_orderkey long, l_suppkey long"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/lineitem.parquet")
 
 
 def _model_bfs(edges, seed_mod, max_hops):
