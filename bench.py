@@ -4,7 +4,9 @@
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 ``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}.
+"queries": {family: sec, ...}, "sf": ..., "cpus_effective": N,
+"master": ...}, with ``cpus_effective`` the session's
+``defaultParallelism``.
 
 Each query is executed once to warm the JVM/code cache and then timed
 over TWO passes, per-query MIN committed with the per-pass totals and
@@ -720,6 +722,10 @@ def main() -> None:
         "pass_totals": pass_totals,
         "spread": full["spread"],
         "per_query_file": os.path.relpath(full_path, here),
+        # the parallelism the numbers were taken at: a record without it
+        # cannot be compared with one from a machine of another size
+        "cpus_effective": spark.sparkContext.defaultParallelism,
+        "master": spark.sparkContext.master,
     }
     if failed:
         compact["failed"] = failed

@@ -236,27 +236,36 @@ _SESSION_ARTIFACTS: dict[str, tuple[tuple[str, str], Any]] = {}
 def session_artifact(
     spark: SparkSession,
     sf_dir: str,
-    source: str,
+    source: str | tuple[str, ...],
     name: str,
     build: Callable[[], Any],
 ) -> Any:
     """The object ``build()`` made for this session and the current
-    content of ``source`` — a checkpointed DataFrame or a broadcast that
-    several queries share within a session.
+    content of ``source`` — one table or a tuple of tables — such as a
+    checkpointed DataFrame or a broadcast that several queries share
+    within a session.
 
-    One entry is kept per ``name``. A new session or a rewritten source
-    rebuilds it (one ``log_artifact_build``) and drops the old entry; a
-    superseded broadcast of the same session is ``destroy()``ed, and a
-    superseded checkpoint's blocks go with its last reference (Spark's
+    One entry is kept per ``name``. A new session or a rewrite of any
+    source table rebuilds it (one ``log_artifact_build``) and drops the
+    old entry; a superseded broadcast of the same session, held alone or
+    as a member of a tuple, is ``destroy()``ed, and a superseded
+    checkpoint's blocks go with its last reference (Spark's
     ContextCleaner)."""
-    key = (spark.sparkContext.applicationId, content_key(sf_dir, source))
+    sources = (source,) if isinstance(source, str) else source
+    key = (
+        spark.sparkContext.applicationId,
+        "-".join(content_key(sf_dir, s) for s in sources),
+    )
     held = _SESSION_ARTIFACTS.get(name)
     if held is not None:
         if held[0] == key:
             return held[1]
         del _SESSION_ARTIFACTS[name]
-        if held[0][0] == key[0] and isinstance(held[1], Broadcast):
-            held[1].destroy()
+        if held[0][0] == key[0]:
+            old = held[1]
+            for part in old if isinstance(old, tuple) else (old,):
+                if isinstance(part, Broadcast):
+                    part.destroy()
     log_artifact_build(f"{name}_{key[1]}")
     artifact = build()
     _SESSION_ARTIFACTS[name] = (key, artifact)

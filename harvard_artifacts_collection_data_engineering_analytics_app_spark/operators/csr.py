@@ -1,0 +1,21 @@
+"""Compressed sparse rows: the adjacency layout of the broadcast iteration
+kernels — the NSW beam walks (``similarity.py``) and the rank family
+(``graph.py``). Each kernel collects one edge relation to the driver,
+indexes it here, broadcasts the arrays once per session and source
+content (``catalog.session_artifact``) and then iterates inside one Arrow
+stage; above its byte cap the kernel's join loop stands instead."""
+
+from __future__ import annotations
+
+import numpy as np
+
+
+def csr(rows: np.ndarray, n_rows: int, *cols: np.ndarray) -> tuple[np.ndarray, ...]:
+    """``(indptr, *cols)`` with the entries of every column of ``cols``
+    grouped by their row position ``rows`` (int64 in ``[0, n_rows)``):
+    the entries of row ``r`` are ``col[indptr[r]:indptr[r + 1]]``, in
+    their input order."""
+    order = np.argsort(rows, kind="stable")
+    indptr = np.zeros(n_rows + 1, dtype="int64")
+    np.cumsum(np.bincount(rows, minlength=n_rows), out=indptr[1:])
+    return (indptr, *(c[order] for c in cols))

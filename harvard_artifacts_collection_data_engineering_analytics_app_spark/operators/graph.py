@@ -17,33 +17,41 @@ bit and the chained-CTE DuckDB oracle reproduces the iterations exactly
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 import pyspark.sql.functions as F
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..catalog import load_table
+from ..catalog import load_table, session_artifact
 from ..queries.registry import register
 from ..session import ensure_analytics_conf
 
 PR_SCALE = 1_000_000_000_000  # 1e12 fixed-point rank grid
 PR_ROUNDS = 3
 PR_TOP = 20
-# The damped transfer of one round, as a _rank_round aggregate: PageRank
-# adds its uniform teleport share inside the aggregate, PPR adds the
-# seeds' share after it.
-PR_SPREAD = "(85 * SUM((P.p * E.w) DIV E.outw)) DIV 100"
 
-# Broadcast the per-round rank relation when |V| is at most this many
-# nodes (a 16-byte (node, p) row → ~160 MB of broadcast at the cap).
-# Below the cap each power-iteration round is a BroadcastHashJoin that
-# never moves the edge list; above it the join falls back to the planner
-# (the SCALE.md co-partitioned recipe). Without the explicit hint the
-# post-checkpoint rank scan has no size stats, so every round paid a
-# SortMergeJoin exchange+sort of the FULL edge relation (measured at
-# sf0.1: 986k edge rows re-shuffled per round; 3 rounds 2.10 s → 0.94 s
-# with the hint, identical integer ranks). Env-overridable so a cluster
-# deployment can tune it to executor memory.
+# The rank family (gr_pagerank, gr_pagerank_convergence,
+# gr_personalized_pagerank, gr_katz_centrality) walks one graph,
+# ``_bipartite_edges``, in one of two ways (``_rank_walk``):
+# - below PR_CSR_MAX_BYTES of CSR (8 bytes per node id and indptr slot,
+#   24 per edge: src position, w, outw) the graph is collected ONCE per
+#   session and per content of orders + lineitem, broadcast as a CSR, and
+#   every round runs inside one single-partition Arrow stage
+#   (``_csr_walk``), as the NSW beam walks do; 128 MB is also the NSW
+#   vector broadcast's cap;
+# - above it each round is one ``_rank_round`` join (the 100 TB path).
+# PR_BCAST_MAX_NODES may only lower the cap: above that many nodes the
+# CSR is not built. It also decides the join loop's rank-side broadcast
+# (a 16-byte (node, p) row → ~160 MB of broadcast at the default):
+# without the explicit hint the post-checkpoint rank scan has no size
+# stats, so every round paid a SortMergeJoin exchange+sort of the FULL
+# edge relation (measured at sf0.1: 986k edge rows re-shuffled per round;
+# 3 rounds 2.10 s → 0.94 s with the hint, identical integer ranks).
+# Env-overridable so a cluster deployment can tune it to executor memory.
 import os as _os
 
+PR_CSR_MAX_BYTES = 128 << 20
 PR_BCAST_MAX_NODES = int(
     _os.environ.get("SPARK_GRAFT_PR_BCAST_MAX_NODES", str(10_000_000))
 )
@@ -112,23 +120,26 @@ def gr_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank (damping 0.85, 3 rounds) on the symmetric
     customer↔supplier co-purchase graph; returns the top-20 nodes.
 
-    Plan shape (100 TB): the canonical distributed PageRank — the edge
-    list (with out-degree attached) is built once and materialized
-    (eager localCheckpoint; a cluster job would persist and co-partition
-    edges and ranks by src so each round's join is shuffle-free on the
-    edge side). Each round is one equi-join (ranks are |V|-sized, edges
-    |E|-sized) plus one map-side-combined aggregation by dst; ranks are
-    re-checkpointed per round to truncate lineage, exactly like the
-    connected-components loop. No collect anywhere — rank state never
-    leaves the cluster.
+    Plan shape: one ``_rank_walk``. Below the CSR cap (PR_CSR_MAX_BYTES)
+    the edge list is built and collected once per session and per
+    content of orders + lineitem, and all rounds run in one
+    single-partition Arrow stage over its broadcast CSR; a warm call is
+    one job (the stage plus TakeOrderedAndProject). Above the cap (100
+    TB) it is the canonical distributed PageRank: the edge list (with
+    out-degree attached) is built and materialized once per call (a
+    cluster job would persist and co-partition edges and ranks by src so
+    each round's join is shuffle-free on the edge side), each round is
+    one equi-join (ranks are |V|-sized, edges |E|-sized) plus one
+    map-side-combined aggregation by dst, and ranks are re-checkpointed
+    per round to truncate lineage — rank state never leaves the cluster.
 
     Symmetrized edges mean no dangling nodes, so no mass-redistribution
     term is needed and the integer mass argument stays simple:
     p ≤ SCALE, w ≤ W ⇒ every product stays far below 2⁶³.
     """
-    _, p = _pagerank_trajectory(spark, sf_dir)
     return (
-        p.select(F.col("src").alias("node"), "p")
+        _rank_walk(spark, sf_dir, _pagerank_walk)
+        .select(F.col("src").alias("node"), "p")
         .orderBy(F.desc("p"), F.asc("node"))
         .limit(PR_TOP)
     )
@@ -177,11 +188,12 @@ def _uniform_ranks(edges: DataFrame, p: int) -> DataFrame:
 def _rank_round(
     edges: DataFrame, ranks: DataFrame, agg: str, n_nodes: int | None = None
 ) -> DataFrame:
-    """One rank-propagation round, the step PageRank, personalized
-    PageRank and Katz share: ``edges`` (src, dst, w, outw) ⋈ ``ranks``
-    (src, p) on src, grouped by dst, with ``agg`` as the one integer
-    aggregate (SQL over ``E.w``, ``E.outw`` and ``P.p``). Returns the
-    next (src, p), not checkpointed: each caller picks its eagerness.
+    """One rank-propagation round of the join loop, the step PageRank,
+    personalized PageRank and Katz share above the CSR cap: ``edges``
+    (src, dst, w, outw) ⋈ ``ranks`` (src, p) on src, grouped by dst, with
+    ``agg`` as the one integer aggregate (SQL over ``E.w``, ``E.outw``
+    and ``P.p``; ``_Walk.agg``). Returns the next (src, p), not
+    checkpointed: each caller picks its eagerness.
 
     The rank side is broadcast when ``n_nodes`` (|V|) is at most
     PR_BCAST_MAX_NODES; None marks a seed-frontier rank side (PPR), which
@@ -204,33 +216,228 @@ def _rank_round(
     )
 
 
-def _pagerank_trajectory(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Shared edge-build + damped integer power iteration behind BOTH
-    gr_pagerank and gr_pagerank_convergence (ADVICE r8: a private copy in
-    the convergence op would silently desynchronize the diagnostic from
-    the ranks it claims to diagnose — same factoring as _coservice_lpa).
-    Returns ``(p_prev, p_final)``: the rank relations (src, p) after
-    rounds PR_ROUNDS−1 and PR_ROUNDS, both on the exact PR_SCALE integer
-    grid and both lazily checkpointed."""
-    edges = _bipartite_edges(spark, sf_dir)
+class _Walk(NamedTuple):
+    """One rank walk, as both paths replay it. Every node of ``seeds``
+    (every graph node when None) starts at rank ``p0``. Each round, a
+    node's next rank is ``add + (mul · Σ t) DIV div`` over its incoming
+    edges, with t = (p·w) DIV outw when ``norm`` and p·w otherwise, plus
+    ``teleport`` on each seed. A node that receives no mass leaves the
+    rank relation (the join loop's GROUP BY dst) unless it is a seed;
+    "receives" means an edge from a ranked node, even one that moves 0.
+    ``bound`` is at least every rank of every round (the query's mass
+    or geometric-series argument)."""
 
-    # Node count and initial ranks read the CHECKPOINTED edges — deriving
-    # them from `deg` would re-run the whole orders⋈lineitem build once
-    # more per reference (measured ~1 s each at sf0.1). An empty graph
-    # has no rank rows, so any nonzero divisor serves it.
-    n_nodes = edges.select(F.countDistinct("src")).collect()[0][0]
-    share = max(n_nodes, 1)
-    agg = f"{(3 * PR_SCALE // 20) // share} + {PR_SPREAD}"
-    p = prev = _uniform_ranks(edges, PR_SCALE // share)
-    for _ in range(PR_ROUNDS):
-        prev = p
-        # lazy: fixed rounds, no driver read in the loop — the caller's
-        # single action materializes every round in dependency order
-        # (lineage still truncated)
-        p = _rank_round(edges, p, agg, n_nodes).localCheckpoint(eager=False)
-    return prev, p
+    rounds: int
+    p0: int
+    norm: bool
+    mul: int
+    div: int
+    add: int
+    bound: int
+    seeds: tuple[int, ...] | None = None
+    teleport: int = 0
+
+    @property
+    def agg(self) -> str:
+        """The round as a ``_rank_round`` aggregate."""
+        t = "(P.p * E.w) DIV E.outw" if self.norm else "P.p * E.w"
+        s = f"SUM({t})" if self.mul == 1 else f"({self.mul} * SUM({t}))"
+        s = f"{s} DIV {self.div}"
+        return f"{self.add} + {s}" if self.add else s
+
+    def fits(self, max_outw: int) -> bool:
+        """Every int64 the CSR kernel computes stays below 2⁶³: a product
+        p·w and a per-dst sum are at most bound·max_outw (on the
+        symmetric graph a node's in-weight is its out-weight). Where
+        this fails the join loop runs, so an overflow raises there
+        exactly as it always has."""
+        top = self.mul * self.bound * max_outw + self.add + self.teleport
+        return top < 2**63
+
+
+def _pagerank_walk(g: _RankGraph) -> _Walk:
+    """Global PageRank: uniform start, teleport share floor(0.15·SCALE)/n
+    added inside the aggregate. Ranks stay ≤ PR_SCALE: a round moves at
+    most 85% of the mass (each src splits p over its out-weight, every
+    DIV truncates) and adds at most 15%."""
+    share = max(g.n_nodes, 1)  # an empty graph has no rank rows
+    return _Walk(
+        rounds=PR_ROUNDS,
+        p0=PR_SCALE // share,
+        norm=True,
+        mul=85,
+        div=100,
+        add=(3 * PR_SCALE // 20) // share,
+        bound=PR_SCALE,
+    )
+
+
+class _RankGraph(NamedTuple):
+    """The gate statistics of ``_bipartite_edges`` and, within the cap,
+    its broadcast CSR ``(ids, indptr, src, w, outw)``: node ids sorted,
+    then the edges grouped by dst position, src as a position in ids."""
+
+    n_nodes: int
+    max_outw: int
+    nbytes: int
+    csr: Broadcast | None
+
+    def within_cap(self) -> bool:
+        return (
+            self.nbytes <= PR_CSR_MAX_BYTES and self.n_nodes <= PR_BCAST_MAX_NODES
+        )
+
+
+def _rank_graph(
+    spark: SparkSession, sf_dir: str
+) -> tuple[_RankGraph, DataFrame | None]:
+    """The session's ``_RankGraph`` for the current orders + lineitem,
+    plus the checkpointed edges when this call built it (None when it
+    was cached).
+
+    One aggregate job over the checkpointed edges gives |E|, |V| and the
+    largest weighted degree. Within the cap a second job collects the
+    edges for the CSR; above it no CSR is kept and each call's join loop
+    builds its own edges."""
+    built = []
+
+    def build() -> _RankGraph:
+        import numpy as np
+
+        from .csr import csr
+
+        edges = _bipartite_edges(spark, sf_dir)
+        built.append(edges)
+        n_edges, n_nodes, max_outw = edges.agg(
+            F.count("*"), F.countDistinct("src"), F.max("outw")
+        ).collect()[0]
+        nbytes = 8 * (3 * n_edges + 2 * n_nodes + 1)
+        g = _RankGraph(n_nodes, max_outw or 0, nbytes, None)
+        if not g.within_cap():
+            return g
+        e = edges.toPandas()
+        src, dst, w, outw = (
+            e[c].to_numpy(dtype="int64") for c in ("src", "dst", "w", "outw")
+        )
+        # symmetric edges: every dst is a src, so ids covers both ends
+        ids = np.unique(src)
+        arrays = csr(
+            np.searchsorted(ids, dst), len(ids), np.searchsorted(ids, src), w, outw
+        )
+        return g._replace(csr=spark.sparkContext.broadcast((ids, *arrays)))
+
+    g = session_artifact(spark, sf_dir, ("orders", "lineitem"), "rank_csr", build)
+    return g, (built[0] if built else None)
+
+
+def _csr_walk(csr: tuple, walk: _Walk, keep_prev: bool):
+    """Every round of ``walk`` over the CSR of ``_RankGraph``, on the join
+    loop's int64 grid: per-dst sums are ``np.add.reduceat`` over the
+    dst-grouped edges (exact integers — never a float64 bincount), and
+    ``_Walk.fits`` has proven that nothing overflows. Returns the pandas
+    (src, p) of the last round, with ``prev`` (the round before) on the
+    nodes ranked in both when ``keep_prev``."""
+    import numpy as np
+    import pandas as pd
+
+    ids, indptr, src, w, outw = csr
+    seeds = np.array(walk.seeds or (), dtype="int64")
+    # seeds outside the graph hold rank too; `at` maps graph positions
+    # into the node list
+    nodes = np.union1d(ids, seeds)
+    at = np.searchsorted(nodes, ids)
+    src_at = at[src]
+    rows = np.flatnonzero(np.diff(indptr))  # dsts with incoming edges
+    starts, dst_at = indptr[rows], at[rows]
+    seed_at = np.searchsorted(nodes, seeds)
+    p = np.zeros(len(nodes), dtype="int64")
+    live = np.zeros(len(nodes), dtype=bool)
+    first = at if walk.seeds is None else seed_at
+    p[first], live[first] = walk.p0, True
+    prev, prev_live = p, live
+    for _ in range(walk.rounds):
+        prev, prev_live = p, live
+        t = p[src_at] * w  # p is 0 off the rank relation
+        if walk.norm:
+            t //= outw
+        s = np.add.reduceat(t, starts)
+        hit = np.logical_or.reduceat(live[src_at], starts)
+        p = np.zeros_like(prev)
+        live = np.zeros_like(prev_live)
+        p[dst_at[hit]] = walk.add + walk.mul * s[hit] // walk.div
+        live[dst_at[hit]] = True
+        p[seed_at] += walk.teleport
+        live[seed_at] = True
+    out = live & prev_live if keep_prev else live
+    rank = {"src": nodes[out], "p": p[out]}
+    if keep_prev:
+        rank["prev"] = prev[out]
+    return pd.DataFrame(rank)
+
+
+def _rank_walk(
+    spark: SparkSession,
+    sf_dir: str,
+    walk_for: Callable[[_RankGraph], _Walk],
+    keep_prev: bool = False,
+) -> DataFrame:
+    """(src, p) after the last round of ``walk_for(graph)`` on
+    ``_bipartite_edges`` — plus ``prev``, the rank one round earlier, on
+    the nodes ranked in both when ``keep_prev`` — the one driver of
+    gr_pagerank, gr_pagerank_convergence, gr_personalized_pagerank and
+    gr_katz_centrality.
+
+    Within the cap (and where ``_Walk.fits``) every round runs in one
+    single-partition Arrow stage over the session's broadcast CSR; a cap
+    lowered after the build takes effect at once. Otherwise each round
+    is one ``_rank_round`` over this call's checkpointed edges. Both
+    paths give identical rows."""
+    g, edges = _rank_graph(spark, sf_dir)
+    walk = walk_for(g)
+    if g.csr is not None and g.within_cap() and walk.fits(g.max_outw):
+        bc = g.csr
+
+        def run(batches):
+            for _ in batches:  # the one-row range that pins one task
+                pass
+            yield _csr_walk(bc.value, walk, keep_prev)
+
+        schema = "src long, p long" + (", prev long" if keep_prev else "")
+        return spark.range(0, 1, 1, 1).mapInPandas(run, schema)
+
+    if edges is None:
+        edges = _bipartite_edges(spark, sf_dir)
+    if walk.seeds is None:
+        ranks, n_nodes = _uniform_ranks(edges, walk.p0), g.n_nodes
+    else:
+        # PPR: the rank side starts seed-sized and grows only along the
+        # reachable frontier, so it is broadcast without a count
+        seeds = spark.createDataFrame([(s,) for s in walk.seeds], "src long")
+        ranks = seeds.select("src", F.lit(walk.p0).cast("long").alias("p"))
+        teleport = seeds.select("src", F.lit(walk.teleport).cast("long").alias("p"))
+        n_nodes = None
+    prev = ranks
+    for k in range(walk.rounds):
+        prev = ranks
+        ranks = _rank_round(edges, ranks, walk.agg, n_nodes)
+        if walk.seeds is not None:
+            ranks = (
+                ranks.unionByName(teleport)
+                .groupBy("src")
+                .agg(F.sum("p").cast("long").alias("p"))
+            )
+        # Lazy for the global walks: fixed rounds, no driver read in the
+        # loop, so the caller's one action materializes every round in
+        # dependency order (lineage still truncated). PPR's rounds that
+        # feed the NEXT round's broadcast are EAGER: the all-lazy variant
+        # (build the broadcast by computing the un-materialized round
+        # inside the exchange) measured +47% isolated at sf0.1; its last
+        # round feeds only the final action, so it fuses into it.
+        eager = walk.seeds is not None and k < walk.rounds - 1
+        ranks = ranks.localCheckpoint(eager=eager)
+    if keep_prev:
+        return ranks.join(prev.withColumnRenamed("p", "prev"), "src")
+    return ranks
 
 
 TRI_TOP = 20
@@ -1276,41 +1483,38 @@ def gr_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: same 1e12 fixed-point integer grid and truncating-DIV
     arithmetic as gr_pagerank — bit-identical across engines, oracle
     replays every round.
+
+    Plan shape: gr_pagerank's ``_rank_walk`` with the seed-frontier
+    start. Below the CSR cap every round runs in the one Arrow stage over
+    the session's broadcast CSR (the kernel keeps the frontier and the
+    seed-teleport union); above it each round is one ``_rank_round``
+    whose frontier rank side is broadcast without a count, then the
+    union-reaggregate, eagerly checkpointed for every round that feeds
+    the next round's broadcast.
     """
-    edges = _bipartite_edges(spark, sf_dir)
-    ns = len(PPR_SEED_CUSTKEYS)
-    seeds = spark.createDataFrame(
-        [(2 * k,) for k in PPR_SEED_CUSTKEYS], "src long"
-    )
-    teleport = seeds.select(
-        "src", F.lit((3 * PR_SCALE // 20) // ns).cast("long").alias("p")
-    )
-    p = seeds.select("src", F.lit(PR_SCALE // ns).cast("long").alias("p"))
-    for k in range(PPR_ROUNDS):
-        # The rank side is frontier-sized by PPR's design (mass only ever
-        # reaches seed-reachable nodes), so it is broadcast without a
-        # count; the round-body plan under the hint is committed at
-        # plans/r16/gr_personalized_pagerank_round_after.txt.
-        p = (
-            _rank_round(edges, p, PR_SPREAD)
-            .unionByName(teleport)
-            .groupBy("src")
-            .agg(F.sum("p").cast("long").alias("p"))
-            # EAGER on purpose for every round that feeds the NEXT
-            # round's broadcast: the all-lazy variant (build the
-            # broadcast by computing the un-materialized round inside
-            # the exchange) measured +47% isolated at sf0.1 — the one
-            # loop where fusing jobs lost to materialize-then-broadcast.
-            # The LAST round feeds only the final topK action (no
-            # broadcast build), so ITS materialization job fuses into
-            # that action for free (round 16; same numbers either way
-            # above the broadcast gate).
-            .localCheckpoint(eager=k < PPR_ROUNDS - 1)
-        )
     return (
-        p.select(F.col("src").alias("node"), "p")
+        _rank_walk(spark, sf_dir, _ppr_walk)
+        .select(F.col("src").alias("node"), "p")
         .orderBy(F.desc("p"), F.asc("node"))
         .limit(PPR_TOP)
+    )
+
+
+def _ppr_walk(_g: _RankGraph) -> _Walk:
+    """Personalized PageRank: the seeds start with the mass split evenly
+    and get floor(0.15·SCALE)/|S| each round. Ranks stay ≤ PR_SCALE, by
+    gr_pagerank's mass argument."""
+    ns = len(PPR_SEED_CUSTKEYS)
+    return _Walk(
+        rounds=PPR_ROUNDS,
+        p0=PR_SCALE // ns,
+        norm=True,
+        mul=85,
+        div=100,
+        add=0,
+        bound=PR_SCALE,
+        seeds=tuple(2 * k for k in PPR_SEED_CUSTKEYS),
+        teleport=(3 * PR_SCALE // 20) // ns,
     )
 
 
@@ -1798,19 +2002,16 @@ def gr_pagerank_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact BIGINTs and both engines difference identical trajectories
     (the oracle replays the chained-CTE rounds and joins the last two).
 
-    Plan shape (100 TB): identical to gr_pagerank through round R−1, one
-    extra |V|-row equi-join (node-partitioned, same key as the rank
-    relation already shuffles on) and a scalar aggregate. Rank state
-    never leaves the executors.
+    Plan shape: gr_pagerank's ``_rank_walk``, keeping the round before
+    the last. Below the CSR cap the Arrow stage emits both ranks per node
+    and only the scalar aggregate runs in Spark; above it (100 TB) the
+    walk is identical to gr_pagerank through round R−1, plus one extra
+    |V|-row equi-join (node-partitioned, same key as the rank relation
+    already shuffles on) and the scalar aggregate. Rank state never
+    leaves the executors.
     """
-    prev, p = _pagerank_trajectory(spark, sf_dir)
-    delta = (
-        p.select(F.col("src").alias("node"), F.col("p").alias("pa"))
-        .join(
-            prev.select(F.col("src").alias("node"), F.col("p").alias("pb")),
-            "node",
-        )
-        .select(F.abs(F.col("pa") - F.col("pb")).alias("d"))
+    delta = _rank_walk(spark, sf_dir, _pagerank_walk, keep_prev=True).select(
+        F.abs(F.col("p") - F.col("prev")).alias("d")
     )
     return delta.agg(
         F.count("*").cast("long").alias("n_nodes"),
@@ -1939,24 +2140,34 @@ def gr_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     trajectory. maxW is a deterministic data statistic both engines
     compute from the same edge relation.
 
-    Plan shape (100 TB): identical to PageRank's — edges (with degree
-    attached) built and checkpointed ONCE, each round one equi-join of
-    the |V|-rank relation against co-partitioned edges plus one
-    map-side-combined agg by dst; ranks re-checkpointed per round to
-    truncate lineage. The only driver-side state is the maxW scalar.
+    Plan shape: gr_pagerank's ``_rank_walk`` — below the CSR cap every
+    round runs in the one Arrow stage over the session's broadcast CSR;
+    above it (100 TB) edges (with degree attached) are built and
+    checkpointed once per call, each round is one equi-join of the
+    |V|-rank relation against co-partitioned edges plus one
+    map-side-combined agg by dst, and ranks are re-checkpointed per round
+    to truncate lineage. The only driver-side state is the maxW scalar,
+    which the CSR gate's one aggregate job already collects.
     """
-    edges = _bipartite_edges(spark, sf_dir)
-    stats = edges.agg(
-        F.max("outw").alias("mx"), F.countDistinct("src").alias("nv")
-    ).collect()[0]
-    # an empty graph has no rank rows, so any nonzero divisor serves it
-    agg = f"{KATZ_SCALE} + SUM(P.p * E.w) DIV {2 * (stats['mx'] or 1)}"
-    x = _uniform_ranks(edges, KATZ_SCALE)
-    for _ in range(KATZ_ROUNDS):
-        # lazy: fixed rounds, one action
-        x = _rank_round(edges, x, agg, stats["nv"]).localCheckpoint(eager=False)
     return (
-        x.select(F.col("src").alias("node"), F.col("p").alias("katz"))
+        _rank_walk(spark, sf_dir, _katz_walk)
+        .select(F.col("src").alias("node"), F.col("p").alias("katz"))
         .orderBy(F.desc("katz"), F.asc("node"))
         .limit(KATZ_TOP)
+    )
+
+
+def _katz_walk(g: _RankGraph) -> _Walk:
+    """Katz: every node starts at KATZ_SCALE and each round adds
+    ``SUM(p·w) DIV 2·maxW`` to it; ranks stay below 2·KATZ_SCALE (the
+    geometric series, since a node's in-weight is at most maxW)."""
+    return _Walk(
+        rounds=KATZ_ROUNDS,
+        p0=KATZ_SCALE,
+        norm=False,
+        mul=1,
+        # an empty graph has no rank rows, so any nonzero divisor serves it
+        div=2 * (g.max_outw or 1),
+        add=KATZ_SCALE,
+        bound=2 * KATZ_SCALE,
     )

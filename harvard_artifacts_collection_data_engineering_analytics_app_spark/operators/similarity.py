@@ -4544,15 +4544,12 @@ def _nsw_adjacency_broadcast(
     def build():
         import numpy as np
 
+        from .csr import csr
+
         e = edges.select("a_id", "b_id").toPandas()
         a = np.searchsorted(ids, e["a_id"].to_numpy(dtype="int64"))
         b = e["b_id"].to_numpy(dtype="int64")
-        order = np.argsort(a, kind="stable")
-        a, b = a[order], b[order]
-        indptr = np.zeros(len(ids) + 1, dtype="int64")
-        np.add.at(indptr, a + 1, 1)
-        indptr = np.cumsum(indptr)
-        return spark.sparkContext.broadcast((indptr, b))
+        return spark.sparkContext.broadcast(csr(a, len(ids), b))
 
     return session_artifact(
         spark, sf_dir, "embeddings", f"nsw_adjacency_{index}", build

@@ -66,45 +66,43 @@ def _round_bodies(spark):
 
     out = []
 
-    # --- rank rounds: gr_pagerank / gr_pagerank_convergence, gr_katz_centrality
-    # and gr_personalized_pagerank, each through the shared G._rank_round ---
+    # --- rank rounds above the CSR cap: gr_pagerank / gr_pagerank_convergence,
+    # gr_katz_centrality and gr_personalized_pagerank, each one G._rank_round
+    # with its walk's aggregate ---
     edges = G._bipartite_edges(spark, SF_DIR)
-    stats = edges.agg(
-        F.max("outw").alias("mx"), F.countDistinct("src").alias("nv")
+    _, n_nodes, max_outw = edges.agg(
+        F.count("*"), F.countDistinct("src"), F.max("outw")
     ).collect()[0]
-    n_nodes = stats["nv"]
-    pr_base = (3 * G.PR_SCALE // 20) // n_nodes
+    g = G._RankGraph(n_nodes, max_outw, 0, None)
+    pr = G._pagerank_walk(g)
     pr_round = G._rank_round(
         edges,
-        G._uniform_ranks(edges, G.PR_SCALE // n_nodes).localCheckpoint(eager=False),
-        f"{pr_base} + {G.PR_SPREAD}",
+        G._uniform_ranks(edges, pr.p0).localCheckpoint(eager=False),
+        pr.agg,
         n_nodes,
     )
     out.append(("gr_pagerank_round", pr_round))
 
-    ns = len(G.PPR_SEED_CUSTKEYS)
-    seeds = spark.createDataFrame(
-        [(2 * k,) for k in G.PPR_SEED_CUSTKEYS], "src long"
-    )
+    ppr = G._ppr_walk(g)
+    seeds = spark.createDataFrame([(s,) for s in ppr.seeds], "src long")
     pp = seeds.select(
-        "src", F.lit(G.PR_SCALE // ns).cast("long").alias("p")
+        "src", F.lit(ppr.p0).cast("long").alias("p")
     ).localCheckpoint(eager=True)
     ppr_round = (
-        G._rank_round(edges, pp, G.PR_SPREAD)
+        G._rank_round(edges, pp, ppr.agg)
         .unionByName(
-            seeds.select(
-                "src", F.lit((3 * G.PR_SCALE // 20) // ns).cast("long").alias("p")
-            )
+            seeds.select("src", F.lit(ppr.teleport).cast("long").alias("p"))
         )
         .groupBy("src")
         .agg(F.sum("p").cast("long").alias("p"))
     )
     out.append(("gr_personalized_pagerank_round", ppr_round))
 
+    katz = G._katz_walk(g)
     katz_round = G._rank_round(
         edges,
-        G._uniform_ranks(edges, G.KATZ_SCALE).localCheckpoint(eager=False),
-        f"{G.KATZ_SCALE} + SUM(P.p * E.w) DIV {2 * stats['mx']}",
+        G._uniform_ranks(edges, katz.p0).localCheckpoint(eager=False),
+        katz.agg,
         n_nodes,
     )
     out.append(("gr_katz_centrality_round", katz_round))

@@ -1,7 +1,9 @@
 """Content-keyed artifacts in one session: a source parquet rewritten
 under the same path must rebuild every artifact derived from it, and an
 unchanged source must reuse them (``catalog.session_artifact``,
-``catalog.persisted_artifact``)."""
+``catalog.persisted_artifact``). Covers the NSW family (keyed on
+embeddings) and the rank family's broadcast CSR (keyed on orders and
+lineitem together)."""
 
 from __future__ import annotations
 
@@ -39,14 +41,22 @@ ARTIFACTS = [
 ]
 
 
-def _run(spark, data: str) -> dict:
+RANK_QUERIES = (
+    "gr_pagerank",
+    "gr_pagerank_convergence",
+    "gr_personalized_pagerank",
+    "gr_katz_centrality",
+)
+
+
+def _run(spark, data: str, queries=QUERIES) -> dict:
     """Each query's engine rows checked against its oracle; returns the
     oracle frames."""
     specs = all_specs()
     con = duckdb_connection(data)
     oracles = {}
     try:
-        for name in QUERIES:
+        for name in queries:
             got = specs[name].builder(spark, data).toPandas()
             oracles[name] = con.execute(specs[name].oracle).fetch_df()
             errs = compare(got, oracles[name])
@@ -56,17 +66,22 @@ def _run(spark, data: str) -> dict:
     return oracles
 
 
-def test_source_rewrite_mid_session_rebuilds_artifacts(
-    spark, sf_dir, tmp_path, monkeypatch
-):
+def _copy_of(sf_dir, tmp_path, table: str):
+    """A scale-factor directory of links to ``sf_dir`` with ``table``
+    copied, so the test can rewrite it; returns (dir, table path)."""
     data = tmp_path / "sf"
     data.mkdir()
     for name in os.listdir(sf_dir):
-        if name != "embeddings.parquet":
+        if name != f"{table}.parquet":
             os.symlink(os.path.join(sf_dir, name), data / name)
-    emb = data / "embeddings.parquet"
-    shutil.copyfile(os.path.join(sf_dir, "embeddings.parquet"), emb)
+    path = data / f"{table}.parquet"
+    shutil.copyfile(os.path.join(sf_dir, f"{table}.parquet"), path)
+    return data, path
 
+
+def _count_builds(monkeypatch):
+    """A function returning the prefixes of the artifacts built since
+    its last call (``log_artifact_build`` counted)."""
     builds: list[str] = []
     log = catalog.log_artifact_build
 
@@ -77,10 +92,18 @@ def test_source_rewrite_mid_session_rebuilds_artifacts(
     monkeypatch.setattr(catalog, "log_artifact_build", counted)
 
     def built() -> list[str]:
-        """Prefixes of the artifacts built since the last call."""
         out = sorted(t.rsplit("_", 1)[0] for t in builds)
         builds.clear()
         return out
+
+    return built
+
+
+def test_source_rewrite_mid_session_rebuilds_artifacts(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    data, emb = _copy_of(sf_dir, tmp_path, "embeddings")
+    built = _count_builds(monkeypatch)
 
     before = _run(spark, str(data))
     first = built()
@@ -99,3 +122,31 @@ def test_source_rewrite_mid_session_rebuilds_artifacts(
     assert first == ARTIFACTS
     assert reuse == []
     assert rebuilt == ARTIFACTS
+
+
+def test_orders_rewrite_mid_session_rebuilds_rank_csr(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The four rank queries share one CSR per content of orders +
+    lineitem: built once, reused by every later call, and rebuilt exactly
+    once when orders.parquet is rewritten under the same path."""
+    data, orders = _copy_of(sf_dir, tmp_path, "orders")
+    built = _count_builds(monkeypatch)
+
+    before = _run(spark, str(data), RANK_QUERIES)
+    first = built()
+    _run(spark, str(data), RANK_QUERIES)
+    reuse = built()
+
+    # same path, fewer rows: every fifth order goes
+    table = pq.read_table(orders)
+    keys = table.column("o_orderkey").to_numpy()
+    pq.write_table(table.filter(pa.array(keys % 5 != 0)), orders)
+    after = _run(spark, str(data), RANK_QUERIES)
+    rebuilt = built()
+
+    for name in RANK_QUERIES:
+        assert not before[name].equals(after[name]), f"{name}: no change"
+    assert first == ["rank_csr"]
+    assert reuse == []
+    assert rebuilt == ["rank_csr"]

@@ -7,7 +7,9 @@ purchase graphs — seed customers missing from the graph,
 single-supplier stars, disconnected components — the shapes the fixed
 corpus never produces. Every gr_* query also meets its DuckDB oracle on
 empty tables, and the January co-service family on one hand-shaped
-graph (clique, chain, hub, repeated edge, isolated pair).
+graph (clique, chain, hub, repeated edge, isolated pair). The four rank
+queries return identical rows from the broadcast-CSR kernel and from
+the per-round join loop (the CSR cap forced to zero).
 """
 
 from __future__ import annotations
@@ -27,6 +29,9 @@ from .oracle_harness import run_case
 from harvard_artifacts_collection_data_engineering_analytics_app_spark.catalog import (
     TABLES,
 )
+from harvard_artifacts_collection_data_engineering_analytics_app_spark.operators import (
+    graph,
+)
 from harvard_artifacts_collection_data_engineering_analytics_app_spark.operators.graph import (
     HITS_ROUNDS,
     HITS_SCALE,
@@ -44,6 +49,9 @@ from harvard_artifacts_collection_data_engineering_analytics_app_spark.operators
     gr_pagerank,
     gr_pagerank_convergence,
     gr_personalized_pagerank,
+)
+from harvard_artifacts_collection_data_engineering_analytics_app_spark.plans import (
+    explain as X,
 )
 from harvard_artifacts_collection_data_engineering_analytics_app_spark.queries import (
     registry,
@@ -324,3 +332,67 @@ def test_coservice_query_on_shaped_graph_matches_oracle(
     spec = SPECS[name]
     errs = run_case(spark, shaped_coservice_dir, name, spec.builder, spec.oracle)
     assert not errs, f"{name}: " + "; ".join(errs)
+
+
+RANK_QUERIES = (
+    "gr_katz_centrality",
+    "gr_pagerank",
+    "gr_pagerank_convergence",
+    "gr_personalized_pagerank",
+)
+
+
+def _assert_kernel_equals_loop(spark, path, names=RANK_QUERIES):
+    """Each rank query's rows from the default gate (the CSR kernel, one
+    MapInPandas stage) equal its rows with the CSR cap at zero (the
+    ``_rank_round`` join loop)."""
+    for name in names:
+        builder = SPECS[name].builder
+        kernel = builder(spark, path)
+        assert X.has_operator(kernel, "MapInPandas"), f"{name}: no kernel"
+        got = kernel.collect()
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(graph, "PR_CSR_MAX_BYTES", 0)
+            loop = builder(spark, path)
+            assert not X.has_operator(loop, "MapInPandas"), f"{name}: no loop"
+            want = loop.collect()
+        assert got == want, name
+
+
+@settings(
+    max_examples=3,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(purchase_graph())
+def test_rank_kernel_equals_join_loop_on_random_graphs(spark, tmp_path_factory, g):
+    orders, lineitem = g
+    path = str(tmp_path_factory.mktemp("rank_kernel"))
+    _write(spark, path, orders, lineitem)
+    _assert_kernel_equals_loop(spark, path)
+
+
+def test_rank_kernel_equals_join_loop_at_sf001(spark, oracle_sf_dir):
+    _assert_kernel_equals_loop(spark, oracle_sf_dir)
+
+
+def test_rank_kernel_equals_join_loop_on_empty_tables(spark, empty_purchase_dir):
+    _assert_kernel_equals_loop(spark, empty_purchase_dir)
+
+
+def test_ppr_seed_without_round_one_mass_kernel_equals_loop(spark, tmp_path):
+    """Seed customer 1 buys from suppliers 1 and 2, so its mass leaves in
+    round 1 and nothing comes back until round 2; seed customer 2 has no
+    orders at all. Both keep their teleport share on both paths."""
+    orders = [(1, 1), (2, 3)]
+    lineitem = [(1, 1), (1, 2), (2, 1)]
+    path = str(tmp_path)
+    _write(spark, path, orders, lineitem)
+    _assert_kernel_equals_loop(spark, path, ["gr_personalized_pagerank"])
+    got = [
+        (r["node"], r["p"])
+        for r in gr_personalized_pagerank(spark, path).collect()
+    ]
+    assert got == _model_ppr(orders, lineitem)
+    assert (4, (3 * PR_SCALE // 20) // len(PPR_SEED_CUSTKEYS)) in got
