@@ -3,10 +3,11 @@
 Replaces the reference's "connect to TiDB and name tables in SQL strings"
 pattern (``harvard_artifacts_app.py:315-352``) with Spark's catalog. Tables
 are columnar parquet; scans get predicate pushdown + column pruning for free.
-``load_table`` scans one driver table; derived artifacts (persisted indexes,
-session checkpoints and broadcasts) are keyed by the content of their source
-files (``content_key``, ``session_version``). The app's three store tables
-are registered as temp views by ``app.register_views``.
+``load_table`` scans one driver table with the schema ``table_schema``
+inferred once per session and file content; derived artifacts (persisted
+indexes, session checkpoints and broadcasts) are keyed by the content of
+their source files (``content_key``, ``session_version``). The app's three
+store tables are registered as temp views by ``app.register_views``.
 
 On a 100 TB deployment these would be partitioned/bucketed external tables
 (see ``SCALE.md``); the loader API is path-based so the same code serves
@@ -22,7 +23,7 @@ from typing import Any, Callable
 import pyspark.sql.functions as F
 from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 from .session import ensure_analytics_conf
 
@@ -287,6 +288,30 @@ TABLES = (
 )
 
 
+# abspath -> ((applicationId, files, nanosAsLong), schema): one entry per path
+_SCHEMAS: dict[str, tuple[tuple[str, str, str], StructType]] = {}
+
+
+def table_schema(spark: SparkSession, path: str) -> StructType:
+    """The Spark schema of the parquet table at ``path``, inferred once
+    per session, content of its files (``files_fingerprint``, the rule
+    ``session_version`` follows) and ``spark.sql.legacy.parquet.nanosAsLong``
+    (which decides how a TIMESTAMP(NANOS) column reads). Reading with it
+    (``spark.read.schema``) skips the inference job a bare
+    ``spark.read.parquet`` runs on every call."""
+    key = (
+        spark.sparkContext.applicationId,
+        ",".join(files_fingerprint(path)),
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    )
+    held = _SCHEMAS.get(os.path.abspath(path))
+    if held is not None and held[0] == key:
+        return held[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[os.path.abspath(path)] = (key, schema)
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table. Parquet → vectorized reader, pushdown, pruning.
 
@@ -307,7 +332,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_analytics_conf(spark)
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(table_schema(spark, path)).parquet(path)
     if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     for field in df.schema.fields:

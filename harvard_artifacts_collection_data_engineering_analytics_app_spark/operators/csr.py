@@ -1,9 +1,11 @@
-"""Compressed sparse rows: the adjacency layout of the broadcast iteration
-kernels — the NSW beam walks (``similarity.py``) and the rank family
-(``graph.py``). Each kernel collects one edge relation to the driver,
-indexes it here, broadcasts the arrays once per session and source
-content (``catalog.session_artifact``) and then iterates inside one Arrow
-stage; above its byte cap the kernel's join loop stands instead."""
+"""Compressed sparse rows: the adjacency layout of the iteration kernels
+below a byte cap — the NSW beam walks (``similarity.py``) and the rank
+family (``graph.py``). Each kernel collects one edge relation to the
+driver and indexes it here, once per session and source content
+(``catalog.session_artifact``). The NSW walks broadcast the arrays and
+iterate inside one Arrow stage; the rank walk keeps them on the driver
+and iterates there, so it starts no Python task. Above its byte cap the
+kernel's join loop stands instead."""
 
 from __future__ import annotations
 

@@ -384,6 +384,29 @@ def _py_text_hashing():
     return tokens, hash60
 
 
+# About the documents one Python task's fixed cost (a few tenths of a CPU
+# second, SCALE.md) would sign at ~0.2 ms a document.
+DOCS_PER_TASK = 1_000
+
+
+def _minhash_tasks(d: DataFrame) -> int:
+    """``min(defaultParallelism, ⌈rows / DOCS_PER_TASK⌉)``, where rows is
+    the parquet-footer row count of ``d``'s input files: an upper bound
+    on the rows of a scan, filter or projection, read without a Spark
+    job. A stream, or a frame that reads no local parquet files, keeps
+    ``defaultParallelism``."""
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow.parquet as pq
+
+    n = d.sparkSession.sparkContext.defaultParallelism
+    files = [] if d.isStreaming else [urlparse(f) for f in d.inputFiles()]
+    if not files or any(f.scheme != "file" for f in files):
+        return n
+    rows = sum(pq.read_metadata(unquote(f.path)).num_rows for f in files)
+    return max(1, min(n, -(-rows // DOCS_PER_TASK)))
+
+
 def _minhash_relation(d: DataFrame) -> DataFrame:
     """(doc_id, sh, m0..m31): the one MinHash signature kernel. Each
     document is tokenized, 3-shingled (distinct, first-seen order),
@@ -412,10 +435,13 @@ def _minhash_relation(d: DataFrame) -> DataFrame:
     keys are SQL text (``selectExpr``): built as Column objects, the 32
     item/alias nodes and the band md5s cost ~160 ms of driver Python per
     query, ~40× the SQL form.
-    Round-robin repartition first: the documents table often arrives as
-    one parquet split and per-doc work would otherwise pin to one core.
-    No checkpoint here: callers materialize it when they reuse it, and
-    st_near_dup_ingest feeds it a streaming frame."""
+    Round-robin repartition first, into ``_minhash_tasks(d)`` tasks: the
+    documents table often arrives as one parquet split and per-doc work
+    would otherwise pin to one core, but each Python task also costs a
+    few tenths of a CPU second however few documents it signs
+    (SCALE.md), so a small input gets one task per DOCS_PER_TASK
+    documents. No checkpoint here: callers materialize it when they
+    reuse it, and st_near_dup_ingest feeds it a streaming frame."""
     import numpy as np
     import pandas as pd
 
@@ -447,9 +473,8 @@ def _minhash_relation(d: DataFrame) -> DataFrame:
                 sigs.append(sig.min(axis=0).tolist())
             yield pd.DataFrame({"doc_id": ids, "sh": shs, "m": sigs})
 
-    n = d.sparkSession.sparkContext.defaultParallelism
     return (
-        d.repartition(n)
+        d.repartition(_minhash_tasks(d))
         .select("doc_id", "text")
         .mapInPandas(compute, "doc_id long, sh array<string>, m array<long>")
         .selectExpr("doc_id", "sh", *[f"m[{i}] AS m{i}" for i in range(NUM_HASHES)])

@@ -20,7 +20,6 @@ from __future__ import annotations
 from typing import Callable, NamedTuple
 
 import pyspark.sql.functions as F
-from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..catalog import load_table, session_artifact
@@ -36,10 +35,9 @@ PR_TOP = 20
 # ``_bipartite_edges``, in one of two ways (``_rank_walk``):
 # - below PR_CSR_MAX_BYTES of CSR (8 bytes per node id and indptr slot,
 #   24 per edge: src position, w, outw) the graph is collected ONCE per
-#   session and per content of orders + lineitem, broadcast as a CSR, and
-#   every round runs inside one single-partition Arrow stage
-#   (``_csr_walk``), as the NSW beam walks do; 128 MB is also the NSW
-#   vector broadcast's cap;
+#   session and per content of orders + lineitem into a driver-side CSR,
+#   and every round runs on the driver (``_csr_walk``); 128 MB is also
+#   the NSW vector broadcast's cap;
 # - above it each round is one ``_rank_round`` join (the 100 TB path).
 # PR_BCAST_MAX_NODES may only lower the cap: above that many nodes the
 # CSR is not built. It also decides the join loop's rank-side broadcast
@@ -122,9 +120,9 @@ def gr_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: one ``_rank_walk``. Below the CSR cap (PR_CSR_MAX_BYTES)
     the edge list is built and collected once per session and per
-    content of orders + lineitem, and all rounds run in one
-    single-partition Arrow stage over its broadcast CSR; a warm call is
-    one job (the stage plus TakeOrderedAndProject). Above the cap (100
+    content of orders + lineitem, and all rounds run on the driver over
+    its CSR; a warm call is one job (TakeOrderedAndProject over the
+    walk's ranks, with no Python worker). Above the cap (100
     TB) it is the canonical distributed PageRank: the edge list (with
     out-degree attached) is built and materialized once per call (a
     cluster job would persist and co-partition edges and ranks by src so
@@ -274,13 +272,14 @@ def _pagerank_walk(g: _RankGraph) -> _Walk:
 
 class _RankGraph(NamedTuple):
     """The gate statistics of ``_bipartite_edges`` and, within the cap,
-    its broadcast CSR ``(ids, indptr, src, w, outw)``: node ids sorted,
-    then the edges grouped by dst position, src as a position in ids."""
+    its CSR ``(ids, indptr, src, w, outw)`` as driver-side numpy arrays:
+    node ids sorted, then the edges grouped by dst position, src as a
+    position in ids."""
 
     n_nodes: int
     max_outw: int
     nbytes: int
-    csr: Broadcast | None
+    csr: tuple | None
 
     def within_cap(self) -> bool:
         return (
@@ -297,7 +296,8 @@ def _rank_graph(
 
     One aggregate job over the checkpointed edges gives |E|, |V| and the
     largest weighted degree. Within the cap a second job collects the
-    edges for the CSR; above it no CSR is kept and each call's join loop
+    edges for the CSR, which stays on the driver (no broadcast: the walk
+    runs there); above it no CSR is kept and each call's join loop
     builds its own edges."""
     built = []
 
@@ -324,7 +324,7 @@ def _rank_graph(
         arrays = csr(
             np.searchsorted(ids, dst), len(ids), np.searchsorted(ids, src), w, outw
         )
-        return g._replace(csr=spark.sparkContext.broadcast((ids, *arrays)))
+        return g._replace(csr=(ids, *arrays))
 
     g = session_artifact(spark, sf_dir, ("orders", "lineitem"), "rank_csr", build)
     return g, (built[0] if built else None)
@@ -334,11 +334,11 @@ def _csr_walk(csr: tuple, walk: _Walk, keep_prev: bool):
     """Every round of ``walk`` over the CSR of ``_RankGraph``, on the join
     loop's int64 grid: per-dst sums are ``np.add.reduceat`` over the
     dst-grouped edges (exact integers — never a float64 bincount), and
-    ``_Walk.fits`` has proven that nothing overflows. Returns the pandas
-    (src, p) of the last round, with ``prev`` (the round before) on the
-    nodes ranked in both when ``keep_prev``."""
+    ``_Walk.fits`` has proven that nothing overflows. Returns the Arrow
+    table (src, p) of the last round, with ``prev`` (the round before) on
+    the nodes ranked in both when ``keep_prev``."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     ids, indptr, src, w, outw = csr
     seeds = np.array(walk.seeds or (), dtype="int64")
@@ -372,7 +372,7 @@ def _csr_walk(csr: tuple, walk: _Walk, keep_prev: bool):
     rank = {"src": nodes[out], "p": p[out]}
     if keep_prev:
         rank["prev"] = prev[out]
-    return pd.DataFrame(rank)
+    return pa.table(rank)
 
 
 def _rank_walk(
@@ -387,23 +387,18 @@ def _rank_walk(
     gr_pagerank, gr_pagerank_convergence, gr_personalized_pagerank and
     gr_katz_centrality.
 
-    Within the cap (and where ``_Walk.fits``) every round runs in one
-    single-partition Arrow stage over the session's broadcast CSR; a cap
+    Within the cap (and where ``_Walk.fits``) every round runs on the
+    driver over the session's CSR, and the ranks enter Spark as an
+    Arrow-backed relation (no Python worker: a Python task costs a few
+    tenths of a CPU second however little it does, SCALE.md); a cap
     lowered after the build takes effect at once. Otherwise each round
     is one ``_rank_round`` over this call's checkpointed edges. Both
     paths give identical rows."""
     g, edges = _rank_graph(spark, sf_dir)
     walk = walk_for(g)
     if g.csr is not None and g.within_cap() and walk.fits(g.max_outw):
-        bc = g.csr
-
-        def run(batches):
-            for _ in batches:  # the one-row range that pins one task
-                pass
-            yield _csr_walk(bc.value, walk, keep_prev)
-
         schema = "src long, p long" + (", prev long" if keep_prev else "")
-        return spark.range(0, 1, 1, 1).mapInPandas(run, schema)
+        return spark.createDataFrame(_csr_walk(g.csr, walk, keep_prev), schema)
 
     if edges is None:
         edges = _bipartite_edges(spark, sf_dir)
@@ -1485,9 +1480,9 @@ def gr_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays every round.
 
     Plan shape: gr_pagerank's ``_rank_walk`` with the seed-frontier
-    start. Below the CSR cap every round runs in the one Arrow stage over
-    the session's broadcast CSR (the kernel keeps the frontier and the
-    seed-teleport union); above it each round is one ``_rank_round``
+    start. Below the CSR cap every round runs on the driver over the
+    session's CSR (the kernel keeps the frontier and the seed-teleport
+    union); above it each round is one ``_rank_round``
     whose frontier rank side is broadcast without a count, then the
     union-reaggregate, eagerly checkpointed for every round that feeds
     the next round's broadcast.
@@ -2003,11 +1998,11 @@ def gr_pagerank_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the oracle replays the chained-CTE rounds and joins the last two).
 
     Plan shape: gr_pagerank's ``_rank_walk``, keeping the round before
-    the last. Below the CSR cap the Arrow stage emits both ranks per node
-    and only the scalar aggregate runs in Spark; above it (100 TB) the
-    walk is identical to gr_pagerank through round R−1, plus one extra
-    |V|-row equi-join (node-partitioned, same key as the rank relation
-    already shuffles on) and the scalar aggregate. Rank state never
+    the last. Below the CSR cap the driver-side walk emits both ranks per
+    node and only the scalar aggregate runs in Spark; above it (100 TB)
+    the walk is identical to gr_pagerank through round R−1, plus one
+    extra |V|-row equi-join (node-partitioned, same key as the rank
+    relation already shuffles on) and the scalar aggregate. Rank state never
     leaves the executors.
     """
     delta = _rank_walk(spark, sf_dir, _pagerank_walk, keep_prev=True).select(
@@ -2141,7 +2136,7 @@ def gr_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     compute from the same edge relation.
 
     Plan shape: gr_pagerank's ``_rank_walk`` — below the CSR cap every
-    round runs in the one Arrow stage over the session's broadcast CSR;
+    round runs on the driver over the session's CSR;
     above it (100 TB) edges (with degree attached) are built and
     checkpointed once per call, each round is one equi-join of the
     |V|-rank relation against co-partitioned edges plus one

@@ -81,11 +81,12 @@ def read_events_stream(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
     """File-source stream of the events table (ts converted to timestamp)."""
+    from ..catalog import table_schema
     from ..session import ensure_analytics_conf
 
     ensure_analytics_conf(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    physical = spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType
+    physical = table_schema(spark, f"{sf_dir}/events.parquet")["ts"].dataType
     reader = spark.readStream.schema(_events_raw_schema(physical)).option(
         "maxFilesPerTrigger", max_files_per_trigger
     )
@@ -600,10 +601,11 @@ def read_documents_stream(
     adversarial ingest shape); scripts/streaming_trigger_experiment.py
     re-measures with all part files in ONE batch to separate micro-batch
     scheduling overhead from data volume in the sf1 scale numbers."""
+    from ..catalog import table_schema
     from ..session import ensure_analytics_conf
 
     ensure_analytics_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = table_schema(spark, f"{sf_dir}/documents.parquet")
     reader = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", max_files_per_trigger
     )

@@ -150,3 +150,30 @@ def test_orders_rewrite_mid_session_rebuilds_rank_csr(
     assert first == ["rank_csr"]
     assert reuse == []
     assert rebuilt == ["rank_csr"]
+
+
+def test_table_rewrite_with_new_schema_mid_session_reads_new_schema(
+    spark, sf_dir, tmp_path
+):
+    """``load_table`` reads with a schema inferred once per content of the
+    table's files: a warm read runs no Spark job, and a rewrite under the
+    same path with an extra column is read with the new schema."""
+    data, path = _copy_of(sf_dir, tmp_path, "supplier")
+    sc = spark.sparkContext
+    first = catalog.load_table(spark, str(data), "supplier").schema
+
+    sc.setJobGroup("warm-schema", "warm-schema")
+    try:
+        warm = catalog.load_table(spark, str(data), "supplier").schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert warm == first
+    assert sc.statusTracker().getJobIdsForGroup("warm-schema") == []
+
+    table = pq.read_table(path)
+    pq.write_table(
+        table.append_column("s_extra", pa.array([1] * table.num_rows)), path
+    )
+    df = catalog.load_table(spark, str(data), "supplier")
+    assert df.schema.names == first.names + ["s_extra"]
+    assert df.filter("s_extra = 1").count() == table.num_rows

@@ -343,18 +343,18 @@ RANK_QUERIES = (
 
 
 def _assert_kernel_equals_loop(spark, path, names=RANK_QUERIES):
-    """Each rank query's rows from the default gate (the CSR kernel, one
-    MapInPandas stage) equal its rows with the CSR cap at zero (the
-    ``_rank_round`` join loop)."""
+    """Each rank query's rows from the default gate (the CSR kernel on
+    the driver, whose ranks Spark scans as a LocalTableScan) equal its
+    rows with the CSR cap at zero (the ``_rank_round`` join loop)."""
     for name in names:
         builder = SPECS[name].builder
         kernel = builder(spark, path)
-        assert X.has_operator(kernel, "MapInPandas"), f"{name}: no kernel"
+        assert X.has_operator(kernel, "LocalTableScan"), f"{name}: no kernel"
         got = kernel.collect()
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(graph, "PR_CSR_MAX_BYTES", 0)
             loop = builder(spark, path)
-            assert not X.has_operator(loop, "MapInPandas"), f"{name}: no loop"
+            assert not X.has_operator(loop, "LocalTableScan"), f"{name}: no loop"
             want = loop.collect()
         assert got == want, name
 

@@ -10,6 +10,9 @@ from __future__ import annotations
 
 import pytest
 
+from harvard_artifacts_collection_data_engineering_analytics_app_spark.plans import (
+    explain as X,
+)
 from harvard_artifacts_collection_data_engineering_analytics_app_spark.queries import (
     registry,
 )
@@ -28,11 +31,68 @@ def _jobs(spark, group: str, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _warm_jobs(spark, sf_dir, name: str) -> int:
+    """Spark jobs of a warm call of ``name``: builder plus action, after
+    one cold call has built the session's artifacts."""
+    builder = SPECS[name].builder
+    builder(spark, sf_dir).collect()
+    return _jobs(spark, f"pin-{name}", lambda: builder(spark, sf_dir).collect())
+
+
 @pytest.mark.parametrize("name", ["gr_pagerank", "gr_katz_centrality"])
 def test_warm_rank_query_runs_at_most_two_jobs(spark, sf_dir, name):
-    """Builder plus action of a warm call: the broadcast CSR is cached,
-    so every round runs in the one MapInPandas stage."""
-    builder = SPECS[name].builder
-    builder(spark, sf_dir).collect()  # cold: builds the session's CSR
-    jobs = _jobs(spark, f"pin-{name}", lambda: builder(spark, sf_dir).collect())
+    """Builder plus action of a warm call: the CSR is cached on the
+    driver, so every round runs there and only the action is a job."""
+    jobs = _warm_jobs(spark, sf_dir, name)
     assert 1 <= jobs <= 2, f"{name}: {jobs} jobs on a warm call"
+
+
+@pytest.mark.parametrize("name", ["gr_pagerank", "gr_katz_centrality"])
+def test_warm_rank_query_starts_no_python_task(spark, sf_dir, name):
+    """The warm walk runs on the driver: no MapInPandas in the plan."""
+    builder = SPECS[name].builder
+    builder(spark, sf_dir).collect()
+    assert not X.has_operator(builder(spark, sf_dir), "MapInPandas")
+
+
+def test_small_minhash_batch_signs_in_one_task(spark, oracle_sf_dir, monkeypatch):
+    """At sf0.01 the warm dd_incremental_minhash_indexed signs its batch
+    in one Python task: the MapInPandas sits over a one-partition
+    exchange (Spark plans ``repartition(1)`` as SinglePartition)."""
+    from harvard_artifacts_collection_data_engineering_analytics_app_spark.operators import (
+        dedup,
+    )
+
+    name = "dd_incremental_minhash_indexed"
+    SPECS[name].builder(spark, oracle_sf_dir).collect()  # cold: the index
+    signed = []
+    kernel = dedup._minhash_relation
+
+    def kept(d):
+        signed.append(kernel(d))
+        return signed[-1]
+
+    monkeypatch.setattr(dedup, "_minhash_relation", kept)
+    SPECS[name].builder(spark, oracle_sf_dir).collect()
+    assert len(signed) == 1
+    plan = signed[0]._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    at = next(i for i, line in enumerate(lines) if "MapInPandas" in line)
+    below = next(line for line in lines[at:] if "Exchange" in line)
+    assert "Exchange SinglePartition" in below, "\n".join(lines)
+
+
+@pytest.mark.parametrize(
+    "name, most",
+    [
+        # one NSW walk: the index, its CSR and the vectors are cached
+        ("ss_nsw_greedy_search", 10),
+        # connected-components propagation over the LSH pair graph
+        ("dd_cluster_components", 17),
+    ],
+)
+def test_warm_fused_loop_job_count(spark, sf_dir, name, most):
+    """Builder plus action of a warm call stay within the count measured
+    when the pin was set, plus one."""
+    jobs = _warm_jobs(spark, sf_dir, name)
+    assert 1 <= jobs <= most, f"{name}: {jobs} jobs on a warm call"
