@@ -341,3 +341,36 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
     return df
 
+
+def footer_size(df: DataFrame) -> tuple[int, int] | None:
+    """(rows, uncompressed bytes) in the parquet footers of ``df``'s input
+    files, read without a Spark job: upper bounds on a scan, filter or
+    projection of those files. None for a stream, or for a frame that
+    reads no local parquet file (such as a ``createDataFrame`` relation)."""
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow.parquet as pq
+
+    files = [] if df.isStreaming else [urlparse(f) for f in df.inputFiles()]
+    if not files or any(f.scheme != "file" for f in files):
+        return None
+    metas = [pq.read_metadata(unquote(f.path)) for f in files]
+    return (
+        sum(m.num_rows for m in metas),
+        sum(
+            m.row_group(i).total_byte_size
+            for m in metas
+            for i in range(m.num_row_groups)
+        ),
+    )
+
+
+def arrow_tasks(df: DataFrame, rows_per_task: int) -> int:
+    """Tasks for a Python-worker (Arrow) stage over ``df``:
+    ``min(defaultParallelism, ⌈rows / rows_per_task⌉)`` with rows from
+    ``footer_size``, so a small input pays one task's fixed cost
+    (SCALE.md, "Fixed cost per Python task") instead of one per core.
+    ``defaultParallelism`` where the footers give no bound."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    size = footer_size(df)
+    return n if size is None else max(1, min(n, -(-size[0] // rows_per_task)))

@@ -29,10 +29,15 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 LANG_ORDER: tuple[str, ...] = ("de", "en", "es", "fr", "zh")
 
 
+# Token separators: the DuckDB oracles' RE2 ``\s`` (SQL_TOKENS) spelled out.
+# Java's ``\s`` would also match the vertical tab U+000B.
+TOKEN_SEPARATORS = r"[\t\n\f\r ]+"
+
+
 def tokens(text: Column | str) -> Column:
-    """Whitespace tokenization: split(trim(text), '\\s+')."""
+    """Whitespace tokenization: split(trim(text), TOKEN_SEPARATORS)."""
     c = F.col(text) if isinstance(text, str) else text
-    return F.split(F.trim(c), r"\s+")
+    return F.split(F.trim(c), TOKEN_SEPARATORS)
 
 
 def token_count(text: Column | str) -> Column:

@@ -22,7 +22,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..catalog import load_table, persisted_artifact
+from ..catalog import arrow_tasks, footer_size, load_table, persisted_artifact
 from ..functions import text as T
 from ..functions import text_queries as _tq
 from ..functions.text_queries import SQL_TOKENS
@@ -363,17 +363,18 @@ def _py_text_hashing():
     ``T.portable_hash60`` for the Arrow kernels. Returned as closures so
     they travel to the Python workers by value.
 
-    ASCII ``\\s`` + space-only strip: Spark splits with
-    ``split(trim(text), '\\s+')`` (Java ``\\s`` is ``[ \\t\\n\\x0b\\f\\r]``)
-    and its trim(), like DuckDB's, strips spaces only. Python's Unicode
-    ``\\s`` / ``str.strip()`` would diverge on U+00A0, U+3000 or a
-    leading tab (round-15 advice; pinned by the edge-case documents in
-    tests/test_dedup_semantics.py). The oracle's RE2 ``\\s`` differs from
-    Java's in one byte: it does not match the vertical tab \\x0b."""
+    One explicit ASCII class + U+0020-only strip, as Spark's
+    ``split(trim(text), '[\\t\\n\\f\\r ]+')`` (``T.tokens``); the
+    oracle's RE2 ``\\s`` is exactly that class. Python's Unicode ``\\s`` /
+    ``str.strip()`` would diverge on U+00A0, U+3000 or a leading tab, and
+    Java's ``\\s`` on the vertical tab U+000B (pinned by the edge-case
+    documents in tests/test_dedup_semantics.py, which also pin the one
+    known divergence from the oracle: DuckDB's trim also strips Unicode
+    space separators at the ends)."""
     import hashlib
     import re
 
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
+    ws = re.compile(T.TOKEN_SEPARATORS)
 
     def tokens(text: str) -> list[str]:
         return ws.split(text.strip(" "))
@@ -389,29 +390,11 @@ def _py_text_hashing():
 DOCS_PER_TASK = 1_000
 
 
-def _minhash_tasks(d: DataFrame) -> int:
-    """``min(defaultParallelism, ⌈rows / DOCS_PER_TASK⌉)``, where rows is
-    the parquet-footer row count of ``d``'s input files: an upper bound
-    on the rows of a scan, filter or projection, read without a Spark
-    job. A stream, or a frame that reads no local parquet files, keeps
-    ``defaultParallelism``."""
-    from urllib.parse import unquote, urlparse
-
-    import pyarrow.parquet as pq
-
-    n = d.sparkSession.sparkContext.defaultParallelism
-    files = [] if d.isStreaming else [urlparse(f) for f in d.inputFiles()]
-    if not files or any(f.scheme != "file" for f in files):
-        return n
-    rows = sum(pq.read_metadata(unquote(f.path)).num_rows for f in files)
-    return max(1, min(n, -(-rows // DOCS_PER_TASK)))
-
-
 def _minhash_relation(d: DataFrame) -> DataFrame:
     """(doc_id, sh, m0..m31): the one MinHash signature kernel. Each
     document is tokenized, 3-shingled (distinct, first-seen order),
     md5-hashed (hex[:15] → int) and minhashed under the 32 affine hashes
-    in ONE Arrow ``mapInPandas`` pass; documents with no shingle (NULL
+    in ONE numpy pass (``compute``); documents with no shingle (NULL
     text, fewer than 3 tokens) are dropped. Consumers derive their band
     keys from the ``m`` columns as JVM expressions: ``_md5_band_keys``
     (what DUCK_LSH_PAIR_CTES replays) or ``_fold_band_keys`` (the LSH
@@ -435,15 +418,24 @@ def _minhash_relation(d: DataFrame) -> DataFrame:
     keys are SQL text (``selectExpr``): built as Column objects, the 32
     item/alias nodes and the band md5s cost ~160 ms of driver Python per
     query, ~40× the SQL form.
-    Round-robin repartition first, into ``_minhash_tasks(d)`` tasks: the
-    documents table often arrives as one parquet split and per-doc work
-    would otherwise pin to one core, but each Python task also costs a
-    few tenths of a CPU second however few documents it signs
-    (SCALE.md), so a small input gets one task per DOCS_PER_TASK
-    documents. No checkpoint here: callers materialize it when they
-    reuse it, and st_near_dup_ingest feeds it a streaming frame."""
+
+    Where ``d``'s parquet footers bound it to at most DOCS_PER_TASK rows
+    and under ``graph.MINHASH_DRIVER_MAX_BYTES`` uncompressed bytes,
+    ``compute`` runs on the driver: the text arrives in one JVM-only
+    Arrow collect and the signatures enter Spark as an Arrow
+    ``LocalRelation``, so no Python task's fixed cost is paid (SCALE.md,
+    "Fixed cost per Python task"). Otherwise — a stream, a frame that
+    reads no local parquet file, or a larger input — it is one Arrow
+    ``mapInPandas`` stage after a round-robin repartition into
+    ``arrow_tasks(d, DOCS_PER_TASK)`` tasks: the documents table often
+    arrives as one parquet split and per-doc work would otherwise pin to
+    one core. Both paths give the same rows (tests/test_dedup_semantics.py).
+    No checkpoint here: callers materialize it when they reuse it, and
+    st_near_dup_ingest feeds it a streaming frame."""
     import numpy as np
     import pandas as pd
+
+    from .graph import MINHASH_DRIVER_MAX_BYTES
 
     tokens, hash60 = _py_text_hashing()
     A = np.array([a for a, _ in _AFFINE], dtype=np.uint64)
@@ -473,11 +465,31 @@ def _minhash_relation(d: DataFrame) -> DataFrame:
                 sigs.append(sig.min(axis=0).tolist())
             yield pd.DataFrame({"doc_id": ids, "sh": shs, "m": sigs})
 
-    return (
-        d.repartition(_minhash_tasks(d))
-        .select("doc_id", "text")
-        .mapInPandas(compute, "doc_id long, sh array<string>, m array<long>")
-        .selectExpr("doc_id", "sh", *[f"m[{i}] AS m{i}" for i in range(NUM_HASHES)])
+    schema = "doc_id long, sh array<string>, m array<long>"
+    size = footer_size(d)
+    if size and size[0] <= DOCS_PER_TASK and size[1] < MINHASH_DRIVER_MAX_BYTES:
+        import pyarrow as pa
+
+        docs = d.select("doc_id", "text").toArrow().to_pydict()
+        arrow = pa.schema(
+            [
+                ("doc_id", pa.int64()),
+                ("sh", pa.list_(pa.string())),
+                ("m", pa.list_(pa.int64())),
+            ]
+        )
+        signed = d.sparkSession.createDataFrame(
+            pa.Table.from_pydict(next(compute([docs])).to_dict("list"), arrow),
+            schema,
+        ).coalesce(1)
+    else:
+        signed = (
+            d.repartition(arrow_tasks(d, DOCS_PER_TASK))
+            .select("doc_id", "text")
+            .mapInPandas(compute, schema)
+        )
+    return signed.selectExpr(
+        "doc_id", "sh", *[f"m[{i}] AS m{i}" for i in range(NUM_HASHES)]
     )
 
 
@@ -635,7 +647,7 @@ _SPARK_SIMHASH = f"""
 aggregate(
   transform(sequence(0, {SIMHASH_BITS - 1}), b ->
     CASE WHEN aggregate(
-           transform(array_distinct(split(trim(text), '\\\\s+')),
+           transform(array_distinct(split(trim(text), '[\\\\t\\\\n\\\\f\\\\r ]+')),
                      t -> cast(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT)),
            0L, (acc, h) -> acc + CASE WHEN (shiftright(h, b) & 1) = 1 THEN 1 ELSE -1 END
          ) >= 0
@@ -665,8 +677,9 @@ def _simhash_relation(d: DataFrame) -> DataFrame:
     kernel's (``_py_text_hashing``), de-duplicated. NULL text signs as 0,
     as the expression and the oracle do (their token array is NULL, so
     every bit's vote is NULL and falls to the ELSE 0 branch). Round-robin
-    repartition first: one parquet split would pin per-doc work to a
-    single core.
+    repartition first, into ``arrow_tasks(d, DOCS_PER_TASK)`` tasks: one
+    parquet split would pin per-doc work to a single core, and a small
+    input pays one Python task's fixed cost, not one per core.
     """
     import numpy as np
     import pandas as pd
@@ -697,9 +710,8 @@ def _simhash_relation(d: DataFrame) -> DataFrame:
                 }
             )
 
-    n = d.sparkSession.sparkContext.defaultParallelism
     return (
-        d.repartition(n)
+        d.repartition(arrow_tasks(d, DOCS_PER_TASK))
         .select("doc_id", "text")
         .mapInPandas(compute, "doc_id long, simhash long")
     )
@@ -1029,6 +1041,11 @@ def dd_embedding_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cand.orderBy(F.desc("cosine"), F.asc("a_id"), F.asc("b_id")).limit(20)
 
 
+# About the vectors one Python task's fixed cost would bucketize at ~1.4 µs
+# a 64-dimension vector (sf0.1 embeddings, one core of a shared 4-vCPU VM).
+VECTORS_PER_TASK = 100_000
+
+
 def _emb_lsh_buckets(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, int, int]:
@@ -1077,8 +1094,7 @@ def _emb_lsh_buckets(
                 }
             )
 
-    n_par = spark.sparkContext.defaultParallelism
-    buckets = raw.repartition(n_par).mapInPandas(
+    buckets = raw.repartition(arrow_tasks(raw, VECTORS_PER_TASK)).mapInPandas(
         bucketize, "vec_id long, tbl int, bucket int"
     )
     return buckets, raw, n_vec, n_bits
@@ -1668,25 +1684,22 @@ def dd_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sh_i = sig.select(F.col("doc_id").alias("in_id"), F.col("sh").alias("sh_i"))
     sh_e = sig.select(F.col("doc_id").alias("ex_id"), F.col("sh").alias("sh_e"))
-    return _verify_incremental(cand, sh_i, sh_e)
-
-
-def _verify_incremental(
-    cand: DataFrame, sh_i: DataFrame, sh_e: DataFrame
-) -> DataFrame:
-    """Shared verification tail for the incremental dedup paths: exact
-    Jaccard on candidate pairs only, then the per-incoming-doc match agg."""
-    return (
+    return match_rollup(
         cand.join(sh_i, "in_id")
         .join(sh_e, "ex_id")
         .withColumn("jac", _jaccard("sh_i", "sh_e"))
         .filter(F.col("jac") >= JACCARD_THRESHOLD)
-        .groupBy(F.col("in_id").alias("incoming_doc_id"))
-        .agg(
-            F.min("ex_id").alias("matched_doc_id"),
-            F.countDistinct("ex_id").alias("n_matches"),
-            F.round(F.max("jac"), 6).alias("best_jaccard"),
-        )
+    )
+
+
+def match_rollup(pairs: DataFrame) -> DataFrame:
+    """The incremental dedup result from verified (in_id, ex_id, jac)
+    pairs, each pair once: per incoming document its smallest match, the
+    number of matches and the best Jaccard."""
+    return pairs.groupBy(F.col("in_id").alias("incoming_doc_id")).agg(
+        F.min("ex_id").alias("matched_doc_id"),
+        F.count("*").alias("n_matches"),
+        F.round(F.max("jac"), 6).alias("best_jaccard"),
     )
 
 
@@ -1718,35 +1731,78 @@ def corpus_dedup_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
       verification join's corpus side, likewise shuffle-free on the
       stored side.
 
+    Both have ``min(CORPUS_INDEX_BUCKETS, ⌈rows / DOCS_PER_TASK⌉)``
+    buckets, rows from the parquet footers of ``documents``, so a scan
+    runs one task per bucket and a corpus small enough to be signed on
+    the driver (one partition) writes one file per table. The count
+    never depends on the session's parallelism: the layout is persisted
+    and keyed on content alone.
+
     In production this pair is appended per ingestion batch (new docs'
     bands/shingles land in the same bucket layout); here it is rebuilt
     from the split's corpus half, which exercises the identical plan.
     """
 
     def write(band_table: str, sig_table: str) -> None:
-        sig = _minhash_relation(
-            _docs(spark, sf_dir).filter(~_incoming_pred())
-        ).localCheckpoint(eager=True)
-        (
-            _band_rows(sig, "ex_id")
-            .write.bucketBy(CORPUS_INDEX_BUCKETS, "band_idx", "band_hash")
-            .sortBy("band_idx", "band_hash")
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(band_table)
+        docs = _docs(spark, sf_dir)
+        size = footer_size(docs)
+        n = CORPUS_INDEX_BUCKETS
+        if size is not None:
+            n = max(1, min(n, -(-size[0] // DOCS_PER_TASK)))
+        sig = _minhash_relation(docs.filter(~_incoming_pred())).localCheckpoint(
+            eager=True
         )
-        (
-            sig.select(F.col("doc_id").alias("ex_id"), F.col("sh").alias("sh_e"))
-            .write.bucketBy(CORPUS_INDEX_BUCKETS, "ex_id")
-            .sortBy("ex_id")
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(sig_table)
-        )
+        for rel, keys, table in (
+            (_band_rows(sig, "ex_id"), ("band_idx", "band_hash"), band_table),
+            (sig.selectExpr("doc_id AS ex_id", "sh AS sh_e"), ("ex_id",), sig_table),
+        ):
+            (
+                rel.write.bucketBy(n, *keys)
+                .sortBy(*keys)
+                .mode("overwrite")
+                .format("parquet")
+                .saveAsTable(table)
+            )
 
     return persisted_artifact(
         spark, sf_dir, "documents", ("corpus_band_index", "corpus_signatures"),
         write,
+    )
+
+
+def index_pairs(sig: DataFrame, band_table: str, sig_table: str) -> DataFrame:
+    """(in_id, ex_id, jac): every incoming document of the signature
+    relation ``sig`` (``_minhash_relation``) paired once with each
+    stored corpus document it near-duplicates — the pair derivation of
+    dd_incremental_minhash_indexed and st_near_dup_ingest.
+
+    The shingle array rides through the band explode (``sh AS sh_i``),
+    so ``sig`` has one consumer: the batch plan needs no materialization
+    barrier, and the streaming one no stream-stream join back to the
+    signatures. Each band hit is verified against the stored shingle
+    set, then the pairs are deduplicated by (in_id, ex_id).
+
+    An index whose two tables hold under ``graph.MINHASH_DRIVER_MAX_BYTES``
+    uncompressed (parquet footers) is broadcast, so the batch side
+    streams: a batch signed on the driver is one partition, and the
+    joins and both aggregates run in one stage with no exchange. A
+    larger index streams from its buckets and the batch is broadcast or
+    shuffled to them, as Spark chooses."""
+    from .graph import MINHASH_DRIVER_MAX_BYTES
+
+    spark = sig.sparkSession
+    band, stored = spark.table(band_table), spark.table(sig_table)
+    sizes = [footer_size(t) for t in (band, stored)]
+    if all(sizes) and sum(b for _, b in sizes) < MINHASH_DRIVER_MAX_BYTES:
+        band, stored = F.broadcast(band), F.broadcast(stored)
+    return (
+        _band_rows(sig, "in_id", carry=("sh AS sh_i",))
+        .join(band, ["band_idx", "band_hash"])
+        .join(stored, "ex_id")
+        .withColumn("jac", _jaccard("sh_i", "sh_e"))
+        .filter(F.col("jac") >= JACCARD_THRESHOLD)
+        .groupBy("in_id", "ex_id")
+        .agg(F.max("jac").alias("jac"))
     )
 
 
@@ -1756,24 +1812,18 @@ def incremental_minhash_against_index(
     """The steady-state batch dedup: signature-hash ONLY the incoming
     batch (the corpus Arrow pass is amortized into the stored index),
     then candidate-join against the bucketed band index and verify
-    against the bucketed signature table.
+    against the bucketed signature table (``index_pairs``).
 
-    Plan shape: both index scans are Exchange-free (bucketed on their
-    join keys); the only shuffles move incoming-batch-sized relations —
-    the property that makes per-batch dedup cost independent of corpus
-    size (plan-asserted in tests/test_warehouse.py).
+    Plan shape: one plan with no checkpoint. Both index scans are
+    Exchange-free (bucketed on their join keys); the only shuffles move
+    incoming-batch-sized relations — the property that makes per-batch
+    dedup cost independent of corpus size (plan-asserted in
+    tests/test_dedup_semantics.py). A small batch is signed on the
+    driver (``_minhash_relation``), so a warm call starts no Python
+    task, and against a small index it runs in one stage.
     """
-    sig_i = _minhash_relation(
-        _docs(spark, sf_dir).filter(_incoming_pred())
-    ).localCheckpoint(eager=True)
-    cand = (
-        _band_rows(sig_i, "in_id")
-        .join(spark.table(band_table), ["band_idx", "band_hash"])
-        .select("in_id", "ex_id")
-        .distinct()
-    )
-    sh_i = sig_i.select(F.col("doc_id").alias("in_id"), F.col("sh").alias("sh_i"))
-    return _verify_incremental(cand, sh_i, spark.table(sig_table))
+    sig = _minhash_relation(_docs(spark, sf_dir).filter(_incoming_pred()))
+    return match_rollup(index_pairs(sig, band_table, sig_table))
 
 
 @register(

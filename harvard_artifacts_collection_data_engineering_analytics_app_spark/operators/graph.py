@@ -50,6 +50,10 @@ PR_TOP = 20
 import os as _os
 
 PR_CSR_MAX_BYTES = 128 << 20
+# The other driver-side working set: dedup._minhash_relation signs a batch
+# on the driver when its parquet footers hold at most DOCS_PER_TASK rows
+# and less than this many uncompressed bytes.
+MINHASH_DRIVER_MAX_BYTES = 16 << 20
 PR_BCAST_MAX_NODES = int(
     _os.environ.get("SPARK_GRAFT_PR_BCAST_MAX_NODES", str(10_000_000))
 )

@@ -428,54 +428,31 @@ def st_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     same split as here. Under AvailableNow replay stream≡batch, so the
     oracle is literally the batch operator's (_DUCK_INCREMENTAL).
 
-    Plan shape (100 TB): identical to dd_incremental_minhash_indexed per
-    micro-batch — the index side never re-shuffles (bucketed on its join
-    keys); signatures stream through one Arrow pass; state is one row per
+    Plan shape (100 TB): dd_incremental_minhash_indexed's pair derivation
+    (``index_pairs``) per micro-batch — the index side never re-shuffles
+    (bucketed on its join keys); signatures stream through one Arrow pass
+    (a stream is never signed on the driver); state is one row per
     verified candidate pair of the CURRENT batch, not per corpus doc.
     """
     from ..operators.dedup import (
-        JACCARD_THRESHOLD,
-        _band_rows,
         _incoming_pred,
-        _jaccard,
         _minhash_relation,
         corpus_dedup_index,
+        index_pairs,
+        match_rollup,
     )
     from .pipelines import read_documents_stream, run_to_memory
 
     ensure_analytics_conf(spark)
     band_table, sig_table = corpus_dedup_index(spark, sf_dir)
     incoming = read_documents_stream(spark, sf_dir).filter(_incoming_pred())
-    # carry the shingle array through the band explode: joining candidates
-    # back to the signatures would be a stream-stream join (needs
-    # watermarks); the stream is batch-sized, so the wider explode is the
-    # cheaper plan
-    bi = _band_rows(_minhash_relation(incoming), "in_id", carry=("sh AS sh_i",))
-    cand = bi.join(
-        spark.table(band_table), ["band_idx", "band_hash"]
-    ).select("in_id", "sh_i", "ex_id")
-    pairs = (
-        cand.join(spark.table(sig_table), "ex_id")
-        .withColumn("jac", _jaccard("sh_i", "sh_e"))
-        .filter(F.col("jac") >= JACCARD_THRESHOLD)
-        .groupBy("in_id", "ex_id")
-        .agg(F.max("jac").alias("jac"))
-    )
     run_to_memory(
-        pairs,
+        index_pairs(_minhash_relation(incoming), band_table, sig_table),
         "st_near_dup_mem",
         output_mode="complete",
         state_partitions=replay_state_partitions(sf_dir, "documents"),
     )
-    drained = spark.table("st_near_dup_mem")
-    return (
-        drained.groupBy(F.col("in_id").alias("incoming_doc_id"))
-        .agg(
-            F.min("ex_id").alias("matched_doc_id"),
-            F.countDistinct("ex_id").alias("n_matches"),
-            F.round(F.max("jac"), 6).alias("best_jaccard"),
-        )
-    )
+    return match_rollup(spark.table("st_near_dup_mem"))
 
 
 ST_TOPK_PER_WINDOW = 3

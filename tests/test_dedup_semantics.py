@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from harvard_artifacts_collection_data_engineering_analytics_app_spark.queries import (
     registry,
@@ -99,7 +100,9 @@ def test_simhash_numpy_matches_catalyst_expr(spark, sf_dir):
 
 # Hand-built documents for the kernels' edge cases: NULL and empty text,
 # fewer than 3 tokens, a leading tab, mixed ASCII whitespace runs (with a
-# vertical tab), U+00A0 and U+3000 inside tokens, repeated shingles.
+# vertical tab), U+00A0 and U+3000 inside tokens, repeated shingles, and a
+# vertical tab U+000B inside a token (the oracle's RE2 ``\s`` does not
+# split on it).
 EDGE_DOCS = [
     (1, None),
     (2, ""),
@@ -111,6 +114,7 @@ EDGE_DOCS = [
     (8, "  spaces around the words  "),
     (9, "\u3000ideographic space leads and trails\u3000"),
     (10, "trailing tab\t"),
+    (11, "vertical\x0btab stays inside one token"),
 ]
 
 
@@ -168,13 +172,15 @@ def test_numpy_signatures_bit_identical_to_expression(spark, oracle_sf_dir):
     assert len(_assert_kernels_match_expressions(docs)) > 0
     edge = spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
     # NULL, empty and two-token documents have no shingle
-    assert _assert_kernels_match_expressions(edge) == set(range(4, 11))
+    assert _assert_kernels_match_expressions(edge) == set(range(4, 12))
 
 
 def test_incremental_indexed_equals_recomputed(spark, oracle_sf_dir):
     """Batch-vs-stored-index must return exactly what batch-vs-recomputed
     does (VERDICT r4 #5): the persisted bucketed corpus index is a pure
-    materialization, not an approximation."""
+    materialization, not an approximation. The streaming twin, which
+    always signs in an Arrow stage, shares the index pair derivation and
+    must return the same rows too."""
     from harvard_artifacts_collection_data_engineering_analytics_app_spark.operators import (
         dedup as D,
     )
@@ -185,7 +191,85 @@ def test_incremental_indexed_equals_recomputed(spark, oracle_sf_dir):
     recomputed = rows(D.dd_incremental_minhash(spark, oracle_sf_dir))
     indexed = rows(D.dd_incremental_minhash_indexed(spark, oracle_sf_dir))
     assert indexed == recomputed
+    assert rows(SPECS["st_near_dup_ingest"].builder(spark, oracle_sf_dir)) == indexed
     assert len(indexed) > 0, "fixture should produce at least one match"
+
+
+def _documents_dir(spark, path, docs) -> str:
+    """A table directory holding ``documents.parquet`` with ``docs``."""
+    spark.createDataFrame(docs, "doc_id long, text string").coalesce(1).write.parquet(
+        f"{path}/documents.parquet"
+    )
+    return str(path)
+
+
+@pytest.mark.parametrize("source", ["sf_dir", "oracle_sf_dir", "empty", "edge"])
+def test_signing_paths_return_equal_rows(spark, request, tmp_path, monkeypatch, source):
+    """_minhash_relation signs a small parquet input on the driver and a
+    large one in an Arrow stage (forced here with a zero byte cap); both
+    paths give identical rows (doc_id, shingles and the 32 minhashes) on
+    the test tables, on an empty documents table and on the edge-case
+    documents."""
+    from harvard_artifacts_collection_data_engineering_analytics_app_spark.operators import (
+        dedup as D,
+    )
+    from harvard_artifacts_collection_data_engineering_analytics_app_spark.operators import (
+        graph,
+    )
+    from harvard_artifacts_collection_data_engineering_analytics_app_spark.plans.explain import (
+        has_operator,
+    )
+
+    if source in ("empty", "edge"):
+        sf = _documents_dir(spark, tmp_path, EDGE_DOCS if source == "edge" else [])
+    else:
+        sf = request.getfixturevalue(source)  # sf0.001 and sf0.01
+
+    def signed():
+        sig = D._minhash_relation(D._docs(spark, sf))
+        return sig, sorted(
+            (r["doc_id"], tuple(r["sh"]), *(r[f"m{i}"] for i in range(D.NUM_HASHES)))
+            for r in sig.collect()
+        )
+
+    on_driver, driver_rows = signed()
+    monkeypatch.setattr(graph, "MINHASH_DRIVER_MAX_BYTES", 0)
+    in_arrow, arrow_rows = signed()
+    assert not has_operator(on_driver, "MapInPandas")
+    assert has_operator(in_arrow, "MapInPandas")
+    assert driver_rows == arrow_rows
+    if source == "edge":
+        assert {r[0] for r in driver_rows} == set(range(4, 12))
+
+
+def test_tokens_match_oracle_on_edge_documents(spark, tmp_path):
+    """Spark's tokenizer (T.tokens) splits exactly where the DuckDB
+    oracle's RE2 ``\\s+`` does — also on U+000B, which Java's ``\\s``
+    would split on — checked through tx_token_stats and its oracle on
+    the edge-case documents."""
+    import duckdb
+
+    from .oracle_harness import compare
+
+    sf = _documents_dir(spark, tmp_path, EDGE_DOCS)
+    spec = SPECS["tx_token_stats"]
+    got = spec.builder(spark, sf).toPandas()
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet/*.parquet'"
+        )
+        want = con.execute(spec.oracle).fetch_df()
+    finally:
+        con.close()
+    # A known divergence, still open: DuckDB's trim() also strips Unicode
+    # space separators (U+00A0, U+3000, ...) at the ends, Spark's only
+    # U+0020, so document 9 (U+3000 at both ends) keeps them in its first
+    # and last token on the Spark side.
+    apart = got.doc_id == 9, want.doc_id == 9
+    assert compare(got[~apart[0]], want[~apart[1]]) == []
+    assert compare(got[apart[0]], want[apart[1]]) != []
+    assert got.set_index("doc_id").loc[11, "n_tokens"] == 5
 
 
 def test_incremental_index_scan_has_no_exchange(spark, oracle_sf_dir):

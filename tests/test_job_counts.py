@@ -55,16 +55,30 @@ def test_warm_rank_query_starts_no_python_task(spark, sf_dir, name):
     assert not X.has_operator(builder(spark, sf_dir), "MapInPandas")
 
 
+def test_warm_incremental_dedup_starts_no_python_task(spark, oracle_sf_dir):
+    """At sf0.01 a warm dd_incremental_minhash_indexed signs its 50-odd
+    incoming documents on the driver and runs as one plan: no
+    MapInPandas, and builder plus action run at most 4 jobs (the Arrow
+    collect of the batch, the two index broadcasts and the result)."""
+    name = "dd_incremental_minhash_indexed"
+    jobs = _warm_jobs(spark, oracle_sf_dir, name)
+    assert not X.has_operator(SPECS[name].builder(spark, oracle_sf_dir), "MapInPandas")
+    assert 1 <= jobs <= 4, f"{name}: {jobs} jobs on a warm call"
+
+
 def test_small_minhash_batch_signs_in_one_task(spark, oracle_sf_dir, monkeypatch):
-    """At sf0.01 the warm dd_incremental_minhash_indexed signs its batch
-    in one Python task: the MapInPandas sits over a one-partition
-    exchange (Spark plans ``repartition(1)`` as SinglePartition)."""
+    """With the driver path forced off, the warm dd_incremental_minhash_indexed
+    at sf0.01 signs its batch in one Python task: the MapInPandas sits
+    over a one-partition exchange (Spark plans ``repartition(1)`` as
+    SinglePartition)."""
     from harvard_artifacts_collection_data_engineering_analytics_app_spark.operators import (
         dedup,
+        graph,
     )
 
     name = "dd_incremental_minhash_indexed"
     SPECS[name].builder(spark, oracle_sf_dir).collect()  # cold: the index
+    monkeypatch.setattr(graph, "MINHASH_DRIVER_MAX_BYTES", 0)
     signed = []
     kernel = dedup._minhash_relation
 
