@@ -15,11 +15,17 @@ can run the same flow with:
 container); pass a real fetcher programmatically via :func:`collect`.
 
 The store is read with the declared schemas (``schemas.ARTIFACT_*``), so
-no read launches a schema-inference job. E3 registers the three store
-tables as temp views once per store version: a repeat query reuses them,
-while an ``insert`` (new files), a new session or another workdir makes
-the next query register them again (:func:`register_views`). Every
-stdout line of the CLI is one JSON object.
+no read launches a schema-inference job, and ``insert`` takes its row
+counts from the parquet footers. E3 registers the three store tables as
+temp views once per store version: a repeat query reuses them, while an
+``insert`` (new files), a new session or another workdir makes the next
+query register them again (:func:`register_views`). A table within
+Spark's per-task scan limit (``spark.sql.files.maxPartitionBytes``) is
+registered as one partition, so the templates plan no shuffle over it,
+and it is cached in memory on its second read in one store version
+(:func:`query`); a new version unpersists it. SCALE.md ("The reference
+store in memory") gives the rule and the memory it holds. Every stdout
+line of the CLI is one JSON object.
 """
 
 from __future__ import annotations
@@ -27,6 +33,9 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
+from collections import Counter
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -65,7 +74,8 @@ def insert(spark: SparkSession, workdir: str) -> dict[str, int]:
     only their records reach the three tables — so an id's colors, like
     its metadata and media, are the ones first delivered. The new-id
     batch is checkpointed because the first append changes what a
-    re-read of the store would return.
+    re-read of the store would return. The row count of each table is
+    read from its parquet footers, without a Spark job.
     """
     raw = spark.read.schema(RAW_ARTIFACT).parquet(f"{workdir}/raw")
     append = os.path.exists(f"{workdir}/artifactmetadata")
@@ -76,7 +86,7 @@ def insert(spark: SparkSession, workdir: str) -> dict[str, int]:
     for name, df in A.transform_all(raw).items():
         path = f"{workdir}/{name}"
         df.write.mode("append" if append else "overwrite").parquet(path)
-        counts[name] = read_table(spark, workdir, name).count()
+        counts[name] = catalog.footer_size(read_table(spark, workdir, name))[0]
     return counts
 
 
@@ -85,32 +95,96 @@ def read_table(spark: SparkSession, workdir: str, name: str) -> DataFrame:
     return spark.read.schema(ARTIFACT_SCHEMAS[name]).parquet(f"{workdir}/{name}")
 
 
-# (session, catalog.session_version of the store) the temp views were last
-# registered for; temp views belong to one SparkSession, so a session made
-# by ``newSession()`` (same application) registers its own
-_registered: tuple[SparkSession, tuple[str, str]] | None = None
+# The tables each template reads, by name.
+TEMPLATE_TABLES = {
+    name: tuple(t for t in ARTIFACT_TABLES if re.search(rf"\b{t}\b", sql))
+    for name, sql in AT.QUERY_TEMPLATES.items()
+}
+# The read of a one-partition table, within one store version, that
+# caches it: the second, so a store read once per version (an insert,
+# then one query per table) never pays to fill a cache it will not reuse.
+CACHE_ON_READ = 2
+
+
+@dataclass
+class _Views:
+    """The store the temp views hold: the session, store version and
+    ``spark.sql.files.maxPartitionBytes`` they were registered for, the
+    relation behind each view that reads its table as one partition,
+    and the reads of each table counted by ``query``."""
+
+    spark: SparkSession
+    version: tuple[str, str]
+    limit: int
+    one_partition: dict[str, DataFrame]
+    reads: Counter = field(default_factory=Counter)
+
+
+_views: _Views | None = None
+
+
+def _release(app_id: str) -> None:
+    """Forget the registered store and unpersist what it cached. A store
+    of another application is dropped as it is: its session has stopped,
+    and its cache went with it."""
+    global _views
+    if _views is not None and _views.version[0] == app_id:
+        for df in _views.one_partition.values():
+            if df.is_cached:
+                df.unpersist()
+    _views = None
 
 
 def register_views(spark: SparkSession, workdir: str) -> None:
     """Register the three store tables as temp views, once per store
-    version: a no-op while the session and every file of the three
-    tables are the ones the views were registered for. An ``insert``
-    appends files and so changes the version; the next call re-lists
-    the store and registers the views again."""
-    global _registered
+    version: a no-op while the session, every file of the three tables
+    and the session's ``spark.sql.files.maxPartitionBytes`` are the ones
+    the views were registered for. An ``insert`` appends files and so
+    changes the version; the next call unpersists what the old version
+    cached and registers the views again.
+
+    A table whose parquet footers hold at most ``maxPartitionBytes`` —
+    Spark's own limit on the bytes of one scan task — is registered as
+    one partition (``coalesce(1)``): its plan has ``SinglePartition``
+    output, which satisfies every aggregate, DISTINCT and global sort,
+    so no template plans a shuffle over it. A larger table is read from
+    its parquet files in as many tasks as Spark splits it into."""
+    global _views
+    limit = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     version = catalog.session_version(
         spark, *(f"{workdir}/{name}" for name in ARTIFACT_TABLES)
     )
-    if _registered == (spark, version):
+    if _views is not None and (_views.spark, _views.version, _views.limit) == (
+        spark, version, limit
+    ):
         return
+    # Unpersist before any plan of the new version runs: Spark's cache
+    # matches a parquet relation by its root paths, not by its files, so
+    # a relation cached for the old version would answer the new one.
+    _release(version[0])
+    one_partition = {}
     for name in ARTIFACT_TABLES:
-        read_table(spark, workdir, name).createOrReplaceTempView(name)
-    _registered = (spark, version)
+        df = read_table(spark, workdir, name)
+        size = catalog.footer_size(df)
+        if size is not None and size[1] <= limit:
+            df = one_partition[name] = df.coalesce(1)
+        df.createOrReplaceTempView(name)
+    _views = _Views(spark, version, limit, one_partition)
 
 
 def query(spark: SparkSession, workdir: str, name: str) -> DataFrame:
-    """E3: run one of the reference's 20 templates on the warehouse."""
+    """E3: run one of the reference's 20 templates on the warehouse.
+
+    Counts the reads of each table the template names; a one-partition
+    table is cached (``DataFrame.cache``) on its ``CACHE_ON_READ``-th
+    read in one store version. The view holds the same plan, so this
+    and every later query over it scan the in-memory relation."""
     register_views(spark, workdir)
+    for table in TEMPLATE_TABLES[name]:
+        _views.reads[table] += 1
+        df = _views.one_partition.get(table)
+        if df is not None and _views.reads[table] >= CACHE_ON_READ and not df.is_cached:
+            df.cache()
     return spark.sql(AT.spark_sql(name))
 
 

@@ -32,6 +32,9 @@ LANG_ORDER: tuple[str, ...] = ("de", "en", "es", "fr", "zh")
 # Token separators: the DuckDB oracles' RE2 ``\s`` (SQL_TOKENS) spelled out.
 # Java's ``\s`` would also match the vertical tab U+000B.
 TOKEN_SEPARATORS = r"[\t\n\f\r ]+"
+# What a symbol ratio does not count: ASCII letters, digits and the RE2
+# ``\s`` above (the oracles' ``[A-Za-z0-9\s]``).
+NON_SYMBOL = r"[A-Za-z0-9\t\n\f\r ]"
 
 
 def tokens(text: Column | str) -> Column:

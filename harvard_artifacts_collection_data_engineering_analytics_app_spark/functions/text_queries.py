@@ -443,7 +443,7 @@ def _gopher_signals(text: str = "text"):
         sum_len.cast("double") / F.nullif(F.size(toks), F.lit(0)), 6
     )
     symbol_ratio = F.round(
-        F.length(F.regexp_replace(text, r"[A-Za-z0-9\s]", "")).cast("double")
+        F.length(F.regexp_replace(text, T.NON_SYMBOL, "")).cast("double")
         / F.nullif(F.length(text), F.lit(0)),
         6,
     )
@@ -1184,7 +1184,7 @@ def tx_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum_len = F.aggregate(F.transform(toks, F.length), F.lit(0), lambda a, x: a + x)
     mean_len = F.round(sum_len.cast("double") / F.nullif(F.size(toks), F.lit(0)), 6)
     symbol_ratio = F.round(
-        F.length(F.regexp_replace("text", r"[A-Za-z\d\s]", "")).cast("double")
+        F.length(F.regexp_replace("text", T.NON_SYMBOL, "")).cast("double")
         / F.nullif(F.length("text"), F.lit(0)),
         6,
     )
@@ -2219,7 +2219,7 @@ def tx_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = (
         d.select(
             "source",
-            F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("w"),
+            F.explode(T.tokens(F.lower("text"))).alias("w"),
         )
         .distinct()
     )
@@ -2300,11 +2300,7 @@ def tx_mixture_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the first aggregate is per-source, not per-document.
     """
     d = _t(spark, sf_dir, "documents")
-    n = d.groupBy("source").agg(
-        F.sum(F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")).alias(
-            "n_tokens"
-        )
-    )
+    n = d.groupBy("source").agg(F.sum(T.token_count("text")).alias("n_tokens"))
     w = n.select(
         "source",
         "n_tokens",
@@ -2385,7 +2381,7 @@ def tx_unigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = (
         d.select(
             "source",
-            F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("w"),
+            F.explode(T.tokens(F.lower("text"))).alias("w"),
         )
         .groupBy("source", "w")
         .agg(F.count("*").alias("cnt"))
@@ -2755,7 +2751,7 @@ def tx_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     code_punct = F.regexp_count(F.col("text"), F.lit(CODE_PUNCT_RE)).cast("long")
     symbol_ratio = F.round(
-        F.length(F.regexp_replace("text", r"[A-Za-z0-9\s]", "")).cast("double")
+        F.length(F.regexp_replace("text", T.NON_SYMBOL, "")).cast("double")
         / F.nullif(F.length("text"), F.lit(0)),
         6,
     )
@@ -2887,7 +2883,7 @@ def tx_template_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.trim(
             F.regexp_replace(
                 F.regexp_replace(F.lower(F.col("text")), "[0-9]+", "#"),
-                r"\s+",
+                T.TOKEN_SEPARATORS,
                 " ",
             )
         )
@@ -3126,7 +3122,7 @@ def tx_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
         "source",
-        F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("w"),
+        F.explode(T.tokens(F.lower("text"))).alias("w"),
     )
     freq = tok.groupBy("w").agg(F.count("*").alias("c"))
     vocab = (

@@ -581,7 +581,7 @@ def st_quality_filter_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         6,
     )
     symbol_ratio = F.round(
-        F.length(F.regexp_replace("text", r"[A-Za-z0-9\s]", "")).cast("double")
+        F.length(F.regexp_replace("text", T.NON_SYMBOL, "")).cast("double")
         / F.nullif(F.length("text"), F.lit(0)),
         6,
     )
@@ -641,6 +641,7 @@ def st_template_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents for its rank). Under AvailableNow replay stream≡batch, so
     the oracle is the batch twin's SQL verbatim.
     """
+    from ..functions import text as T
     from ..functions.text_queries import TEMPLATE_TOP
     from .pipelines import read_documents_stream
 
@@ -650,7 +651,7 @@ def st_template_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.trim(
             F.regexp_replace(
                 F.regexp_replace(F.lower(F.col("text")), "[0-9]+", "#"),
-                r"\s+",
+                T.TOKEN_SEPARATORS,
                 " ",
             )
         )

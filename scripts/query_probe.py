@@ -2,11 +2,17 @@
 """Where a warm call of one registered query spends its Spark work and CPU.
 
     python scripts/query_probe.py NAME --sf DIR [--calls N]
+    python scripts/query_probe.py qN --store WORKDIR [--calls N]
 
 Runs ``NAME`` once cold (building any persisted or session artifact),
 then ``N`` warm calls (default 3), each as two job groups: the builder
-(``spec.builder(spark, sf)``) and the action (``toPandas``). For every
-warm call it prints:
+(``spec.builder(spark, sf)``) and the action (``toPandas``). With
+``--store``, ``NAME`` is one of the reference's 20 templates and the
+builder is ``app.query(spark, WORKDIR, NAME)`` on a store that
+``app.collect`` and ``app.insert`` wrote: the cold call is each table's
+first read, the first warm call caches the one-partition tables it
+reads (their second read), and later calls read them from memory. For
+every warm call it prints:
 
 - jobs, stages and tasks per job group (``statusTracker``; a stage is
   counted when it ran at least one task, so stages AQE reused or skipped
@@ -118,10 +124,14 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("name")
     sf = os.environ.get("SPARK_GRAFT_SF_DIR")
-    ap.add_argument("--sf", default=sf, required=sf is None)
+    ap.add_argument("--sf", default=sf)
+    ap.add_argument("--store", help="a reference store (overrides --sf); NAME: q1..q20")
     ap.add_argument("--calls", type=int, default=3)
     args = ap.parse_args()
+    if args.sf is None and args.store is None:
+        ap.error("--sf (or $SPARK_GRAFT_SF_DIR) or --store is required")
 
+    from harvard_artifacts_collection_data_engineering_analytics_app_spark import app
     from harvard_artifacts_collection_data_engineering_analytics_app_spark.queries import (
         registry,
     )
@@ -129,7 +139,12 @@ def main() -> int:
         get_spark,
     )
 
-    builder = registry.all_specs()[args.name].builder
+    source = args.store or args.sf
+    if args.store:
+        def builder(spark, store):
+            return app.query(spark, store, args.name)
+    else:
+        builder = registry.all_specs()[args.name].builder
     work = tempfile.mkdtemp(prefix="query_probe_")
     spark = get_spark(
         app_name="query-probe",
@@ -144,8 +159,8 @@ def main() -> int:
         me = os.getpid()
         jvm = spark._jvm.java.lang.ProcessHandle.current().pid()
         t0 = time.perf_counter()
-        builder(spark, args.sf).toPandas()
-        print(f"{args.name} @ {args.sf}, {sc.master}: cold call "
+        builder(spark, source).toPandas()
+        print(f"{args.name} @ {source}, {sc.master}: cold call "
               f"{time.perf_counter() - t0:.2f} s")
 
         def phase(group: str, fn):
@@ -160,7 +175,7 @@ def main() -> int:
         cpu = {"builder": [], "action": []}
         for k in range(args.calls):
             thr0, jvm0, w0 = thread_cpu(jvm), _stat(jvm)[1], time.perf_counter()
-            df, b_cpu = phase(f"probe-{k}-builder", lambda: builder(spark, args.sf))
+            df, b_cpu = phase(f"probe-{k}-builder", lambda: builder(spark, source))
             _, a_cpu = phase(f"probe-{k}-action", df.toPandas)
             wall = time.perf_counter() - w0
             split = thread_split(thr0, thread_cpu(jvm))

@@ -42,6 +42,21 @@ def spark(tmp_path_factory):
     yield s
 
 
+@pytest.fixture(scope="module")
+def store(spark, tmp_path_factory):
+    """A reference store of 300 synthetic records (``app.collect`` and
+    ``app.insert``) that the tests of one module only read."""
+    from harvard_artifacts_collection_data_engineering_analytics_app_spark import app
+    from harvard_artifacts_collection_data_engineering_analytics_app_spark.sources import (
+        rest,
+    )
+
+    wd = str(tmp_path_factory.mktemp("store"))
+    app.collect(spark, wd, rest.synthetic_fetcher(300), target_records=300)
+    app.insert(spark, wd)
+    return wd
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

@@ -6,7 +6,10 @@ import json
 
 import pytest
 
-from harvard_artifacts_collection_data_engineering_analytics_app_spark import app
+from harvard_artifacts_collection_data_engineering_analytics_app_spark import (
+    app,
+    catalog,
+)
 from harvard_artifacts_collection_data_engineering_analytics_app_spark.sources import (
     rest,
 )
@@ -46,11 +49,18 @@ def _colors(spark, wd: str) -> int:
 
 
 @pytest.fixture(scope="module")
-def store(spark, tmp_path_factory):
-    """A store of 300 synthetic records that the tests below only read."""
-    wd = str(tmp_path_factory.mktemp("store"))
-    _load(spark, wd, rest.synthetic_fetcher(300), 300)
+def empty_colors_store(spark, tmp_path_factory):
+    """A store of 200 records none of which has a color."""
+    wd = str(tmp_path_factory.mktemp("no_colors"))
+    recs = [{"id": i, "title": f"Plain {i}", "colors": []} for i in range(200)]
+    counts = _load(spark, wd, _pages(recs), len(recs))
+    assert counts["artifactcolors"] == 0
     return wd
+
+
+def _persisted(spark) -> set[int]:
+    """Ids of the RDDs the session's SparkContext holds persisted."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
 def test_collect_insert_query_roundtrip(spark, tmp_path):
@@ -84,6 +94,9 @@ def test_insert_is_idempotent_like_insert_ignore(spark, tmp_path):
     late = _late_records(range(180, 380))
     counts = _load(spark, wd, _pages(late), len(late))
     assert counts["artifactmetadata"] == counts["artifactmedia"] == 380
+    assert counts == {
+        name: spark.read.parquet(f"{wd}/{name}").count() for name in app.ARTIFACT_TABLES
+    }
 
     delivered = rest.fetch_serial(rest.synthetic_fetcher(200), 200) + late
     first_delivery: dict[int, dict] = {}
@@ -159,6 +172,107 @@ def test_repeat_query_registers_no_views(spark, store, monkeypatch):
 
     assert _colors(spark.newSession(), store) == colors
     assert reads == list(app.ARTIFACT_TABLES)
+
+
+@pytest.mark.parametrize("which", ["store", "empty_colors_store"])
+def test_store_paths_return_equal_rows(spark, request, monkeypatch, which):
+    """All 20 templates return equal rows whether the store is read from
+    parquet (here above a lowered ``maxPartitionBytes``), as one
+    partition (a first read) or from memory (every table read three
+    times); the LIMIT templates by row count, as in the two-engine
+    test."""
+    from harvard_artifacts_collection_data_engineering_analytics_app_spark.queries import (
+        artifact_templates as AT,
+    )
+
+    from .oracle_harness import compare
+
+    wd = request.getfixturevalue(which)
+    names = sorted(AT.QUERY_TEMPLATES, key=lambda s: int(s[1:]))
+
+    def run() -> dict:
+        return {name: app.query(spark, wd, name).toPandas() for name in names}
+
+    # One byte below the smallest non-empty table puts every non-empty
+    # table above the gate. (One byte would split each scan into a task
+    # per file byte.)
+    sizes = {
+        t: catalog.footer_size(app.read_table(spark, wd, t))[1]
+        for t in app.ARTIFACT_TABLES
+    }
+    key = "spark.sql.files.maxPartitionBytes"
+    limit = spark.conf.get(key)
+    spark.conf.set(key, str(min(b for b in sizes.values() if b) - 1))
+    try:
+        parquet = run()
+        assert not {t for t, b in sizes.items() if b} & set(app._views.one_partition)
+    finally:
+        spark.conf.set(key, limit)
+    with monkeypatch.context() as m:
+        m.setattr(app, "CACHE_ON_READ", float("inf"))
+        one_partition = run()
+        assert set(app._views.one_partition) == set(app.ARTIFACT_TABLES)
+        assert not any(spark.catalog.isCached(t) for t in app.ARTIFACT_TABLES)
+    run()  # every table is read at least twice, so all three are cached
+    in_memory = run()
+    assert all(spark.catalog.isCached(t) for t in app.ARTIFACT_TABLES)
+
+    for name in names:
+        for other in (one_partition, in_memory):
+            if name in AT.NONDETERMINISTIC_LIMIT:
+                assert len(other[name]) == len(parquet[name]), name
+            else:
+                assert compare(other[name], parquet[name]) == [], name
+
+
+def test_store_is_cached_on_its_second_read(spark, tmp_path):
+    """A table is cached on its second read in one store version, so an
+    insert followed by one read of each table (q15, q5) caches nothing.
+    The next version unpersists what the last one cached, so at most the
+    three current tables stay cached, and its queries see the insert."""
+    wd = str(tmp_path / "wd")
+    _load(spark, wd, rest.synthetic_fetcher(300), 300)
+    before = _persisted(spark)
+    colors = _colors(spark, wd)
+    app.query(spark, wd, "q5").collect()
+    assert not any(spark.catalog.isCached(t) for t in app.ARTIFACT_TABLES)
+    assert not _persisted(spark) - before
+
+    assert _colors(spark, wd) == colors  # artifactcolors' second read
+    assert [spark.catalog.isCached(t) for t in app.ARTIFACT_TABLES] == [
+        False, False, True
+    ]
+    app.query(spark, wd, "q5").collect()
+    cached = _persisted(spark) - before
+    assert len(cached) == 2
+
+    late = _late_records(range(1000, 1100))
+    _load(spark, wd, _pages(late), len(late))
+    before = _persisted(spark)  # with the insert's checkpoint of its batch
+    assert _colors(spark, wd) - colors == sum(len(r["colors"]) for r in late)
+    assert not _persisted(spark) & cached
+    for _ in range(2):
+        app.query(spark, wd, "q19").collect()  # reads all three tables
+    assert all(spark.catalog.isCached(t) for t in app.ARTIFACT_TABLES)
+    assert len(_persisted(spark) - before) == 3
+
+
+def test_store_of_a_stopped_application_is_dropped(spark, store):
+    """Views registered by another application (a stopped session) are
+    forgotten without an unpersist: that session's cache is gone."""
+
+    class Stopped:
+        is_cached = True
+
+        def unpersist(self):
+            raise AssertionError("unpersist on a stopped application")
+
+    app._release(spark.sparkContext.applicationId)
+    app._views = app._Views(
+        spark, ("local-stopped", "0"), 0, {"artifactcolors": Stopped()}
+    )
+    assert _colors(spark, store) > 0
+    assert app._views.version[0] == spark.sparkContext.applicationId
 
 
 def test_query_reads_the_workdir_it_is_given(spark, store, tmp_path):

@@ -195,9 +195,9 @@ def test_incremental_indexed_equals_recomputed(spark, oracle_sf_dir):
     assert len(indexed) > 0, "fixture should produce at least one match"
 
 
-def _documents_dir(spark, path, docs) -> str:
+def _documents_dir(spark, path, docs, schema="doc_id long, text string") -> str:
     """A table directory holding ``documents.parquet`` with ``docs``."""
-    spark.createDataFrame(docs, "doc_id long, text string").coalesce(1).write.parquet(
+    spark.createDataFrame(docs, schema).coalesce(1).write.parquet(
         f"{path}/documents.parquet"
     )
     return str(path)
@@ -270,6 +270,68 @@ def test_tokens_match_oracle_on_edge_documents(spark, tmp_path):
     assert compare(got[~apart[0]], want[~apart[1]]) == []
     assert compare(got[apart[0]], want[apart[1]]) != []
     assert got.set_index("doc_id").loc[11, "n_tokens"] == 5
+
+
+VT = "\x0b"
+# Documents with the vertical tab U+000B, which Java's ``\s`` matches and
+# the oracles' RE2 ``\s`` does not: inside tokens (2, 5, 7), inside two
+# documents that differ only in their digits (3, 4: one boilerplate
+# template), and as a 15-character run that puts document 1's symbol
+# ratio above the Gopher cut only where U+000B counts as a symbol.
+VT_DOCS = [
+    (1, "the cat and the dog sat on the mat with a hat and the bat ran to the "
+        f"car in the park {VT * 15} of the town", "en", "src0"),
+    (2, f"vertical{VT}tab stays inside one token of the line", "en", "src0"),
+    (3, f"order 123 shipped{VT}to you", "en", "src1"),
+    (4, f"order 456 shipped{VT}to you", "en", "src1"),
+    (5, f"the line{VT}tab and the token", "en", "src1"),
+    (6, f"def f(x): return {{x}};{VT}{VT}", "en", "src2"),
+    (7, f"tab{VT}separated words and the tab", "en", "src2"),
+]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "tx_gopher_quality",
+        "tx_filter_pipeline",
+        "tx_code_detect",
+        "tx_source_vocab_overlap",
+        "tx_mixture_alloc",
+        "tx_unigram_entropy",
+        "tx_template_detect",
+        "tx_vocab_coverage",
+        "st_quality_filter_count",
+        "st_template_ingest",
+    ],
+)
+def test_whitespace_queries_match_oracle_on_vertical_tab(spark, tmp_path, name):
+    """Every Spark-side whitespace split, whitespace run and symbol-ratio
+    class spells out RE2's ``\s`` (``T.TOKEN_SEPARATORS``,
+    ``T.NON_SYMBOL``), so each query equals its oracle on documents
+    holding U+000B."""
+    import duckdb
+
+    from .oracle_harness import compare
+
+    sf = _documents_dir(
+        spark,
+        tmp_path,
+        [(i, t, lang, src, len(t)) for i, t, lang, src in VT_DOCS],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    spec = SPECS[name]
+    got = spec.builder(spark, sf).toPandas()
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet/*.parquet'"
+        )
+        want = con.execute(spec.oracle).fetch_df()
+    finally:
+        con.close()
+    assert len(want) > 0
+    assert compare(got, want) == []
 
 
 def test_incremental_index_scan_has_no_exchange(spark, oracle_sf_dir):

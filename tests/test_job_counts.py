@@ -110,3 +110,58 @@ def test_warm_fused_loop_job_count(spark, sf_dir, name, most):
     when the pin was set, plus one."""
     jobs = _warm_jobs(spark, sf_dir, name)
     assert 1 <= jobs <= most, f"{name}: {jobs} jobs on a warm call"
+
+
+def _plan_nodes(plan) -> list[str]:
+    """Class names of an executed physical plan's nodes, read through
+    AQE, its query stages and reused exchanges, but not into the plan
+    that filled a cached relation (an ``InMemoryTableScan``'s inner
+    child)."""
+    nodes, stack = [], [plan]
+    while stack:
+        p = stack.pop()
+        cls = p.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(p.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            stack.append(p.plan())
+        elif cls == "ReusedExchangeExec":
+            stack.append(p.child())
+        else:
+            nodes.append(cls)
+            kids = p.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes
+
+
+def test_warm_reference_round_plans_no_shuffle(spark, store):
+    """A warm round of q1-q20 on the reference store: every scan reads
+    the in-memory relations, no plan has an exchange but a join's
+    broadcast, and the round runs at most the jobs measured when the
+    pin was set."""
+    from harvard_artifacts_collection_data_engineering_analytics_app_spark import app
+    from harvard_artifacts_collection_data_engineering_analytics_app_spark.queries import (
+        artifact_templates as AT,
+    )
+
+    names = sorted(AT.QUERY_TEMPLATES, key=lambda s: int(s[1:]))
+    for name in names:  # the first round caches the store
+        app.query(spark, store, name).toPandas()
+    done = {}
+
+    def warm_round():
+        for name in names:
+            done[name] = app.query(spark, store, name)
+            done[name].toPandas()
+
+    jobs = _jobs(spark, "pin-reference-round", warm_round)
+    for name, df in done.items():
+        nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+        exchanges = [n for n in nodes if n.endswith("ExchangeExec")
+                     and n != "BroadcastExchangeExec"]
+        scans = [n for n in nodes if "Scan" in n]
+        assert not exchanges, f"{name}: {exchanges}"
+        # (no scan at all where AQE found a join side empty and planned
+        # EmptyRelation, as for q8 and q9 on this store)
+        assert set(scans) <= {"InMemoryTableScanExec"}, f"{name}: {scans}"
+    assert jobs <= 30, f"{jobs} jobs in a warm round"
