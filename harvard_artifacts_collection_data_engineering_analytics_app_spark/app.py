@@ -19,10 +19,11 @@ no read launches a schema-inference job, and ``insert`` takes its row
 counts from the parquet footers. E3 registers the three store tables as
 temp views once per store version: a repeat query reuses them, while an
 ``insert`` (new files), a new session or another workdir makes the next
-query register them again (:func:`register_views`). A table within
-Spark's per-task scan limit (``spark.sql.files.maxPartitionBytes``) is
-registered as one partition, so the templates plan no shuffle over it,
-and it is cached in memory on its second read in one store version
+query register them again (:func:`register_views`). A table no larger
+than Spark's estimated cost of opening one file
+(``spark.sql.files.openCostInBytes``, 4 MB by default) is registered as
+one partition, so the templates plan no shuffle over it, and it is
+cached in memory on its second read in one store version
 (:func:`query`); a new version unpersists it. SCALE.md ("The reference
 store in memory") gives the rule and the memory it holds. Every stdout
 line of the CLI is one JSON object.
@@ -109,9 +110,9 @@ CACHE_ON_READ = 2
 @dataclass
 class _Views:
     """The store the temp views hold: the session, store version and
-    ``spark.sql.files.maxPartitionBytes`` they were registered for, the
-    relation behind each view that reads its table as one partition,
-    and the reads of each table counted by ``query``."""
+    one-partition limit (:func:`one_partition_limit`) they were
+    registered for, the relation behind each view that reads its table
+    as one partition, and the reads of each table counted by ``query``."""
 
     spark: SparkSession
     version: tuple[str, str]
@@ -135,22 +136,35 @@ def _release(app_id: str) -> None:
     _views = None
 
 
+def one_partition_limit(spark: SparkSession) -> int:
+    """The most uncompressed bytes of a store table read as one partition:
+    ``min(spark.sql.files.maxPartitionBytes, spark.sql.files.openCostInBytes)``.
+    Spark's file scan charges ``openCostInBytes`` for each file it opens
+    and cuts no split smaller than that (unless ``maxPartitionBytes`` is
+    lower), so a table within the limit is less data than Spark's own
+    estimate of the cost of opening one more file: reading it in one
+    task gives up no split that Spark's cost model would make for its
+    bytes alone."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return min(conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes())
+
+
 def register_views(spark: SparkSession, workdir: str) -> None:
     """Register the three store tables as temp views, once per store
     version: a no-op while the session, every file of the three tables
-    and the session's ``spark.sql.files.maxPartitionBytes`` are the ones
-    the views were registered for. An ``insert`` appends files and so
-    changes the version; the next call unpersists what the old version
-    cached and registers the views again.
+    and the session's :func:`one_partition_limit` are the ones the views
+    were registered for. An ``insert`` appends files and so changes the
+    version; the next call unpersists what the old version cached and
+    registers the views again.
 
-    A table whose parquet footers hold at most ``maxPartitionBytes`` —
-    Spark's own limit on the bytes of one scan task — is registered as
-    one partition (``coalesce(1)``): its plan has ``SinglePartition``
-    output, which satisfies every aggregate, DISTINCT and global sort,
-    so no template plans a shuffle over it. A larger table is read from
-    its parquet files in as many tasks as Spark splits it into."""
+    A table whose parquet footers hold at most ``one_partition_limit``
+    uncompressed bytes is registered as one partition (``coalesce(1)``):
+    its plan has ``SinglePartition`` output, which satisfies every
+    aggregate, DISTINCT and global sort, so no template plans a shuffle
+    over it. A larger table is read from its parquet files in as many
+    tasks as Spark splits it into."""
     global _views
-    limit = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    limit = one_partition_limit(spark)
     version = catalog.session_version(
         spark, *(f"{workdir}/{name}" for name in ARTIFACT_TABLES)
     )

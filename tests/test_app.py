@@ -225,6 +225,29 @@ def test_store_paths_return_equal_rows(spark, request, monkeypatch, which):
                 assert compare(other[name], parquet[name]) == [], name
 
 
+def test_one_partition_limit_is_the_file_open_cost(spark, store):
+    """A store table is read as one partition only within
+    ``min(maxPartitionBytes, openCostInBytes)``: a table above Spark's
+    file open cost is read from parquet although it fits in one scan
+    task's ``maxPartitionBytes``."""
+    key = "spark.sql.files.openCostInBytes"
+    cost = spark.conf.get(key)
+    sizes = {
+        t: catalog.footer_size(app.read_table(spark, store, t))[1]
+        for t in app.ARTIFACT_TABLES
+    }
+    colors = _colors(spark, store)
+    spark.conf.set(key, str(max(sizes.values()) - 1))
+    try:
+        assert _colors(spark, store) == colors
+        big = {t for t, b in sizes.items() if b == max(sizes.values())}
+        assert set(app._views.one_partition) == set(app.ARTIFACT_TABLES) - big
+    finally:
+        spark.conf.set(key, cost)
+    assert _colors(spark, store) == colors
+    assert set(app._views.one_partition) == set(app.ARTIFACT_TABLES)
+
+
 def test_store_is_cached_on_its_second_read(spark, tmp_path):
     """A table is cached on its second read in one store version, so an
     insert followed by one read of each table (q15, q5) caches nothing.
