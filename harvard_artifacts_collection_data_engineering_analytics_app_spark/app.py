@@ -14,19 +14,24 @@ can run the same flow with:
 `collect` uses the synthetic fetcher by default (no network in this
 container); pass a real fetcher programmatically via :func:`collect`.
 
-The store is read with the declared schemas (``schemas.ARTIFACT_*``), so
-no read launches a schema-inference job, and ``insert`` takes its row
-counts from the parquet footers. E3 registers the three store tables as
-temp views once per store version: a repeat query reuses them, while an
-``insert`` (new files), a new session or another workdir makes the next
-query register them again (:func:`register_views`). A table no larger
-than Spark's estimated cost of opening one file
-(``spark.sql.files.openCostInBytes``, 4 MB by default) is registered as
-one partition, so the templates plan no shuffle over it, and it is
+E1 runs no Spark job: ``collect`` writes the fetched batch with pyarrow
+as the one file of ``raw``. The store is read with the declared schemas
+(``schemas.ARTIFACT_*``), so no read launches a schema-inference job,
+and ``insert`` takes its row counts from the parquet footers. A table
+or raw batch no larger than Spark's estimated cost of opening one file
+(``spark.sql.files.openCostInBytes``, 4 MB by default;
+:func:`one_partition_limit`) is read as one partition: ``insert``
+writes each table of a small batch in one job of one task, the three
+at once, and the templates plan no shuffle over a small table.
+
+E3 registers the three store tables as temp views once per store
+version: a repeat query reuses them, while an ``insert`` (new files), a
+new session, another workdir or a replaced view makes the next query
+register them again (:func:`register_views`). A one-partition table is
 cached in memory on its second read in one store version
 (:func:`query`); a new version unpersists it. SCALE.md ("The reference
-store in memory") gives the rule and the memory it holds. Every stdout
-line of the CLI is one JSON object.
+load path", "The reference store in memory") gives the rules and the
+memory they hold. Every stdout line of the CLI is one JSON object.
 """
 
 from __future__ import annotations
@@ -35,9 +40,13 @@ import argparse
 import json
 import os
 import re
+import shutil
 from collections import Counter
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from . import catalog
@@ -61,10 +70,23 @@ def collect(
     fetch_page: rest.PageFetcher,
     target_records: int = rest.DEFAULT_TARGET,
 ) -> DataFrame:
-    """E1: paginated ingest → raw records parquet (replaces session_state)."""
-    raw = rest.ingest_serial(spark, fetch_page, target_records)
-    raw.write.mode("overwrite").parquet(f"{workdir}/raw")
-    return raw
+    """E1: paginated ingest → raw records parquet (replaces session_state).
+
+    The fetched records, checked and converted by ``rest.arrow_records``,
+    are written by pyarrow as the one file of ``raw``, under a hidden
+    name that is renamed into place: no Spark job. Its row groups hold
+    about :func:`one_partition_limit` bytes at most, so Spark can split
+    a larger batch across tasks. Returns ``raw`` read back with
+    ``RAW_ARTIFACT``."""
+    table = rest.arrow_records(rest.fetch_serial(fetch_page, target_records))
+    raw = f"{workdir}/raw"
+    os.makedirs(workdir, exist_ok=True)
+    group_rows = table.num_rows * one_partition_limit(spark) // max(table.nbytes, 1)
+    pq.write_table(table, f"{workdir}/.raw.parquet", row_group_size=max(group_rows, 1))
+    shutil.rmtree(raw, ignore_errors=True)
+    os.makedirs(raw)
+    os.replace(f"{workdir}/.raw.parquet", f"{raw}/part-00000.parquet")
+    return spark.read.schema(RAW_ARTIFACT).parquet(raw)
 
 
 def insert(spark: SparkSession, workdir: str) -> dict[str, int]:
@@ -75,20 +97,39 @@ def insert(spark: SparkSession, workdir: str) -> dict[str, int]:
     only their records reach the three tables — so an id's colors, like
     its metadata and media, are the ones first delivered. The new-id
     batch is checkpointed because the first append changes what a
-    re-read of the store would return. The row count of each table is
-    read from its parquet footers, without a Spark job.
+    re-read of the store would return, and unpersisted once the three
+    tables are written.
+
+    Raw data whose parquet footers hold at most
+    :func:`one_partition_limit` bytes is read as one partition
+    (``coalesce(1)``), so neither primary-key dedup plans a shuffle and
+    each table is one job of one task; larger raw data is read in as
+    many tasks as Spark splits it into. The three writes run at once,
+    each in a thread that inherits the caller's job group and tags, and
+    each returns its table's row count read from the parquet footers,
+    without a Spark job.
     """
     raw = spark.read.schema(RAW_ARTIFACT).parquet(f"{workdir}/raw")
+    size = catalog.footer_size(raw)
     append = os.path.exists(f"{workdir}/artifactmetadata")
     if append:
         old_ids = read_table(spark, workdir, "artifactmetadata").select("id")
-        raw = raw.join(old_ids, "id", "left_anti").localCheckpoint(eager=True)
-    counts: dict[str, int] = {}
-    for name, df in A.transform_all(raw).items():
-        path = f"{workdir}/{name}"
-        df.write.mode("append" if append else "overwrite").parquet(path)
-        counts[name] = catalog.footer_size(read_table(spark, workdir, name))[0]
-    return counts
+        raw = checkpoint = raw.join(old_ids, "id", "left_anti").localCheckpoint(eager=True)
+    if size is not None and size[1] <= one_partition_limit(spark):
+        raw = raw.coalesce(1)
+
+    @inheritable_thread_target(spark)
+    def write(name: str, df: DataFrame) -> int:
+        df.write.mode("append" if append else "overwrite").parquet(f"{workdir}/{name}")
+        return catalog.footer_size(read_table(spark, workdir, name))[0]
+
+    tables = A.transform_all(raw)
+    try:
+        with ThreadPoolExecutor(len(tables)) as pool:
+            return dict(zip(tables, pool.map(write, tables, tables.values())))
+    finally:
+        if append:
+            checkpoint._jdf.logicalPlan().rdd().unpersist(False)
 
 
 def read_table(spark: SparkSession, workdir: str, name: str) -> DataFrame:
@@ -111,13 +152,16 @@ CACHE_ON_READ = 2
 class _Views:
     """The store the temp views hold: the session, store version and
     one-partition limit (:func:`one_partition_limit`) they were
-    registered for, the relation behind each view that reads its table
-    as one partition, and the reads of each table counted by ``query``."""
+    registered for, the session catalog's entry of each view as
+    registered (:func:`_temp_views`), the relation behind each view that
+    reads its table as one partition, and the reads of each table
+    counted by ``query``."""
 
     spark: SparkSession
     version: tuple[str, str]
     limit: int
     one_partition: dict[str, DataFrame]
+    entries: list = field(default_factory=list)
     reads: Counter = field(default_factory=Counter)
 
 
@@ -149,12 +193,20 @@ def one_partition_limit(spark: SparkSession) -> int:
     return min(conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes())
 
 
+def _temp_views(spark: SparkSession) -> list:
+    """The session catalog's entry (a JVM ``Option``) of each store view;
+    two readings are equal while no view was dropped or replaced."""
+    catalog = spark._jsparkSession.sessionState().catalog()
+    return [catalog.getRawTempView(name) for name in ARTIFACT_TABLES]
+
+
 def register_views(spark: SparkSession, workdir: str) -> None:
     """Register the three store tables as temp views, once per store
-    version: a no-op while the session, every file of the three tables
-    and the session's :func:`one_partition_limit` are the ones the views
-    were registered for. An ``insert`` appends files and so changes the
-    version; the next call unpersists what the old version cached and
+    version: a no-op while the session, every file of the three tables,
+    the session's :func:`one_partition_limit` and the views themselves
+    are the ones registered. An ``insert`` appends files and so changes
+    the version, and other code may replace a temp view of the same
+    name; the next call unpersists what the old registration cached and
     registers the views again.
 
     A table whose parquet footers hold at most ``one_partition_limit``
@@ -170,7 +222,7 @@ def register_views(spark: SparkSession, workdir: str) -> None:
     )
     if _views is not None and (_views.spark, _views.version, _views.limit) == (
         spark, version, limit
-    ):
+    ) and _views.entries == _temp_views(spark):
         return
     # Unpersist before any plan of the new version runs: Spark's cache
     # matches a parquet relation by its root paths, not by its files, so
@@ -183,7 +235,7 @@ def register_views(spark: SparkSession, workdir: str) -> None:
         if size is not None and size[1] <= limit:
             df = one_partition[name] = df.coalesce(1)
         df.createOrReplaceTempView(name)
-    _views = _Views(spark, version, limit, one_partition)
+    _views = _Views(spark, version, limit, one_partition, _temp_views(spark))
 
 
 def query(spark: SparkSession, workdir: str, name: str) -> DataFrame:

@@ -12,12 +12,13 @@ Reproduces exactly the reference's tri-state null semantics
 - primary-key dedup à la INSERT IGNORE (T5, :241,255,267)
 
 All pure Catalyst expressions — codegen applies, no Python row loops
-(the reference iterates rows in Python, :228).
+(the reference iterates rows in Python, :228). Each table is one
+``selectExpr`` of SQL text: the Column API costs about a millisecond of
+driver Python per expression node, the SQL parser a fraction of that.
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 METADATA_STRING_COLS = (
@@ -37,79 +38,69 @@ MAX_COLORS_PER_ARTIFACT = 5  # harvard_artifacts_app.py:198
 DESCRIPTION_MAX_CHARS = 500  # harvard_artifacts_app.py:175
 
 
-def _str_default(c: str) -> F.Column:
+def _str_default(c: str) -> str:
     """T1: missing string → '' (reference .get(field, ''))."""
-    return F.coalesce(F.col(c), F.lit("")).alias(c)
+    return f"coalesce(`{c}`, '') AS `{c}`"
 
 
-def _count_default(c: str) -> F.Column:
-    """T1: missing count → 0 (reference .get(field, 0))."""
-    return F.coalesce(F.col(c), F.lit(0)).cast("int").alias(c)
+def _finite(expr: str) -> str:
+    """T4: NaN/±inf → NULL (:226-233)."""
+    inf = "double('Infinity')"
+    return f"CASE WHEN isnan({expr}) OR abs({expr}) = {inf} THEN NULL ELSE {expr} END"
 
 
 def transform_metadata(raw: DataFrame) -> DataFrame:
     """Raw API records → artifactmetadata rows (T1 + T2)."""
-    return raw.select(
-        F.col("id"),
-        _str_default("title"),
-        _str_default("culture"),
-        _str_default("period"),
-        _str_default("century"),
-        _str_default("medium"),
-        _str_default("dimensions"),
+    return raw.selectExpr(
+        "id",
+        *map(_str_default, METADATA_STRING_COLS[:6]),
         # T2: None-safe truncation to 500 chars (:175)
-        F.substring(F.coalesce(F.col("description"), F.lit("")), 1,
-                    DESCRIPTION_MAX_CHARS).alias("description"),
-        _str_default("department"),
-        _str_default("classification"),
-        F.col("accessionyear").cast("int"),  # stays NULL when missing (:178)
+        f"substring(coalesce(description, ''), 1, {DESCRIPTION_MAX_CHARS}) AS description",
+        *map(_str_default, METADATA_STRING_COLS[6:8]),
+        "CAST(accessionyear AS INT) AS accessionyear",  # stays NULL when missing (:178)
         _str_default("accessionmethod"),
     )
 
 
 def transform_media(raw: DataFrame) -> DataFrame:
     """Raw API records → artifactmedia rows (T1)."""
-    return raw.select(
-        F.col("id").alias("objectid"),
-        *[_count_default(c) for c in MEDIA_COUNT_COLS],
-        F.col("datebegin").cast("int"),  # NULL-able (:190)
-        F.col("dateend").cast("int"),  # NULL-able (:191)
+    return raw.selectExpr(
+        "id AS objectid",
+        # T1: missing count → 0 (reference .get(field, 0))
+        *[f"CAST(coalesce(`{c}`, 0) AS INT) AS `{c}`" for c in MEDIA_COUNT_COLS],
+        "CAST(datebegin AS INT) AS datebegin",  # NULL-able (:190)
+        "CAST(dateend AS INT) AS dateend",  # NULL-able (:191)
+    )
+
+
+def _colors(raw: DataFrame, finite: bool) -> DataFrame:
+    """T3, with T4 on ``percent`` when ``finite``: the first 5 colors in
+    API array order (``slice``), one row each (``inline``); a record
+    without the colors key or with an empty array gives no row, matching
+    the reference's `if 'colors' in artifact` (:197)."""
+    percent = "coalesce(c.percent, 0D)"
+    fields = [f"coalesce(c.{c}, '') AS {c}" for c in COLOR_STRING_COLS[:3]]
+    fields += [f"{_finite(percent) if finite else percent} AS percent",
+               "coalesce(c.css3, '') AS css3"]
+    return raw.selectExpr(
+        "id AS objectid",
+        f"inline(transform(slice(colors, 1, {MAX_COLORS_PER_ARTIFACT}), "
+        f"c -> struct({', '.join(fields)})))",
     )
 
 
 def transform_colors(raw: DataFrame) -> DataFrame:
-    """Raw API records → artifactcolors rows (T3).
-
-    ``posexplode`` (not ``explode``) so "first 5 in API array order" is the
-    array position, not a sort; inner explode drops artifacts without the
-    colors key, matching the reference's `if 'colors' in artifact` (:197).
-    """
-    exploded = raw.select(
-        F.col("id").alias("objectid"),
-        F.posexplode("colors").alias("pos", "c"),
-    ).filter(F.col("pos") < MAX_COLORS_PER_ARTIFACT)
-    return exploded.select(
-        "objectid",
-        *[
-            F.coalesce(F.col(f"c.{c}"), F.lit("")).alias(c)
-            for c in COLOR_STRING_COLS[:3]
-        ],
-        F.coalesce(F.col("c.percent"), F.lit(0.0)).cast("double").alias("percent"),
-        F.coalesce(F.col("c.css3"), F.lit("")).alias("css3"),
-    ).select("objectid", "spectrum", "hue", "color", "percent", "css3")
+    """Raw API records → artifactcolors rows (T3)."""
+    return _colors(raw, finite=False)
 
 
 def sanitize_floats(df: DataFrame) -> DataFrame:
     """T4: NaN/±inf → NULL for every floating-point column (:226-233)."""
-    out = df
-    for field in df.schema.fields:
-        if field.dataType.typeName() in ("double", "float"):
-            c = F.col(field.name)
-            out = out.withColumn(
-                field.name,
-                F.when(F.isnan(c) | (F.abs(c) == float("inf")), None).otherwise(c),
-            )
-    return out
+    return df.selectExpr(*(
+        f"{_finite(f'`{f.name}`')} AS `{f.name}`"
+        if f.dataType.typeName() in ("double", "float") else f"`{f.name}`"
+        for f in df.schema.fields
+    ))
 
 
 def dedup_primary_key(
@@ -128,13 +119,11 @@ def dedup_primary_key(
 
 
 def transform_all(raw: DataFrame) -> dict[str, DataFrame]:
-    """The full E2 pipeline (harvard_artifacts_app.py:401-402)."""
+    """The full E2 pipeline (harvard_artifacts_app.py:401-402). Only
+    artifactcolors has a floating-point column, so T4 runs in its
+    projection."""
     return {
-        "artifactmetadata": dedup_primary_key(
-            sanitize_floats(transform_metadata(raw)), "id"
-        ),
-        "artifactmedia": dedup_primary_key(
-            sanitize_floats(transform_media(raw)), "objectid"
-        ),
-        "artifactcolors": sanitize_floats(transform_colors(raw)),
+        "artifactmetadata": dedup_primary_key(transform_metadata(raw), "id"),
+        "artifactmedia": dedup_primary_key(transform_media(raw), "objectid"),
+        "artifactcolors": _colors(raw, finite=True),
     }

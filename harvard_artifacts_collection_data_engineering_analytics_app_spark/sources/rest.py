@@ -4,7 +4,12 @@ The reference loops pages serially on the client with a 0.1 s sleep
 (≤ ~1,000 records/s). Spark-first redesign:
 
 - **small pulls** (the reference's 2,500 records/classification):
-  driver-side loop → ``spark.createDataFrame(records, RAW_ARTIFACT)``.
+  driver-side loop → :func:`arrow_records`, an Arrow table of
+  ``RAW_ARTIFACT`` checked with PySpark's own type verifier, so a record
+  ``createDataFrame`` would reject is rejected here too (pyarrow alone
+  truncates ``1950.5`` into an int column). ``app.collect`` writes that
+  table as parquet with pyarrow and :func:`ingest_serial` hands it to
+  ``createDataFrame``: neither converts rows in Python or runs a job.
 - **large backfills**: parallelize page ranges across executors with
   ``mapInPandas`` over a ``spark.range(n_pages)`` seed — each task fetches
   its own pages, so ingest scales with the cluster, bounded by a per-task
@@ -20,7 +25,10 @@ from __future__ import annotations
 import json
 from collections.abc import Callable, Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _make_type_verifier
 
 from ..schemas import RAW_ARTIFACT
 
@@ -49,13 +57,25 @@ def fetch_serial(
     return records
 
 
+def arrow_records(records: list[dict]) -> pa.Table:
+    """``records`` as an Arrow table of RAW_ARTIFACT: missing keys are
+    NULL and keys outside the schema are dropped. Each record is first
+    checked by the verifier ``createDataFrame(records, RAW_ARTIFACT)``
+    applies, so a value of the wrong type (``1950.5``, ``"1950"`` or
+    ``True`` for an int) raises instead of being cast."""
+    verify = _make_type_verifier(RAW_ARTIFACT)
+    for record in records:
+        verify(record)
+    return pa.Table.from_pylist(records, schema=to_arrow_schema(RAW_ARTIFACT))
+
+
 def ingest_serial(
     spark: SparkSession,
     fetch_page: PageFetcher,
     target_records: int = DEFAULT_TARGET,
 ) -> DataFrame:
     """Driver-side ingest → DataFrame with the explicit RAW_ARTIFACT schema."""
-    return spark.createDataFrame(fetch_serial(fetch_page, target_records), RAW_ARTIFACT)
+    return spark.createDataFrame(arrow_records(fetch_serial(fetch_page, target_records)))
 
 
 def ingest_distributed(

@@ -3,6 +3,7 @@
 
     python scripts/query_probe.py NAME --sf DIR [--calls N]
     python scripts/query_probe.py qN --store WORKDIR [--calls N]
+    python scripts/query_probe.py --load RECORDS [--calls N]
 
 Runs ``NAME`` once cold (building any persisted or session artifact),
 then ``N`` warm calls (default 3), each as two job groups: the builder
@@ -11,13 +12,16 @@ then ``N`` warm calls (default 3), each as two job groups: the builder
 builder is ``app.query(spark, WORKDIR, NAME)`` on a store that
 ``app.collect`` and ``app.insert`` wrote: the cold call is each table's
 first read, the first warm call caches the one-partition tables it
-reads (their second read), and later calls read them from memory. For
-every warm call it prints:
+reads (their second read), and later calls read them from memory. With
+``--load``, a call is the reference load of RECORDS synthetic records
+(``rest.synthetic_fetcher``, generated before the clock starts) into a
+new store in the temporary directory, as two job groups: ``app.collect``
+and ``app.insert``. For every warm call it prints:
 
 - jobs, stages and tasks per job group (``statusTracker``; a stage is
   counted when it ran at least one task, so stages AQE reused or skipped
   are left out);
-- CPU seconds of the builder and of the action: the driver's process
+- wall and CPU seconds of each job group: CPU of the driver's process
   tree (this Python process, the JVM and the JVM's Python workers);
 - the JVM's CPU over the whole call split by thread name
   (``/proc/<jvm>/task/*/comm``, numbers folded to ``N``), the C1/C2
@@ -122,13 +126,17 @@ def group_counts(sc, group: str) -> tuple[int, int, int]:
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("name")
+    ap.add_argument("name", nargs="?")
     sf = os.environ.get("SPARK_GRAFT_SF_DIR")
     ap.add_argument("--sf", default=sf)
     ap.add_argument("--store", help="a reference store (overrides --sf); NAME: q1..q20")
+    ap.add_argument("--load", type=int, metavar="RECORDS",
+                    help="probe app.collect + app.insert of RECORDS records instead")
     ap.add_argument("--calls", type=int, default=3)
     args = ap.parse_args()
-    if args.sf is None and args.store is None:
+    if args.load is None and args.name is None:
+        ap.error("NAME or --load is required")
+    if args.load is None and args.sf is None and args.store is None:
         ap.error("--sf (or $SPARK_GRAFT_SF_DIR) or --store is required")
 
     from harvard_artifacts_collection_data_engineering_analytics_app_spark import app
@@ -138,14 +146,33 @@ def main() -> int:
     from harvard_artifacts_collection_data_engineering_analytics_app_spark.session import (
         get_spark,
     )
+    from harvard_artifacts_collection_data_engineering_analytics_app_spark.sources import rest
 
-    source = args.store or args.sf
-    if args.store:
-        def builder(spark, store):
-            return app.query(spark, store, args.name)
-    else:
-        builder = registry.all_specs()[args.name].builder
     work = tempfile.mkdtemp(prefix="query_probe_")
+    if args.load is not None:
+        what = f"load of {args.load} records"
+        recs = rest.fetch_serial(rest.synthetic_fetcher(args.load), args.load)
+
+        def fetch(page):
+            return recs[(page - 1) * rest.PAGE_SIZE:page * rest.PAGE_SIZE]
+
+        def call(k):
+            wd = os.path.join(work, f"store{k}")
+            return [("collect", lambda: app.collect(spark, wd, fetch, len(recs))),
+                    ("insert", lambda: app.insert(spark, wd))]
+    else:
+        source = args.store or args.sf
+        what = f"{args.name} @ {source}"
+        if args.store:
+            def builder(spark, store):
+                return app.query(spark, store, args.name)
+        else:
+            builder = registry.all_specs()[args.name].builder
+
+        def call(k):
+            out = {}
+            return [("builder", lambda: out.setdefault("df", builder(spark, source))),
+                    ("action", lambda: out["df"].toPandas())]
     spark = get_spark(
         app_name="query-probe",
         extra_conf={
@@ -159,34 +186,33 @@ def main() -> int:
         me = os.getpid()
         jvm = spark._jvm.java.lang.ProcessHandle.current().pid()
         t0 = time.perf_counter()
-        builder(spark, source).toPandas()
-        print(f"{args.name} @ {source}, {sc.master}: cold call "
-              f"{time.perf_counter() - t0:.2f} s")
+        for _, fn in call("cold"):
+            fn()
+        print(f"{what}, {sc.master}: cold call {time.perf_counter() - t0:.2f} s")
 
         def phase(group: str, fn):
             sc.setJobGroup(group, group)
             try:
-                c0 = tree_cpu(me)
-                out = fn()
-                return out, tree_cpu(me) - c0
+                c0, w0 = tree_cpu(me), time.perf_counter()
+                fn()
+                return time.perf_counter() - w0, tree_cpu(me) - c0
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
 
-        cpu = {"builder": [], "action": []}
+        cpu = {}
         for k in range(args.calls):
             thr0, jvm0, w0 = thread_cpu(jvm), _stat(jvm)[1], time.perf_counter()
-            df, b_cpu = phase(f"probe-{k}-builder", lambda: builder(spark, source))
-            _, a_cpu = phase(f"probe-{k}-action", df.toPandas)
+            parts = [(part, *phase(f"probe-{k}-{part}", fn)) for part, fn in call(k)]
             wall = time.perf_counter() - w0
             split = thread_split(thr0, thread_cpu(jvm))
             jvm_s = _stat(jvm)[1] - jvm0
-            cpu["builder"].append(b_cpu)
-            cpu["action"].append(a_cpu)
             print(f"\nwarm call {k + 1}: wall {wall:.3f} s, "
-                  f"process-tree CPU {b_cpu + a_cpu:.3f} s")
-            for part, c in (("builder", b_cpu), ("action", a_cpu)):
+                  f"process-tree CPU {sum(c for _, _, c in parts):.3f} s")
+            for part, w, c in parts:
+                cpu.setdefault(part, []).append(c)
                 j, s, t = group_counts(sc, f"probe-{k}-{part}")
-                print(f"  {part:8s} CPU {c:.3f} s   jobs {j}  stages {s}  tasks {t}")
+                print(f"  {part:8s} wall {w:.3f} s  CPU {c:.3f} s   "
+                      f"jobs {j}  stages {s}  tasks {t}")
             jit = sum(v for n, v in split.items() if n.startswith("JIT"))
             print(f"  JVM CPU {jvm_s:.3f} s (JIT {jit:.3f} s, "
                   f"threads that exited {max(0.0, jvm_s - sum(split.values())):.3f} s)")
@@ -194,9 +220,9 @@ def main() -> int:
                 if v >= 0.005:
                     print(f"    {v:7.3f}  {name}")
         med = {p: statistics.median(v) for p, v in cpu.items()}
-        print(f"\nmedian of {args.calls} warm calls: builder {med['builder']:.3f} s, "
-              f"action {med['action']:.3f} s, "
-              f"total {med['builder'] + med['action']:.3f} s process-tree CPU")
+        print(f"\nmedian of {args.calls} warm calls: "
+              + ", ".join(f"{p} {v:.3f} s" for p, v in med.items())
+              + f", total {sum(med.values()):.3f} s process-tree CPU")
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)

@@ -3,12 +3,19 @@
 from __future__ import annotations
 
 import json
+from collections import Counter
 
 import pytest
 
 from harvard_artifacts_collection_data_engineering_analytics_app_spark import (
     app,
     catalog,
+)
+from harvard_artifacts_collection_data_engineering_analytics_app_spark.etl import (
+    artifacts as A,
+)
+from harvard_artifacts_collection_data_engineering_analytics_app_spark.schemas import (
+    RAW_ARTIFACT,
 )
 from harvard_artifacts_collection_data_engineering_analytics_app_spark.sources import (
     rest,
@@ -271,13 +278,124 @@ def test_store_is_cached_on_its_second_read(spark, tmp_path):
 
     late = _late_records(range(1000, 1100))
     _load(spark, wd, _pages(late), len(late))
-    before = _persisted(spark)  # with the insert's checkpoint of its batch
+    before = _persisted(spark)  # the insert freed its batch's checkpoint
     assert _colors(spark, wd) - colors == sum(len(r["colors"]) for r in late)
     assert not _persisted(spark) & cached
     for _ in range(2):
         app.query(spark, wd, "q19").collect()  # reads all three tables
     assert all(spark.catalog.isCached(t) for t in app.ARTIFACT_TABLES)
     assert len(_persisted(spark) - before) == 3
+
+
+def test_append_insert_frees_its_checkpoint(spark, tmp_path):
+    """The new-id batch an append checkpoints is unpersisted once the
+    three tables are written."""
+    wd = str(tmp_path / "wd")
+    _load(spark, wd, rest.synthetic_fetcher(200), 200)
+    late = _late_records(range(150, 250))
+    app.collect(spark, wd, _pages(late), len(late))
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    assert app.insert(spark, wd)["artifactmetadata"] == 250
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
+def test_replaced_temp_view_is_registered_again(spark, store):
+    """A temp view of a store table's name that other code replaced is
+    not the store: the next query registers the views again."""
+    colors = _colors(spark, store)
+    spark.range(5).toDF("objectid").createOrReplaceTempView("artifactcolors")
+    assert _colors(spark, store) == colors != 5
+
+
+def _edge_records() -> list[dict]:
+    """Records in every shape the raw schema admits."""
+    color = {"spectrum": "#aaa", "hue": "Grey", "color": "#111", "percent": 0.5,
+             "css3": "#bbb"}
+    return [
+        {"id": 1},  # every other key missing
+        {**{f.name: None for f in RAW_ARTIFACT.fields}, "id": 2},  # explicit None
+        {"id": 3, "colors": [{**color, "percent": p}
+                             for p in (float("nan"), float("inf"), float("-inf"), None)]},
+        {"id": 4, "colors": []},
+        {"id": 5, "colors": [{**color, "hue": f"h{i}"} for i in range(9)]},
+        {"id": 6, "description": "d" * 600, "datebegin": -600, "dateend": -550,
+         "accessionyear": 1950, "title": "t", "colors": [{"hue": "Red"}, None]},
+    ]
+
+
+def test_collected_raw_equals_create_dataframe(spark, tmp_path):
+    """``raw`` written by pyarrow reads back as the rows
+    ``createDataFrame(records, RAW_ARTIFACT)`` holds, and so does
+    ``rest.ingest_serial``; a value ``createDataFrame`` rejects is
+    rejected by ``collect`` too."""
+    recs = _edge_records()
+
+    def rows(df) -> list[str]:  # repr: NaN equals NaN
+        return [repr(r) for r in df.orderBy("id").collect()]
+
+    want = rows(spark.createDataFrame(recs, RAW_ARTIFACT))
+    wd = str(tmp_path / "wd")
+    assert rows(app.collect(spark, wd, _pages(recs), len(recs))) == want
+    assert rows(spark.read.parquet(f"{wd}/raw")) == want
+    assert rows(rest.ingest_serial(spark, _pages(recs), len(recs))) == want
+    for bad in (1950.5, "1950", True):
+        rec = [{"id": 7, "accessionyear": bad}]
+        with pytest.raises(TypeError):
+            spark.createDataFrame(rec, RAW_ARTIFACT)
+        with pytest.raises(TypeError):
+            app.collect(spark, str(tmp_path / "bad"), _pages(rec), 1)
+
+
+def test_insert_paths_write_equal_tables(spark, tmp_path, monkeypatch):
+    """Raw data within the one-partition limit is inserted with no
+    shuffle; above it (``openCostInBytes`` lowered below raw's footer
+    bytes) raw is written in several row groups and the dedups shuffle.
+    Both write the same tables, for a fresh load and for an append."""
+    import pyarrow.parquet as pq
+
+    from .test_job_counts import _plan_nodes
+
+    edge = [{**r, "id": r["id"] + 1000} for r in _edge_records()]
+    batches = [rest.fetch_serial(rest.synthetic_fetcher(300), 300) + edge,
+               _late_records(range(250, 400))]
+    planned = []
+    transform_all = A.transform_all
+
+    def kept(raw):
+        out = transform_all(raw)
+        planned.append(out["artifactmetadata"])
+        return out
+
+    monkeypatch.setattr(A, "transform_all", kept)
+
+    def tables(wd: str) -> dict:
+        return {
+            t: Counter(tuple(r) for r in app.read_table(spark, wd, t).collect())
+            for t in app.ARTIFACT_TABLES
+        }
+
+    def shuffles() -> bool:
+        nodes = _plan_nodes(planned[-1]._jdf.queryExecution().executedPlan())
+        return "ShuffleExchangeExec" in nodes
+
+    small, large = str(tmp_path / "small"), str(tmp_path / "large")
+    key = "spark.sql.files.openCostInBytes"
+    cost = spark.conf.get(key)
+    for recs in batches:
+        app.collect(spark, small, _pages(recs), len(recs))
+        counts = app.insert(spark, small)
+        assert not shuffles()
+        raw_bytes = catalog.footer_size(spark.read.parquet(f"{small}/raw"))[1]
+        spark.conf.set(key, str(raw_bytes - 1))
+        try:
+            app.collect(spark, large, _pages(recs), len(recs))
+            assert pq.read_metadata(f"{large}/raw/part-00000.parquet").num_row_groups > 1
+            assert app.insert(spark, large) == counts
+            assert shuffles()
+        finally:
+            spark.conf.set(key, cost)
+        assert tables(small) == tables(large)
+    assert counts["artifactmetadata"] == 406
 
 
 def test_store_of_a_stopped_application_is_dropped(spark, store):

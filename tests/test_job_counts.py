@@ -28,6 +28,7 @@ def _jobs(spark, group: str, fn) -> int:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed async
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
@@ -165,3 +166,41 @@ def test_warm_reference_round_plans_no_shuffle(spark, store):
         # EmptyRelation, as for q8 and q9 on this store)
         assert set(scans) <= {"InMemoryTableScanExec"}, f"{name}: {scans}"
     assert jobs <= 30, f"{jobs} jobs in a warm round"
+
+
+def test_reference_load_runs_one_job_per_table(spark, tmp_path, monkeypatch):
+    """``app.collect`` runs no Spark job. A first ``app.insert`` of a
+    300-record store runs one job of one task per table, with no
+    exchange in any table's plan, and every job in the caller's job
+    group, although the three writes run in threads of their own."""
+    from harvard_artifacts_collection_data_engineering_analytics_app_spark import app
+    from harvard_artifacts_collection_data_engineering_analytics_app_spark.etl import (
+        artifacts as A,
+    )
+    from harvard_artifacts_collection_data_engineering_analytics_app_spark.sources import (
+        rest,
+    )
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    wd = str(tmp_path / "wd")
+    fetch = rest.synthetic_fetcher(300)
+    assert _jobs(spark, "pin-collect", lambda: app.collect(spark, wd, fetch, 300)) == 0
+
+    planned = {}
+    transform_all = A.transform_all
+
+    def kept(raw):
+        planned.update(transform_all(raw))
+        return planned
+
+    monkeypatch.setattr(A, "transform_all", kept)
+    ungrouped = set(st.getJobIdsForGroup(None))
+    assert _jobs(spark, "pin-insert", lambda: app.insert(spark, wd)) == 3
+    assert not set(st.getJobIdsForGroup(None)) - ungrouped
+    for jid in st.getJobIdsForGroup("pin-insert"):
+        stages = st.getJobInfo(jid).stageIds
+        assert [st.getStageInfo(s).numTasks for s in stages] == [1], jid
+    for name, df in planned.items():
+        nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+        assert not [n for n in nodes if n.endswith("ExchangeExec")], (name, nodes)
