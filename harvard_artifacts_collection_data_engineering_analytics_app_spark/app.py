@@ -75,9 +75,9 @@ def collect(
     The fetched records, checked and converted by ``rest.arrow_records``,
     are written by pyarrow as the one file of ``raw``, under a hidden
     name that is renamed into place: no Spark job. Its row groups hold
-    about :func:`one_partition_limit` bytes at most, so Spark can split
-    a larger batch across tasks. Returns ``raw`` read back with
-    ``RAW_ARTIFACT``."""
+    at most about :func:`one_partition_limit` bytes of Arrow data, so
+    Spark can split a larger batch across tasks. Returns ``raw`` read
+    back with ``RAW_ARTIFACT``."""
     table = rest.arrow_records(rest.fetch_serial(fetch_page, target_records))
     raw = f"{workdir}/raw"
     os.makedirs(workdir, exist_ok=True)
