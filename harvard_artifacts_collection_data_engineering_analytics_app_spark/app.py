@@ -21,8 +21,8 @@ and ``insert`` takes its row counts from the parquet footers. A table
 or raw batch no larger than Spark's estimated cost of opening one file
 (``spark.sql.files.openCostInBytes``, 4 MB by default;
 :func:`one_partition_limit`) is read as one partition: ``insert``
-writes each table of a small batch in one job of one task, the three
-at once, and the templates plan no shuffle over a small table.
+writes each table of a small batch in one job of one task, and the
+templates plan no shuffle over a small table.
 
 E3 registers the three store tables as temp views once per store
 version: a repeat query reuses them, while an ``insert`` (new files), a
@@ -42,11 +42,9 @@ import os
 import re
 import shutil
 from collections import Counter
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pyarrow.parquet as pq
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from . import catalog
@@ -104,10 +102,12 @@ def insert(spark: SparkSession, workdir: str) -> dict[str, int]:
     :func:`one_partition_limit` bytes is read as one partition
     (``coalesce(1)``), so neither primary-key dedup plans a shuffle and
     each table is one job of one task; larger raw data is read in as
-    many tasks as Spark splits it into. The three writes run at once,
-    each in a thread that inherits the caller's job group and tags, and
-    each returns its table's row count read from the parquet footers,
-    without a Spark job.
+    many tasks as Spark splits it into. Each table's row count is read
+    from its parquet footers, without a Spark job.
+
+    A failed write leaves the store partly appended: the tables already
+    written keep the batch's rows, and a repeat insert of the same raw
+    data skips every id that ``artifactmetadata`` (written first) holds.
     """
     raw = spark.read.schema(RAW_ARTIFACT).parquet(f"{workdir}/raw")
     size = catalog.footer_size(raw)
@@ -118,15 +118,13 @@ def insert(spark: SparkSession, workdir: str) -> dict[str, int]:
     if size is not None and size[1] <= one_partition_limit(spark):
         raw = raw.coalesce(1)
 
-    @inheritable_thread_target(spark)
-    def write(name: str, df: DataFrame) -> int:
-        df.write.mode("append" if append else "overwrite").parquet(f"{workdir}/{name}")
-        return catalog.footer_size(read_table(spark, workdir, name))[0]
-
-    tables = A.transform_all(raw)
+    counts: dict[str, int] = {}
     try:
-        with ThreadPoolExecutor(len(tables)) as pool:
-            return dict(zip(tables, pool.map(write, tables, tables.values())))
+        # artifactmetadata first (transform_all's order): see the docstring
+        for name, df in A.transform_all(raw).items():
+            df.write.mode("append" if append else "overwrite").parquet(f"{workdir}/{name}")
+            counts[name] = catalog.footer_size(read_table(spark, workdir, name))[0]
+        return counts
     finally:
         if append:
             checkpoint._jdf.logicalPlan().rdd().unpersist(False)

@@ -43,12 +43,6 @@ def _str_default(c: str) -> str:
     return f"coalesce(`{c}`, '') AS `{c}`"
 
 
-def _finite(expr: str) -> str:
-    """T4: NaN/±inf → NULL (:226-233)."""
-    inf = "double('Infinity')"
-    return f"CASE WHEN isnan({expr}) OR abs({expr}) = {inf} THEN NULL ELSE {expr} END"
-
-
 def transform_metadata(raw: DataFrame) -> DataFrame:
     """Raw API records → artifactmetadata rows (T1 + T2)."""
     return raw.selectExpr(
@@ -73,15 +67,13 @@ def transform_media(raw: DataFrame) -> DataFrame:
     )
 
 
-def _colors(raw: DataFrame, finite: bool) -> DataFrame:
-    """T3, with T4 on ``percent`` when ``finite``: the first 5 colors in
+def transform_colors(raw: DataFrame) -> DataFrame:
+    """Raw API records → artifactcolors rows (T3): the first 5 colors in
     API array order (``slice``), one row each (``inline``); a record
     without the colors key or with an empty array gives no row, matching
     the reference's `if 'colors' in artifact` (:197)."""
-    percent = "coalesce(c.percent, 0D)"
     fields = [f"coalesce(c.{c}, '') AS {c}" for c in COLOR_STRING_COLS[:3]]
-    fields += [f"{_finite(percent) if finite else percent} AS percent",
-               "coalesce(c.css3, '') AS css3"]
+    fields += ["coalesce(c.percent, 0D) AS percent", "coalesce(c.css3, '') AS css3"]
     return raw.selectExpr(
         "id AS objectid",
         f"inline(transform(slice(colors, 1, {MAX_COLORS_PER_ARTIFACT}), "
@@ -89,16 +81,13 @@ def _colors(raw: DataFrame, finite: bool) -> DataFrame:
     )
 
 
-def transform_colors(raw: DataFrame) -> DataFrame:
-    """Raw API records → artifactcolors rows (T3)."""
-    return _colors(raw, finite=False)
-
-
 def sanitize_floats(df: DataFrame) -> DataFrame:
     """T4: NaN/±inf → NULL for every floating-point column (:226-233)."""
+    finite = ("CASE WHEN isnan({0}) OR abs({0}) = double('Infinity') "
+              "THEN NULL ELSE {0} END AS {0}")
     return df.selectExpr(*(
-        f"{_finite(f'`{f.name}`')} AS `{f.name}`"
-        if f.dataType.typeName() in ("double", "float") else f"`{f.name}`"
+        finite.format(f"`{f.name}`") if f.dataType.typeName() in ("double", "float")
+        else f"`{f.name}`"
         for f in df.schema.fields
     ))
 
@@ -120,10 +109,9 @@ def dedup_primary_key(
 
 def transform_all(raw: DataFrame) -> dict[str, DataFrame]:
     """The full E2 pipeline (harvard_artifacts_app.py:401-402). Only
-    artifactcolors has a floating-point column, so T4 runs in its
-    projection."""
+    artifactcolors has a floating-point column, so only it runs T4."""
     return {
         "artifactmetadata": dedup_primary_key(transform_metadata(raw), "id"),
         "artifactmedia": dedup_primary_key(transform_media(raw), "objectid"),
-        "artifactcolors": _colors(raw, finite=True),
+        "artifactcolors": sanitize_floats(transform_colors(raw)),
     }

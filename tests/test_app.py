@@ -299,6 +299,34 @@ def test_append_insert_frees_its_checkpoint(spark, tmp_path):
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
 
 
+def test_failed_insert_stores_no_row_twice(spark, tmp_path, monkeypatch):
+    """``artifactmetadata``, which decides the ids an insert skips, is
+    written first: when a later write of an append fails, the repeat
+    insert leaves that table's rows out and stores no primary key twice."""
+    wd = str(tmp_path / "wd")
+    _load(spark, wd, rest.synthetic_fetcher(200), 200)
+    late = _late_records(range(150, 250))
+    app.collect(spark, wd, _pages(late), len(late))
+    transform_all = A.transform_all
+
+    def failing(raw):
+        out = transform_all(raw)
+        out["artifactcolors"] = out["artifactcolors"].selectExpr(
+            "*", "assert_true(objectid < 0) AS failed")
+        return out
+
+    monkeypatch.setattr(A, "transform_all", failing)
+    with pytest.raises(Exception):
+        app.insert(spark, wd)
+    monkeypatch.setattr(A, "transform_all", transform_all)
+    app.insert(spark, wd)
+    for name, key in (("artifactmetadata", "id"), ("artifactmedia", "objectid")):
+        df = app.read_table(spark, wd, name)
+        assert df.count() == df.select(key).distinct().count() == 250, name
+    colors = app.read_table(spark, wd, "artifactcolors")
+    assert colors.where("objectid >= 200").count() == 0
+
+
 def test_replaced_temp_view_is_registered_again(spark, store):
     """A temp view of a store table's name that other code replaced is
     not the store: the next query registers the views again."""
@@ -350,7 +378,8 @@ def test_insert_paths_write_equal_tables(spark, tmp_path, monkeypatch):
     """Raw data within the one-partition limit is inserted with no
     shuffle; above it (``openCostInBytes`` lowered below raw's footer
     bytes) raw is written in several row groups and the dedups shuffle.
-    Both write the same tables, for a fresh load and for an append."""
+    Both write the same tables, for a fresh load and for an append, and
+    store a NaN or ±inf percent as NULL."""
     import pyarrow.parquet as pq
 
     from .test_job_counts import _plan_nodes
@@ -396,6 +425,9 @@ def test_insert_paths_write_equal_tables(spark, tmp_path, monkeypatch):
             spark.conf.set(key, cost)
         assert tables(small) == tables(large)
     assert counts["artifactmetadata"] == 406
+    # T4 on the stored rows: NaN and ±inf percents are NULL, a missing one 0.0
+    percents = app.read_table(spark, small, "artifactcolors").where("objectid = 1003")
+    assert Counter(r.percent for r in percents.collect()) == {None: 3, 0.0: 1}
 
 
 def test_store_of_a_stopped_application_is_dropped(spark, store):

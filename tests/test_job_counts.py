@@ -172,7 +172,7 @@ def test_reference_load_runs_one_job_per_table(spark, tmp_path, monkeypatch):
     """``app.collect`` runs no Spark job. A first ``app.insert`` of a
     300-record store runs one job of one task per table, with no
     exchange in any table's plan, and every job in the caller's job
-    group, although the three writes run in threads of their own."""
+    group."""
     from harvard_artifacts_collection_data_engineering_analytics_app_spark import app
     from harvard_artifacts_collection_data_engineering_analytics_app_spark.etl import (
         artifacts as A,
